@@ -1664,8 +1664,9 @@ def q_dedup_incremental_two_batch(spark, sf_dir):
 def q_streaming_incremental_neardup(spark, sf_dir):
     """W-EXT — streaming near-dup detection against the persisted
     MinHash index: the new batch (every 10th doc + a planted copy of
-    corpus doc 1) arrives as a file stream and each micro-batch runs
-    the EXACT batch operator via foreachBatch (the streaming idiom for
+    corpus doc 1) arrives as one micro-batch (a one-partition input)
+    that runs the EXACT batch operator via foreachBatch (the streaming
+    idiom for
     reusing a batch stage unchanged — and the fast path: the batch
     signer is whole-stage codegen'd where row-wise HOF signing
     evaluates interpreted). Output equals the batch
@@ -1683,7 +1684,8 @@ def q_streaming_incremental_neardup(spark, sf_dir):
         corpus, "text", "doc_id", num_hashes=64, shingle_n=3, shingle_unit="word"
     )
     return streaming_incremental_neardup(
-        spark, new, index, threshold=0.35, bands=16, shingle_n=3, shingle_unit="word"
+        spark, new.repartition(1), index,
+        threshold=0.35, bands=16, shingle_n=3, shingle_unit="word",
     )
 
 
@@ -1691,8 +1693,8 @@ def q_streaming_incremental_neardup(spark, sf_dir):
 def q_streaming_decontam(spark, sf_dir):
     """W-EXT — streaming benchmark decontamination against the
     persisted bench-gram index: the ingest batch (the %20==1 slice + a
-    planted verbatim benchmark doc) arrives as a file stream; each
-    micro-batch runs the batch incremental_contamination_pairs
+    planted verbatim benchmark doc) arrives as one micro-batch (a
+    one-partition input) that runs the batch incremental_contamination_pairs
     operator unchanged via foreachBatch, probing the index built once
     from the %20==0 benchmark slice. The decontamination twin of
     streaming_incremental_neardup — with it, the full curation
@@ -1709,7 +1711,7 @@ def q_streaming_decontam(spark, sf_dir):
         )
     )
     index = bench_gram_index(bench, "text", "doc_id", n=3)
-    return streaming_decontam(spark, new, index, n=3, min_hits=3)
+    return streaming_decontam(spark, new.repartition(1), index, n=3, min_hits=3)
 
 
 def _streaming_curation_survivors(spark, sf_dir):
@@ -1749,7 +1751,7 @@ def _streaming_curation_survivors(spark, sf_dir):
 @query("streaming_curation")  # full screen, streaming form — rows-only
 def q_streaming_curation(spark, sf_dir):
     """W-EXT — the full curation SCREEN in streaming form: each
-    micro-batch (one staged file per trigger) runs exact-fingerprint
+    micro-batch (one per input partition, two here) runs exact-fingerprint
     dedup, near-dup vs the persisted MinHash index, and
     decontamination vs the persisted bench-gram index — the same
     operators incremental_curation composes in batch, via foreachBatch
@@ -3618,9 +3620,10 @@ def q_anchor_bm25_topk(spark, sf_dir):
 def q_streaming_anchor_index(spark, sf_dir):
     """W-EXT — anchor-index maintenance in STREAMING form
     (streaming/jobs.py:streaming_anchor_index): crawled pages arrive
-    as a file stream in three discovery rounds; each micro-batch
-    extracts outlinks + visible anchor text, aggregates, and folds
-    into the accumulated standing index via foreachBatch. Because a
+    as one micro-batch (a one-partition input; multi-batch folds are
+    pytest-pinned) that extracts outlinks + visible anchor text,
+    aggregates, and folds into the standing index via foreachBatch.
+    Because a
     page's links live in exactly one micro-batch, tf and n_docs are
     disjoint-partition sums and the accumulated index EQUALS the
     batch rebuild over all pages — so this streaming query
@@ -3630,9 +3633,7 @@ def q_streaming_anchor_index(spark, sf_dir):
     from .streaming.jobs import streaming_anchor_index
 
     pages = _linked_pages(spark, sf_dir)
-    return streaming_anchor_index(
-        spark, pages.repartitionByRange(3, "doc_id"), "html", "doc_id"
-    )
+    return streaming_anchor_index(spark, pages.repartition(1), "html", "doc_id")
 
 
 # robots.txt rules fixture: one Python literal builder renders BOTH
@@ -5955,15 +5956,15 @@ def q_linkage_incremental(spark, sf_dir):
 @query("streaming_linkage")  # stream probe vs persisted index — rows-only
 def q_streaming_linkage(spark, sf_dir):
     """W-EXT — record linkage in STREAMING form (streaming/jobs.py:
-    streaming_linkage_probe): new-record batches arrive as a file
-    stream and each micro-batch probes the PERSISTED FastSS variant
+    streaming_linkage_probe): the new records arrive as one
+    micro-batch (a one-partition input) that probes the PERSISTED FastSS variant
     index via foreachBatch (the same batch probe linkage_incremental
     runs; per-pair verification is independent, so per-batch results
     union to the all-at-once answer — pytest-pinned). Verified pairs
     then score through the shared Fellegi-Sunter projection bounded
     to the review bands, downstream of the stream where a projection
     belongs. Same fixture split as linkage_incremental (corpus
-    custkey % 10 != 7, three arrival rounds of the rest), so the two
+    custkey % 10 != 7, the rest arriving), so the two
     queries' results coincide by construction."""
     from .streaming.jobs import streaming_linkage_probe
 
@@ -5974,7 +5975,7 @@ def q_streaming_linkage(spark, sf_dir):
     index = scratch_roundtrip(index, sf_dir, "fastss_index", memo="corpus_fastss")
     verified = streaming_linkage_probe(
         spark,
-        batch.repartitionByRange(3, "c_custkey"),
+        batch.repartition(1),
         corpus,
         index,
         "c_name",
@@ -6717,9 +6718,10 @@ def q_kmv_distinct(spark, sf_dir):
 @query("streaming_bottomk", oracle=_BOTTOMK_ORACLE)
 def q_streaming_bottomk(spark, sf_dir):
     """W-EXT — the bottom-k sample in STREAMING form
-    (streaming/jobs.py:streaming_bottomk): documents arrive as a file
-    stream in three micro-batches and each batch's bottom-k folds
-    into the standing sample — the KMV merge property makes the fold
+    (streaming/jobs.py:streaming_bottomk): documents arrive as one
+    micro-batch (a one-partition input; multi-batch folds are
+    pytest-pinned) whose bottom-k folds into the standing sample —
+    the KMV merge property makes the fold
     EXACT, so this streaming query hash-matches the same batch
     ORDER BY/LIMIT oracle (the bounded-state streaming uniform sample;
     k rows of state forever, where a classic reservoir's per-row RNG
@@ -6727,9 +6729,7 @@ def q_streaming_bottomk(spark, sf_dir):
     from .streaming.jobs import streaming_bottomk
 
     d = t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    return streaming_bottomk(
-        spark, d.repartitionByRange(3, "doc_id"), "doc_id", k=100
-    )
+    return streaming_bottomk(spark, d.repartition(1), "doc_id", k=100)
 
 
 @query("weighted_sample")  # xxhash64 scoring — no DuckDB twin, rows-only
@@ -9668,7 +9668,9 @@ def q_cms_term_estimates(spark, sf_dir):
 @query("streaming_cms_terms")  # streaming fold — rows-only by design
 def q_streaming_cms_terms(spark, sf_dir):
     """EXT — the STREAMING count-min fold (streaming/jobs.py:
-    streaming_cms): per-micro-batch sketches accumulate by counter
+    streaming_cms; one micro-batch here, a one-partition input;
+    multi-batch folds are pytest-pinned): per-micro-batch sketches
+    accumulate by counter
     addition into a constant-size state (≤ depth·width rows forever —
     the property exact streaming counters lack), and because
     sketch-of-union = sum-of-sketches the accumulated table is
@@ -9682,7 +9684,7 @@ def q_streaming_cms_terms(spark, sf_dir):
         .select(F.explode(F.split(F.col("text"), " ")).alias("w"))
         .where(F.col("w") != "")
     )
-    return streaming_cms(spark, words, "w")
+    return streaming_cms(spark, words.repartition(1), "w")
 
 
 # ---------------------------------------------------------------------------
@@ -11139,9 +11141,8 @@ def q_streaming_ewma(spark, sf_dir):
     e_t = α·x_t + (1−α)·e_{t−1} carried across micro-batches with
     one scalar of state per key — the sequential statistic the batch
     ewma_anomaly deliberately truncates to stay SQL-closed-form. Time-
-    range-sliced micro-batches (pinned mod-time order), per-key
-    applyInPandas fold seeded from the fenced state table, append
-    output + overwrite state per batch (streaming_cms discipline).
+    range-sliced micro-batches (four, in event-time order), per-key
+    applyInPandas fold seeded from the standing state table.
     Rows-only: the recursion is order-sequential by definition;
     slice-boundary invariance and the pandas-reference parity are
     pytest-pinned."""
@@ -12130,9 +12131,10 @@ WHERE a.p_retailprice IS NOT NULL AND a.p_size IS NOT NULL
 @query("streaming_skyline", oracle=_SKYLINE_PARTS_SQL)
 def q_streaming_skyline(spark, sf_dir):
     """W-EXT — the Pareto-optimal set in STREAMING form
-    (streaming/jobs.py:streaming_skyline): parts arrive as a file
-    stream in three micro-batches and each batch's local skyline
-    folds into the standing skyline — the same merge identity the
+    (streaming/jobs.py:streaming_skyline): parts arrive as one
+    micro-batch (a one-partition input; multi-batch folds are
+    pytest-pinned) whose local skyline folds into the standing
+    skyline — the same merge identity the
     batch operator's partition phase rests on makes the fold EXACT
     for inserts, so this streaming query hash-matches the identical
     batch NOT-EXISTS oracle skyline_parts uses. State is the answer
@@ -12146,7 +12148,7 @@ def q_streaming_skyline(spark, sf_dir):
     )
     return streaming_skyline(
         spark,
-        p.repartitionByRange(3, "p_partkey"),
+        p.repartition(1),
         minimize=["p_retailprice"],
         maximize=["p_size"],
     ).select("p_partkey", "p_retailprice", "p_size")
@@ -12549,8 +12551,9 @@ SELECT node, CAST(MIN(r) AS BIGINT) AS component FROM reach GROUP BY node
 def q_streaming_connected_components(spark, sf_dir):
     """W-EXT — connected components in STREAMING form (streaming/
     jobs.py:streaming_connected_components): the co-supply edges
-    arrive in three micro-batches and each batch folds into the
-    standing (node, component) labeling — exact by the contraction
+    arrive as one micro-batch (a one-partition input; multi-batch
+    folds are pytest-pinned) that folds into the standing (node,
+    component) labeling — exact by the contraction
     identity CC(E₁ ∪ E₂) = CC(star(E₁) ∪ E₂): a component's star
     edges are connectivity-equivalent to its originals, so each fold
     re-runs the batch star-contraction operator on |V| + |batch|
@@ -12559,9 +12562,7 @@ def q_streaming_connected_components(spark, sf_dir):
     from .streaming.jobs import streaming_connected_components
 
     e = _supplier_domestic_edges(spark, sf_dir)
-    return streaming_connected_components(
-        spark, e.repartitionByRange(3, "src")
-    )
+    return streaming_connected_components(spark, e.repartition(1))
 
 
 @query(

@@ -1503,8 +1503,6 @@ def max_drawdown(
     ``max(P − C)/(n·unit_scale)`` is ONE IEEE division of exact
     integers. Scale shape: one groupBy to DAY grain, ordered windows
     over the calendar-bounded day series, a 1-row max attach."""
-    from pyspark.sql import Window
-
     v = F.col(value_col).cast("decimal(30,6)")
     daily = (
         df.select(
@@ -1519,6 +1517,14 @@ def max_drawdown(
             .alias("_x")
         )
     )
+    return _drawdown_readout(daily, unit_scale)
+
+
+def _drawdown_readout(daily: DataFrame, unit_scale: int) -> DataFrame:
+    """:func:`max_drawdown` from the quantized day table ``(day, _x)``
+    onward (shared with the streaming fold's final readout)."""
+    from pyspark.sql import Window
+
     dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     tot = daily.agg(
         F.count(F.lit(1)).cast("long").alias("_n"),
@@ -1590,6 +1596,12 @@ def ols_trend(
             .alias("_y")
         )
     )
+    return _ols_readout(daily, unit_scale)
+
+
+def _ols_readout(daily: DataFrame, unit_scale: int) -> DataFrame:
+    """:func:`ols_trend` from the quantized day table ``(day, _y)``
+    onward (shared with the streaming fold's final readout)."""
     first = daily.agg(F.min("day").alias("_d0"))
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     staged = daily.crossJoin(F.broadcast(first)).select(
@@ -1929,6 +1941,13 @@ def mase_seasonal_naive(
     if season < 2:
         raise ValueError(f"mase_seasonal_naive: season must be >= 2, got {season}")
     daily = _daily_units(df, ts_col, value_col, unit_scale)
+    return _mase_readout(daily, season, unit_scale)
+
+
+def _mase_readout(daily: DataFrame, season: int, unit_scale: int) -> DataFrame:
+    """:func:`mase_seasonal_naive` from the quantized day table
+    ``(day, _x)`` onward (shared with the streaming fold's final
+    readout)."""
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
 
     def _mae(shift: int, tag: str) -> DataFrame:

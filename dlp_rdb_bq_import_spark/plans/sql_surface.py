@@ -13,11 +13,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TESTDATA_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
 
 def register_dir(spark: SparkSession, directory: str, tables: tuple[str, ...] | None = None) -> list[str]:
     """Register every ``<table>.parquet`` in a directory as a temp view."""
@@ -42,12 +37,3 @@ def sql(spark: SparkSession, query: str, data_dir: str | None = None) -> DataFra
     if data_dir:
         register_dir(spark, data_dir)
     return spark.sql(query)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load the fixture tables of a scale-factor directory as DataFrames."""
-    return {
-        name: spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        for name in TESTDATA_TABLES
-        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet"))
-    }

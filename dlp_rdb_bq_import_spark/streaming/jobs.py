@@ -7,13 +7,41 @@ batching idiom, not event-time semantics). Parity: ``chunked_ingest``
 reproduces the idiom with ``foreachBatch``. Extension (SURVEY.md §2.10):
 real event-time processing over the ``events`` fixture — watermark +
 tumbling window, the thing the reference *cannot* do.
+
+The sixteen ``foreachBatch`` folds below (``streaming_incremental_neardup``
+through ``streaming_mase``) run a batch operator per micro-batch and
+carry their state between batches as parquet. They share one driver,
+:func:`_run_fold`, and one contract:
+
+- Slicing. The input is staged as one parquet file per slice, file
+  mtimes pinned in slice order, and replayed with
+  ``maxFilesPerTrigger=1``: each slice is one micro-batch, in slice
+  order. For order-free folds a slice is an input partition (pass a
+  one-partition input for a single batch); time-ordered folds slice by
+  event-time range (:func:`_range_slices`).
+- Epoch-keyed generations. Every state generation and every per-batch
+  output is written to ``<root>/<name>/<epoch_id>`` in overwrite mode,
+  and a batch reads only generations of EARLIER epochs
+  (:class:`_Epoch`). A write never overwrites what its own plan reads,
+  so each is one lazy job; every read supplies its schema.
+- At-least-once safety. Spark replays a batch that failed after
+  writing with the same epoch id. The replay reads the same earlier
+  generations and overwrites its own, so it is folded once.
+- Scratch lifetime. The root (staged slices, generations, the stream's
+  checkpoint) is a per-call :func:`_stream_scratch` dir, removed after
+  the result is ``localCheckpoint``-ed; superseded state generations
+  are dropped as the fold advances, so at most two are on disk. A
+  caller-owned root is kept, so a failed run can restart on its
+  checkpoint.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import sys
 import tempfile
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,8 +51,8 @@ from ..operators import local_rows_df
 
 
 def _stream_scratch(prefix: str) -> str:
-    """Micro-batch scratch root (staged slices, versioned state, output
-    appends, the stream's checkpoint): the fastest writable local dir.
+    """Micro-batch scratch root (staged slices, state and output
+    generations, the stream's checkpoint): the fastest writable local dir.
 
     Defaults to tmpfs (/dev/shm) when present: every micro-batch pays
     offset/commit-log and state-parquet writes here, and on a
@@ -65,118 +93,169 @@ def _event_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     return raw
 
 
-class _VersionedState:
-    """Versioned state-directory handle for ``foreachBatch`` folds.
-
-    The first-cut folds wrote each batch's new state OVER the directory
-    they had just read it from, which forced an eager
-    ``localCheckpoint`` of both the read and the merged state (two
-    extra Spark jobs per micro-batch) purely to defend against
-    overwrite-while-reading. Writing every state generation to a FRESH
-    ``state_v{n}`` directory removes the hazard outright: the write's
-    input path is never its output path, so the merge plan executes
-    lazily inside the single write job. Per-key/per-day state stays
-    parquet-persisted between batches (the 100 TB posture is
-    unchanged — state never lives in driver memory); only the
-    job-per-batch count drops. Superseded versions are deleted after
-    the next one lands, so disk holds at most two generations."""
-
-    def __init__(self, root: str, name: str = "state") -> None:
-        self._root, self._name, self._v = root, name, 0
-
-    @property
-    def current(self) -> str:
-        return os.path.join(self._root, f"{self._name}_v{self._v}")
-
-    @property
-    def has_state(self) -> bool:
-        return self._v > 0
-
-    def read(self, spark: SparkSession, schema: str) -> DataFrame:
-        """Current state, or an empty frame of ``schema`` before the
-        first write. The schema is SUPPLIED to the reader: state is
-        read once per micro-batch, and letting the reader re-infer it
-        from parquet footers paid a driver-side metadata pass per
-        batch for a schema the fold already declares (r15, guide §5)."""
-        if self._v == 0:
-            return local_rows_df(spark, [], schema)
-        return spark.read.schema(schema).parquet(self.current)
-
-    def write(self, df: DataFrame) -> None:
-        """Materialize ``df`` as the next state generation (ONE job),
-        then drop the generation before last."""
-        nxt = os.path.join(self._root, f"{self._name}_v{self._v + 1}")
-        df.write.mode("overwrite").parquet(nxt)
-        stale = os.path.join(self._root, f"{self._name}_v{self._v - 1}")
-        self._v += 1
-        if os.path.isdir(stale):
-            shutil.rmtree(stale, ignore_errors=True)
+def _slice_files(tmp: str) -> list[tuple[int, str]]:
+    """``(slice, path)`` of every parquet file a staging write left under
+    ``tmp``: the slice is the ``_slice=`` directory of a partitioned
+    write, else the writing task's partition index (``part-NNNNN-…``)."""
+    found = []
+    for d, _, names in os.walk(tmp):
+        part = os.path.basename(d)
+        for n in names:
+            if n.endswith(".parquet"):
+                if part.startswith("_slice="):
+                    i = part[len("_slice="):]
+                else:
+                    i = n.split("-")[1]
+                found.append((int(i), os.path.join(d, n)))
+    return sorted(found)
 
 
-def _stage_ordered_slices(
-    src: DataFrame, stage: str, slice_id, n_slices: int
-):
-    """Stage ``src`` into ``n_slices`` ordered parquet slice files in
-    ONE pass (the first cut filtered + wrote per slice — n_slices full
-    scans): ``slice_id`` (int Column in [0, n_slices)) routes each row,
-    a hash repartition on it lands every slice in exactly one task, and
-    ``partitionBy`` writes one file per slice value. Files then move up
-    to the flat ``stage`` dir with STRICTLY increasing mod-times per
-    slice — the same mtime pinning as before, so the file source +
-    ``maxFilesPerTrigger=1`` replays the slices in event-time order.
-    Row order WITHIN a slice changes versus the filtered write (hash
-    shuffle), which every fold here is insensitive to by contract —
-    each sorts per batch or folds order-free (the any-slicing ≡ batch
-    guarantee)."""
-    import time as _time
-
-    tmp = stage + "_tmp"
-    (
-        src.withColumn("_slice", slice_id.cast("int"))
-        .repartition(n_slices, "_slice")
-        .write.partitionBy("_slice")
-        .mode("overwrite")
-        .parquet(tmp)
-    )
-    os.makedirs(stage, exist_ok=True)
-    base_mtime = int(_time.time()) - 3600
-    for i in range(n_slices):
-        part_dir = os.path.join(tmp, f"_slice={i}")
-        if not os.path.isdir(part_dir):
-            continue
-        for j, name in enumerate(sorted(os.listdir(part_dir))):
-            if not name.endswith(".parquet"):
-                continue
-            dst = os.path.join(stage, f"slice{i:05d}_{j}.parquet")
-            os.rename(os.path.join(part_dir, name), dst)
-            os.utime(dst, (base_mtime + i, base_mtime + i))
+def _stage_slices(
+    src: DataFrame, stage: str, slice_by=None, n_slices: int = 1
+) -> None:
+    """Stage ``src`` under ``stage`` as one parquet file per slice, in
+    ONE pass, with mtimes strictly increasing in slice order.
+    ``slice_by`` (int Column in [0, n_slices)) routes each row: a hash
+    repartition on it lands every slice in one task, and ``partitionBy``
+    writes one file per slice. Without it each input partition's file
+    is its own slice. Row order within a slice is not kept; every fold
+    sorts per batch or folds order-free. The files are assembled beside
+    ``stage`` and renamed into place, so an existing ``stage`` is
+    complete."""
+    tmp, ready = stage + "_tmp", stage + "_ready"
+    if slice_by is None:
+        src.write.mode("overwrite").parquet(tmp)
+    else:
+        (
+            src.withColumn("_slice", slice_by.cast("int"))
+            .repartition(n_slices, "_slice")
+            .write.partitionBy("_slice")
+            .mode("overwrite")
+            .parquet(tmp)
+        )
+    files = _slice_files(tmp)
+    if not files:
+        # an empty source stages one empty slice: the fold still runs once
+        src.limit(0).coalesce(1).write.mode("overwrite").parquet(tmp)
+        files = _slice_files(tmp)
+    shutil.rmtree(ready, ignore_errors=True)
+    os.makedirs(ready)
+    base = int(time.time()) - 3600
+    for j, (i, path) in enumerate(files):
+        dst = os.path.join(ready, f"slice{i:05d}_{j}.parquet")
+        os.rename(path, dst)
+        os.utime(dst, (base + i, base + i))
     shutil.rmtree(tmp, ignore_errors=True)
-    if not any(n.endswith(".parquet") for n in os.listdir(stage)):
-        # empty source: the first cut still wrote (empty) slice files,
-        # and downstream reads the dir for its schema — keep one
-        src.limit(0).coalesce(1).write.mode("append").parquet(stage)
-        for name in os.listdir(stage):
-            os.utime(os.path.join(stage, name), (base_mtime, base_mtime))
-    # The staged files carry exactly src's columns (the _slice routing
-    # column lands in directory names and is stripped by the moves), so
-    # the caller can hand this schema to readStream instead of paying a
-    # footer-inference read of the freshly staged directory (r15). All-
-    # nullable to match what parquet inference would have reported.
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in src.schema.fields]
-    )
+    os.rename(ready, stage)
 
 
-def _range_slice_id(col, cuts: list):
-    """Slice index for percentile-cut range slicing: the number of
-    cutpoints strictly below the value — EXACTLY the membership the
-    first-cut per-slice filters (``lo < x <= hi``) assigned."""
+def _range_slices(src: DataFrame, expr: str, n_slices: int):
+    """Slice id for the time-ordered folds: exact percentiles of the SQL
+    expression ``expr`` cut it into ``n_slices`` contiguous, ordered
+    ranges, and a row's slice is the number of cutpoints strictly below
+    its value (``lo < x <= hi``). ONE array-percentile aggregate — N
+    separate percentile() exprs would each buffer the full column."""
+    if n_slices < 2:
+        return F.lit(0)
+    fracs = ", ".join(repr(i / n_slices) for i in range(1, n_slices))
+    cuts = src.select(F.expr(f"percentile({expr}, array({fracs}))")).first()[0]
     sid = F.lit(0)
-    for c in cuts:
-        sid = sid + F.when(col > F.lit(c), F.lit(1)).otherwise(F.lit(0))
+    for c in cuts or []:
+        sid = sid + F.when(F.expr(expr) > F.lit(c), F.lit(1)).otherwise(F.lit(0))
     return sid
+
+
+class _Epoch:
+    """One micro-batch's view of the fold's generations under ``root``:
+    reads see only generations of earlier epochs; writes go to this
+    epoch's own generation, ``<root>/<name>/<epoch>``, in overwrite
+    mode. The final read after the stream drains is the view of an
+    epoch later than every batch."""
+
+    def __init__(self, spark: SparkSession, root: str, epoch: int) -> None:
+        self.spark, self.root, self.epoch = spark, root, epoch
+
+    def _older(self, name: str) -> list[str]:
+        d = os.path.join(self.root, name)
+        if not os.path.isdir(d):
+            return []
+        gens = sorted(int(g) for g in os.listdir(d) if g.isdigit())
+        return [os.path.join(d, str(g)) for g in gens if g < self.epoch]
+
+    def _read(self, paths: list[str], schema) -> DataFrame:
+        if not paths:
+            return local_rows_df(self.spark, [], schema)
+        return self.spark.read.schema(schema).parquet(*paths)
+
+    def previous(self, name: str, schema) -> DataFrame | None:
+        """The latest earlier generation of state ``name``, or None."""
+        older = self._older(name)
+        return self._read(older[-1:], schema) if older else None
+
+    def state(self, name: str, schema) -> DataFrame:
+        """:meth:`previous`, or an empty frame of ``schema``."""
+        return self._read(self._older(name)[-1:], schema)
+
+    def history(self, name: str, schema) -> DataFrame:
+        """Every earlier generation of output ``name``, unioned."""
+        return self._read(self._older(name), schema)
+
+    def path(self, name: str) -> str:
+        return os.path.join(self.root, name, str(self.epoch))
+
+    def write(self, name: str, df: DataFrame) -> None:
+        """Write ``df`` as this epoch's generation of output ``name``."""
+        df.write.mode("overwrite").parquet(self.path(name))
+
+    def advance(self, name: str, df: DataFrame) -> None:
+        """Write ``df`` as this epoch's generation of state ``name``, then
+        drop the generations before the one this epoch read (a replay of
+        this epoch reads that one again)."""
+        older = self._older(name)
+        self.write(name, df)
+        for p in older[:-1]:
+            shutil.rmtree(p, ignore_errors=True)
+
+
+def _run_fold(
+    spark: SparkSession,
+    name: str,
+    src: DataFrame,
+    fold,
+    result,
+    slice_by=None,
+    n_slices: int = 1,
+    root: str | None = None,
+) -> DataFrame:
+    """Run ``fold(batch_df, epoch)`` (``epoch`` an :class:`_Epoch`) over
+    ``src``, one micro-batch per staged slice, and return
+    ``result(final_view)`` checkpointed — the fold contract in the
+    module docstring. ``root`` defaults to a fresh scratch dir removed
+    on return; a caller-owned root is kept, and a second run on it
+    resumes from its checkpoint (staging is skipped once done)."""
+    owned = root is None
+    if owned:
+        root = _stream_scratch(f"{name}_stream_")
+    try:
+        stage = os.path.join(root, "staged")
+        if not os.path.isdir(stage):
+            _stage_slices(src, stage, slice_by, n_slices)
+        q = (
+            spark.readStream.schema(src.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage)
+            .writeStream.option("checkpointLocation", os.path.join(root, "_ckpt"))
+            .foreachBatch(lambda df, epoch_id: fold(df, _Epoch(spark, root, epoch_id)))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return result(_Epoch(spark, root, sys.maxsize)).localCheckpoint(eager=True)
+    finally:
+        if owned:
+            shutil.rmtree(root, ignore_errors=True)
 
 
 def _run_to_memory(stream: DataFrame, output_mode: str) -> DataFrame:
@@ -436,13 +515,12 @@ def stream_stream_left_join(
         [(-1, far, -1, left_type, 0.0), (-2, far, -1, right_type, 0.0)],
         "event_id long, ts timestamp, user_id long, event_type string, value double",
     )
-    batch.select("event_id", "ts", "user_id", "event_type", "value").unionByName(
-        sentinels
-    ).write.parquet(stage)
+    staged = batch.select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    ).unionByName(sentinels)
+    staged.write.parquet(stage)
 
-    raw = spark.readStream.schema(
-        spark.read.parquet(stage).schema
-    ).parquet(stage)
+    raw = spark.readStream.schema(staged.schema).parquet(stage)
     left = (
         raw.where(F.col("event_type") == left_type)
         .select(
@@ -644,268 +722,6 @@ def stateful_sessionize(
         shutil.rmtree(os.path.dirname(stage), ignore_errors=True)
 
 
-def streaming_incremental_neardup(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    corpus_signatures: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.35,
-    bands: int = 16,
-    shingle_n: int = 3,
-    shingle_unit: str = "word",
-) -> DataFrame:
-    """Streaming near-dup detection against a PERSISTED MinHash index —
-    the streaming spelling of ``dedup.incremental_minhash_pairs``: new
-    documents arrive as a file stream, and each micro-batch runs the
-    BATCH operator unchanged via ``foreachBatch`` — signed by its
-    explode+groupBy MinHash stage, banded, equi-joined against the
-    static band index, pair-key deduped, and filtered to component-
-    agreement >= ``threshold``. (A stateless in-row signing via
-    ``dedup.row_minhash_signatures`` was the rejected alternative —
-    see below for why.)
-
-    Output: (new_id, corpus_id, est_jaccard), equal to the batch path
-    on the same data by CONSTRUCTION: each micro-batch runs the exact
-    batch operator via ``foreachBatch`` — the Structured Streaming
-    idiom for reusing a batch pipeline stage unchanged (the same
-    pattern as ``streaming_upsert``), and the fast path here, since
-    the batch operator's explode+groupBy signing is whole-stage
-    codegen'd while a row-wise signing via nested higher-order
-    functions evaluates interpreted (~8x slower at 10x scale when this
-    job was first written that way). Documents don't span micro-
-    batches (file-stream batches are whole files), so per-batch
-    results union to the batch answer with no cross-batch state; the
-    static index is materialized once up front rather than re-signed
-    per micro-batch."""
-    from ..operators import dedup as dedup_ops
-
-    k = len([c for c in corpus_signatures.columns if c.startswith("mh_")])
-    if k == 0 or k % bands != 0:
-        raise ValueError(
-            f"corpus_signatures must carry mh_* columns with k a multiple of "
-            f"bands; got k={k}, bands={bands}"
-        )
-    root = _stream_scratch("neardup_stream_")
-    stage = os.path.join(root, "staged")
-    out_dir = os.path.join(root, "flagged")
-    src = new_docs.select(F.col(id_col).cast("long").alias(id_col), text_col)
-    src.write.parquet(stage)
-    corpus_signatures = corpus_signatures.localCheckpoint(eager=True)
-
-    def flag_batch(batch_df, _epoch_id):
-        dedup_ops.incremental_minhash_pairs(
-            batch_df, corpus_signatures, text_col, id_col,
-            threshold=threshold, bands=bands,
-            shingle_n=shingle_n, shingle_unit=shingle_unit,
-        ).write.mode("append").parquet(out_dir)
-
-    try:
-        raw = spark.readStream.schema(src.schema).parquet(stage)
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(flag_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def streaming_decontam(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    bench_index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    min_hits: int = 3,
-    unit: str = "word",
-) -> DataFrame:
-    """Streaming benchmark decontamination against a PERSISTED
-    bench-gram index — the decontamination twin of
-    :func:`streaming_incremental_neardup`, same design: new documents
-    arrive as a file stream and each micro-batch runs the BATCH
-    operator (``decontam.incremental_contamination_pairs``) unchanged
-    via ``foreachBatch``. The benchmark corpus is grammed once at
-    freeze time into ``bench_index`` (``decontam.bench_gram_index``)
-    and checkpointed here, never re-built per micro-batch; documents
-    don't span micro-batches (file-stream batches are whole files) and
-    the per-pair overlap count is within-document, so per-batch
-    results union to the batch answer with no cross-batch state
-    (pytest-pinned ≡ the batch operator on the same data).
-
-    Returns (train_id, bench_id, overlap_ngrams) for flagged pairs
-    across all micro-batches.
-    """
-    from ..operators import decontam as decontam_ops
-
-    if "_h" not in bench_index.columns:
-        raise ValueError(
-            f"bench_index must be a bench_gram_index result; got "
-            f"{bench_index.columns}"
-        )
-    root = _stream_scratch("decontam_stream_")
-    stage = os.path.join(root, "staged")
-    out_dir = os.path.join(root, "flagged")
-    src = new_docs.select(F.col(id_col).cast("long").alias(id_col), text_col)
-    src.write.parquet(stage)
-    bench_index = bench_index.localCheckpoint(eager=True)
-    # Bloom sizing paid ONCE for the static index, not per micro-batch
-    index_rows = bench_index.count()
-
-    def flag_batch(batch_df, _epoch_id):
-        decontam_ops.incremental_contamination_pairs(
-            batch_df, bench_index, text_col, id_col, n=n, min_hits=min_hits,
-            unit=unit, index_size_hint=index_rows,
-        ).write.mode("append").parquet(out_dir)
-
-    try:
-        raw = spark.readStream.schema(src.schema).parquet(stage)
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(flag_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def streaming_curation(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    corpus_fingerprints: DataFrame,
-    corpus_signatures: DataFrame,
-    bench_index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.35,
-    bands: int = 16,
-    shingle_n: int = 3,
-    shingle_unit: str = "word",
-    min_hits: int = 3,
-    gram_n: int = 3,
-    gram_unit: str = "word",
-) -> DataFrame:
-    """The FULL curation screen in streaming form — exact-fingerprint
-    dedup → near-dup vs the persisted MinHash index → decontamination
-    vs the persisted bench-gram index — each micro-batch running the
-    same batch operators ``incremental_curation`` composes, unchanged,
-    via ``foreachBatch``. All three standing artifacts (corpus
-    fingerprint set, signature index, bench-gram index) are
-    checkpointed ONCE up front; micro-batches pay only their own side.
-    ``(gram_n, gram_unit)`` parameterize the decontamination PROBE and
-    must match how ``bench_index`` was built (``bench_gram_index``'s
-    contract) — an index built at a different gram size would produce
-    zero hash hits and silently pass contamination; ``(shingle_n,
-    shingle_unit)`` independently parameterize the MinHash near-dup
-    probe against ``corpus_signatures``.
-    Packing is deliberately NOT in the stream: sequence ids are a
-    corpus-level layout decision, assigned when the accumulated
-    survivors are packed in batch.
-
-    Cross-batch semantics: near-dup and decontamination screen against
-    STATIC artifacts (exactly the batch pipeline's contract — the
-    batch operator doesn't near-dup a batch against itself either),
-    but exact-fingerprint dedup ACCUMULATES: each micro-batch's
-    admitted fingerprints append to a running set the next batch
-    anti-joins, so a duplicate arriving in a later micro-batch is
-    dropped — first arrival wins, the streaming analogue of the batch
-    path's lowest-id-wins (identical when the stream delivers in id
-    order, which file-stream batches of one file trivially satisfy;
-    pytest-pinned ≡ batch on the same data, duplicate-across-batches
-    case covered by the two-batch test). Returns the surviving rows of
-    ``new_docs``.
-    """
-    from ..operators import decontam as decontam_ops
-    from ..operators import dedup as dedup_ops
-
-    for need, d, cols in (
-        ("corpus_fingerprints", corpus_fingerprints, {"fingerprint"}),
-        ("bench_index", bench_index, {"bench_id", "_h"}),
-    ):
-        if not cols <= set(d.columns):
-            raise ValueError(f"{need} must carry {sorted(cols)}; got {d.columns}")
-    root = _stream_scratch("curation_stream_")
-    stage = os.path.join(root, "staged")
-    out_dir = os.path.join(root, "survivors")
-    fp_dir = os.path.join(root, "admitted_fingerprints")
-    src = new_docs.select(
-        F.col(id_col).cast("long").alias(id_col),
-        *[c for c in new_docs.columns if c != id_col],
-    )
-    src.write.parquet(stage)
-    seen = corpus_fingerprints.select("fingerprint").distinct().localCheckpoint(
-        eager=True
-    )
-    corpus_signatures = corpus_signatures.localCheckpoint(eager=True)
-    bench_index = bench_index.localCheckpoint(eager=True)
-    # Bloom sizing paid ONCE for the static index, not per micro-batch
-    index_rows = bench_index.count()
-
-    def curate_batch(batch_df, _epoch_id):
-        fresh = dedup_ops.content_fingerprint(batch_df, [text_col])
-        keep = fresh.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
-        blocked = seen
-        if os.path.isdir(fp_dir):  # earlier micro-batches' admissions
-            blocked = blocked.unionByName(spark.read.parquet(fp_dir))
-        # checkpoint the exact-stage output once: it feeds the
-        # fingerprint append AND the three later consumers
-        admitted = (
-            fresh.join(keep, ["fingerprint", id_col], "left_semi")
-            .join(blocked, "fingerprint", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        # record at the EXACT stage, not post-screen: a doc dropped by
-        # a later stage must still block future identical arrivals
-        # (matching the batch path, where within-batch dedup runs
-        # before any screening)
-        admitted.select("fingerprint").write.mode("append").parquet(fp_dir)
-        survivors = admitted.drop("fingerprint")
-        near = (
-            dedup_ops.incremental_minhash_pairs(
-                survivors, corpus_signatures, text_col, id_col,
-                threshold=threshold, bands=bands,
-                shingle_n=shingle_n, shingle_unit=shingle_unit,
-            )
-            .select(F.col("new_id").alias(id_col))
-            .distinct()
-        )
-        survivors = survivors.join(near, id_col, "left_anti")
-        survivors = decontam_ops.decontaminate_incremental(
-            survivors, bench_index, text_col, id_col,
-            n=gram_n, unit=gram_unit, min_hits=min_hits,
-            index_size_hint=index_rows,
-        )
-        survivors.write.mode("append").parquet(out_dir)
-
-    try:
-        # one file per trigger: the staged parquet's partition files
-        # become real successive micro-batches, so the cross-batch
-        # fingerprint accumulation is genuinely exercised, not a
-        # single-batch degenerate case
-        raw = (
-            spark.readStream.schema(src.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(curate_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def streaming_dedup_events(
     spark: SparkSession,
     source_dir: str,
@@ -932,6 +748,211 @@ def streaming_dedup_events(
         shutil.rmtree(os.path.dirname(stage), ignore_errors=True)
 
 
+def streaming_incremental_neardup(
+    spark: SparkSession,
+    new_docs: DataFrame,
+    corpus_signatures: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    threshold: float = 0.35,
+    bands: int = 16,
+    shingle_n: int = 3,
+    shingle_unit: str = "word",
+) -> DataFrame:
+    """Streaming near-dup detection against a PERSISTED MinHash index —
+    the streaming spelling of ``dedup.incremental_minhash_pairs``: new
+    documents arrive as a file stream, and each micro-batch runs the
+    BATCH operator unchanged — signed by its explode+groupBy MinHash
+    stage, banded, equi-joined against the static band index, pair-key
+    deduped, and filtered to component-agreement >= ``threshold``.
+
+    Output: (new_id, corpus_id, est_jaccard), equal to the batch path
+    on the same data by CONSTRUCTION: each micro-batch runs the exact
+    batch operator — the Structured Streaming idiom for reusing a
+    batch pipeline stage unchanged, and the fast path here, since the
+    batch operator's explode+groupBy signing is whole-stage codegen'd
+    while a row-wise signing via nested higher-order functions
+    (``dedup.row_minhash_signatures``, the rejected alternative)
+    evaluates interpreted (~8x slower at 10x scale when this job was
+    first written that way). Documents don't span micro-batches, so
+    per-batch results union to the batch answer with no cross-batch
+    state; the static index is materialized once up front rather than
+    re-signed per micro-batch."""
+    from ..operators import dedup as dedup_ops
+
+    k = len([c for c in corpus_signatures.columns if c.startswith("mh_")])
+    if k == 0 or k % bands != 0:
+        raise ValueError(
+            f"corpus_signatures must carry mh_* columns with k a multiple of "
+            f"bands; got k={k}, bands={bands}"
+        )
+    corpus_signatures = corpus_signatures.localCheckpoint(eager=True)
+
+    def fold(batch_df, ep):
+        ep.write("flagged", dedup_ops.incremental_minhash_pairs(
+            batch_df, corpus_signatures, text_col, id_col,
+            threshold=threshold, bands=bands,
+            shingle_n=shingle_n, shingle_unit=shingle_unit,
+        ))
+
+    src = new_docs.select(F.col(id_col).cast("long").alias(id_col), text_col)
+    return _run_fold(spark, "neardup", src, fold, lambda ep: ep.history(
+        "flagged", "new_id long, corpus_id long, est_jaccard double"
+    ))
+
+
+def streaming_decontam(
+    spark: SparkSession,
+    new_docs: DataFrame,
+    bench_index: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    min_hits: int = 3,
+    unit: str = "word",
+) -> DataFrame:
+    """Streaming benchmark decontamination against a PERSISTED
+    bench-gram index — the decontamination twin of
+    :func:`streaming_incremental_neardup`, same design: each
+    micro-batch runs the BATCH operator
+    (``decontam.incremental_contamination_pairs``) unchanged. The
+    benchmark corpus is grammed once at freeze time into
+    ``bench_index`` (``decontam.bench_gram_index``) and checkpointed
+    here, never re-built per micro-batch; documents don't span
+    micro-batches and the per-pair overlap count is within-document,
+    so per-batch results union to the batch answer with no cross-batch
+    state (pytest-pinned ≡ the batch operator on the same data).
+
+    Returns (train_id, bench_id, overlap_ngrams) for flagged pairs
+    across all micro-batches.
+    """
+    from ..operators import decontam as decontam_ops
+
+    if "_h" not in bench_index.columns:
+        raise ValueError(
+            f"bench_index must be a bench_gram_index result; got "
+            f"{bench_index.columns}"
+        )
+    bench_index = bench_index.localCheckpoint(eager=True)
+    # Bloom sizing paid ONCE for the static index, not per micro-batch
+    index_rows = bench_index.count()
+
+    def fold(batch_df, ep):
+        ep.write("flagged", decontam_ops.incremental_contamination_pairs(
+            batch_df, bench_index, text_col, id_col, n=n, min_hits=min_hits,
+            unit=unit, index_size_hint=index_rows,
+        ))
+
+    src = new_docs.select(F.col(id_col).cast("long").alias(id_col), text_col)
+    return _run_fold(spark, "decontam", src, fold, lambda ep: ep.history(
+        "flagged", "train_id long, bench_id long, overlap_ngrams long"
+    ))
+
+
+def streaming_curation(
+    spark: SparkSession,
+    new_docs: DataFrame,
+    corpus_fingerprints: DataFrame,
+    corpus_signatures: DataFrame,
+    bench_index: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    threshold: float = 0.35,
+    bands: int = 16,
+    shingle_n: int = 3,
+    shingle_unit: str = "word",
+    min_hits: int = 3,
+    gram_n: int = 3,
+    gram_unit: str = "word",
+) -> DataFrame:
+    """The FULL curation screen in streaming form — exact-fingerprint
+    dedup → near-dup vs the persisted MinHash index → decontamination
+    vs the persisted bench-gram index — each micro-batch running the
+    same batch operators ``incremental_curation`` composes, unchanged.
+    All three standing artifacts (corpus fingerprint set, signature
+    index, bench-gram index) are checkpointed ONCE up front;
+    micro-batches pay only their own side.
+    ``(gram_n, gram_unit)`` parameterize the decontamination PROBE and
+    must match how ``bench_index`` was built (``bench_gram_index``'s
+    contract) — an index built at a different gram size would produce
+    zero hash hits and silently pass contamination; ``(shingle_n,
+    shingle_unit)`` independently parameterize the MinHash near-dup
+    probe against ``corpus_signatures``.
+    Packing is deliberately NOT in the stream: sequence ids are a
+    corpus-level layout decision, assigned when the accumulated
+    survivors are packed in batch.
+
+    Cross-batch semantics: near-dup and decontamination screen against
+    STATIC artifacts (exactly the batch pipeline's contract — the
+    batch operator doesn't near-dup a batch against itself either),
+    but exact-fingerprint dedup ACCUMULATES: each micro-batch's
+    admitted fingerprints block every later batch, so a duplicate
+    arriving in a later micro-batch is dropped — first arrival wins,
+    the streaming analogue of the batch path's lowest-id-wins
+    (identical when the input partitions are in id order;
+    pytest-pinned ≡ batch on the same data, duplicate-across-batches
+    case covered by the multi-partition test). Returns the surviving
+    rows of ``new_docs``.
+    """
+    from ..operators import decontam as decontam_ops
+    from ..operators import dedup as dedup_ops
+
+    for need, d, cols in (
+        ("corpus_fingerprints", corpus_fingerprints, {"fingerprint"}),
+        ("bench_index", bench_index, {"bench_id", "_h"}),
+    ):
+        if not cols <= set(d.columns):
+            raise ValueError(f"{need} must carry {sorted(cols)}; got {d.columns}")
+    src = new_docs.select(
+        F.col(id_col).cast("long").alias(id_col),
+        *[c for c in new_docs.columns if c != id_col],
+    )
+    seen = corpus_fingerprints.select("fingerprint").distinct().localCheckpoint(
+        eager=True
+    )
+    corpus_signatures = corpus_signatures.localCheckpoint(eager=True)
+    bench_index = bench_index.localCheckpoint(eager=True)
+    # Bloom sizing paid ONCE for the static index, not per micro-batch
+    index_rows = bench_index.count()
+
+    def fold(batch_df, ep):
+        fresh = dedup_ops.content_fingerprint(batch_df, [text_col])
+        keep = fresh.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
+        blocked = seen.unionByName(ep.history("admitted", "fingerprint string"))
+        # checkpoint the exact-stage output once: it feeds the
+        # fingerprint write AND the three later consumers
+        admitted = (
+            fresh.join(keep, ["fingerprint", id_col], "left_semi")
+            .join(blocked, "fingerprint", "left_anti")
+            .localCheckpoint(eager=True)
+        )
+        # record at the EXACT stage, not post-screen: a doc dropped by
+        # a later stage must still block future identical arrivals
+        # (matching the batch path, where within-batch dedup runs
+        # before any screening)
+        ep.write("admitted", admitted.select("fingerprint"))
+        survivors = admitted.drop("fingerprint")
+        near = (
+            dedup_ops.incremental_minhash_pairs(
+                survivors, corpus_signatures, text_col, id_col,
+                threshold=threshold, bands=bands,
+                shingle_n=shingle_n, shingle_unit=shingle_unit,
+            )
+            .select(F.col("new_id").alias(id_col))
+            .distinct()
+        )
+        survivors = survivors.join(near, id_col, "left_anti")
+        ep.write("survivors", decontam_ops.decontaminate_incremental(
+            survivors, bench_index, text_col, id_col,
+            n=gram_n, unit=gram_unit, min_hits=min_hits,
+            index_size_hint=index_rows,
+        ))
+
+    return _run_fold(
+        spark, "curation", src, fold, lambda ep: ep.history("survivors", src.schema)
+    )
+
+
 def streaming_url_frontier(
     spark: SparkSession,
     discovered: DataFrame,
@@ -940,14 +961,13 @@ def streaming_url_frontier(
     id_col: str = "id",
     per_host_cap: int = 10,
 ) -> DataFrame:
-    """The crawl frontier in STREAMING form: discovered URLs arrive as
-    a file stream (one staged file per trigger = one discovery batch),
-    and each micro-batch runs the BATCH operator
-    (``urls.frontier_next_batch``) unchanged via ``foreachBatch``
+    """The crawl frontier in STREAMING form: each input partition of
+    ``discovered`` is one discovery batch, and each micro-batch runs
+    the BATCH operator (``urls.frontier_next_batch``) unchanged
     against the persisted seen set — with the two scheduling decisions
     a real crawler needs:
 
-    1. canonical forms EMITTED by earlier micro-batches count as seen
+    1. canonical forms SCHEDULED by earlier micro-batches count as seen
        (they are queued for fetch), so a page re-discovered later is
        never scheduled twice — the same accumulation discipline as
        ``streaming_curation``'s admitted fingerprints;
@@ -965,63 +985,36 @@ def streaming_url_frontier(
 
     Returns all scheduled fetches: (id_col, canon, host, rk, batch).
     """
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from ..operators import urls as url_ops
 
     if "canon" not in seen.columns:
         raise ValueError(f"seen must carry a 'canon' column; got {seen.columns}")
-    root = _stream_scratch("frontier_stream_")
-    stage = _os.path.join(root, "staged")
-    out_dir = _os.path.join(root, "scheduled")
-    emitted_dir = _os.path.join(root, "emitted_canon")
-    pending_dir = _os.path.join(root, "pending")
     src = discovered.select(
         F.col(id_col).cast("long").alias(id_col), F.col(url_col).alias(url_col)
     )
-    src.write.parquet(stage)
     seen0 = seen.select("canon").distinct().localCheckpoint(eager=True)
+    scheduled = f"`{id_col}` long, canon string, host string, rk long, batch long"
 
-    def schedule_batch(batch_df, epoch_id):
-        cand = batch_df
-        if _os.path.isdir(pending_dir):
-            cand = cand.unionByName(spark.read.parquet(pending_dir))
-        blocked = seen0
-        if _os.path.isdir(emitted_dir):
-            blocked = blocked.unionByName(spark.read.parquet(emitted_dir))
+    def fold(batch_df, ep):
+        cand = batch_df.unionByName(ep.state("pending", src.schema))
+        emitted = ep.history("scheduled", scheduled).select("canon")
+        blocked = seen0.unionByName(emitted)
         fresh = url_ops.frontier_next_batch(
             cand, blocked, url_col, id_col,
             per_host_cap=per_host_cap, keep_overflow=True,
-        ).localCheckpoint(eager=True)  # eager: pending is overwritten below
-        sched = fresh.where(F.col("rk") <= per_host_cap)
-        sched.select("canon").write.mode("append").parquet(emitted_dir)
-        sched.withColumn("batch", F.lit(int(epoch_id)).cast("long")).write.mode(
-            "append"
-        ).parquet(out_dir)
+        ).localCheckpoint(eager=True)  # eager: feeds both writes below
+        ep.write("scheduled", fresh.where(F.col("rk") <= per_host_cap).withColumn(
+            "batch", F.lit(ep.epoch).cast("long")
+        ))
         # over-cap backlog re-queues: canon doubles as the next round's
         # url (canonicalization is idempotent)
-        fresh.where(F.col("rk") > per_host_cap).select(
+        ep.advance("pending", fresh.where(F.col("rk") > per_host_cap).select(
             F.col(id_col), F.col("canon").alias(url_col)
-        ).write.mode("overwrite").parquet(pending_dir)
+        ))
 
-    try:
-        raw = (
-            spark.readStream.schema(src.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(schedule_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(root, ignore_errors=True)
+    return _run_fold(
+        spark, "frontier", src, fold, lambda ep: ep.history("scheduled", scheduled)
+    )
 
 
 def streaming_cms(
@@ -1032,46 +1025,30 @@ def streaming_cms(
     width: int = 512,
 ) -> DataFrame:
     """Streaming count-min sketch: fold each micro-batch's sketch into
-    the accumulated counter table via ``foreachBatch`` — the sketch's
-    defining property (sketch-of-union = elementwise counter sum,
-    ``profiling.merge_cms``) makes the stream fold EXACT: after any
-    number of micro-batches the accumulated table is bit-identical to
-    one batch ``cms_build`` over everything seen (pytest-pinned).
-    This is the constant-state streaming frequency summary: state is
-    ≤ depth·width counters forever, where the exact streaming
-    alternatives grow with the key space.
+    the accumulated counter table — the sketch's defining property
+    (sketch-of-union = elementwise counter sum, ``profiling.merge_cms``)
+    makes the stream fold EXACT: after any number of micro-batches the
+    accumulated table is bit-identical to one batch ``cms_build`` over
+    everything seen (pytest-pinned). This is the constant-state
+    streaming frequency summary: state is ≤ depth·width counters
+    forever, where the exact streaming alternatives grow with the key
+    space.
 
     Returns the accumulated ``(row, bucket, c)`` sketch.
     """
     from ..operators import profiling as prof
 
-    root = _stream_scratch("cms_stream_")
-    stage = os.path.join(root, "staged")
+    schema = "row int, bucket long, c long"
+
+    def fold(batch_df, ep):
+        sketch = prof.cms_build(batch_df, col, depth=depth, width=width)
+        prev = ep.previous("sketch", schema)
+        if prev is not None:
+            sketch = prof.merge_cms(prev, sketch)
+        ep.advance("sketch", sketch)
+
     src = values.select(F.col(col).cast("string").alias(col))
-    src.write.parquet(stage)
-    sd = _VersionedState(root, "sketch")
-
-    def fold_batch(batch_df, _epoch_id):
-        batch_sketch = prof.cms_build(batch_df, col, depth=depth, width=width)
-        if sd.has_state:
-            prev = spark.read.parquet(sd.current)
-            merged = prof.merge_cms(prev, batch_sketch)
-        else:
-            merged = batch_sketch
-        sd.write(merged)
-
-    try:
-        raw = spark.readStream.schema(src.schema).parquet(stage)
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(sd.current).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _run_fold(spark, "cms", src, fold, lambda ep: ep.state("sketch", schema))
 
 
 def streaming_anchor_index(
@@ -1082,52 +1059,36 @@ def streaming_anchor_index(
 ) -> DataFrame:
     """Streaming anchor-text index maintenance — the streaming twin of
     the batch fold (``urls.merge_anchor_index``), same design as
-    :func:`streaming_cms`: crawled pages arrive as a file stream, each
-    micro-batch extracts its outlinks + visible anchor text
+    :func:`streaming_cms`: each micro-batch of crawled pages extracts
+    its outlinks + visible anchor text
     (``html_extract.extract_links_with_text``), aggregates them
     (``urls.anchor_text_index``) and folds the batch aggregate into
-    the accumulated standing index via ``foreachBatch``. A page's
-    links live in exactly one micro-batch (a crawl emits a page once),
-    so per-(canon, token) ``tf`` AND ``n_docs`` are disjoint-partition
-    sums and the accumulated index is EXACTLY the batch rebuild over
-    everything seen (pytest-pinned; the registered query hash-matches
-    the full-rebuild SQL oracle). State is index-sized — (canon,
-    token) counters — never the crawl.
+    the accumulated standing index. A page's links live in exactly one
+    micro-batch (a crawl emits a page once), so per-(canon, token)
+    ``tf`` AND ``n_docs`` are disjoint-partition sums and the
+    accumulated index is EXACTLY the batch rebuild over everything
+    seen (pytest-pinned; the registered query hash-matches the
+    full-rebuild SQL oracle). State is index-sized — (canon, token)
+    counters — never the crawl.
 
     Returns the accumulated ``(canon, token, tf, n_docs)`` index.
     """
     from ..operators.html_extract import extract_links_with_text
     from ..operators.urls import anchor_text_index, merge_anchor_index
 
-    root = _stream_scratch("anchor_stream_")
-    stage = os.path.join(root, "staged")
-    src = pages.select(F.col(id_col), F.col(html_col))
-    src.write.parquet(stage)
-    sd = _VersionedState(root, "index")
+    schema = "canon string, token string, tf long, n_docs long"
 
-    def fold_batch(batch_df, _epoch_id):
-        batch_index = anchor_text_index(
+    def fold(batch_df, ep):
+        index = anchor_text_index(
             extract_links_with_text(batch_df, html_col, id_col), id_col
         )
-        if sd.has_state:
-            prev = spark.read.parquet(sd.current)
-            merged = merge_anchor_index(prev, batch_index)
-        else:
-            merged = batch_index
-        sd.write(merged)
+        prev = ep.previous("index", schema)
+        if prev is not None:
+            index = merge_anchor_index(prev, index)
+        ep.advance("index", index)
 
-    try:
-        raw = spark.readStream.schema(src.schema).parquet(stage)
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(sd.current).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    src = pages.select(F.col(id_col), F.col(html_col))
+    return _run_fold(spark, "anchor", src, fold, lambda ep: ep.state("index", schema))
 
 
 def streaming_bottomk(
@@ -1137,9 +1098,8 @@ def streaming_bottomk(
     k: int,
 ) -> DataFrame:
     """Streaming bottom-k (KMV) uniform sample: fold each
-    micro-batch's bottom-k into the standing sample via
-    ``foreachBatch`` — the KMV merge property
-    (``bottomk(A ∪ B) = bottomk(bottomk(A) ∪ bottomk(B))``,
+    micro-batch's bottom-k into the standing sample — the KMV merge
+    property (``bottomk(A ∪ B) = bottomk(bottomk(A) ∪ bottomk(B))``,
     ``sampling.merge_bottomk``) makes the stream fold EXACT: after any
     number of micro-batches the standing sample is the batch
     ``bottomk_sample`` over everything seen (pytest-pinned; the
@@ -1148,35 +1108,24 @@ def streaming_bottomk(
     naive reservoir needs per-row RNG state that no SQL engine can
     restate; the same k rows also carry the KMV distinct-count
     estimator."""
+    from pyspark.sql import types as T
+
     from ..operators import sampling as samp
 
-    root = _stream_scratch("bottomk_stream_")
-    stage = os.path.join(root, "staged")
-    src = values
-    src.write.parquet(stage)
-    sd = _VersionedState(root, "sample")
+    schema = T.StructType(
+        values.schema.fields + [T.StructField("hkey", T.DoubleType())]
+    )
 
-    def fold_batch(batch_df, _epoch_id):
-        batch_k = samp.bottomk_sample(batch_df, key_col, k)
-        if sd.has_state:
-            prev = spark.read.parquet(sd.current)
-            merged = samp.merge_bottomk(prev, batch_k, key_col, k)
-        else:
-            merged = batch_k
-        sd.write(merged)
+    def fold(batch_df, ep):
+        sample = samp.bottomk_sample(batch_df, key_col, k)
+        prev = ep.previous("sample", schema)
+        if prev is not None:
+            sample = samp.merge_bottomk(prev, sample, key_col, k)
+        ep.advance("sample", sample)
 
-    try:
-        raw = spark.readStream.schema(src.schema).parquet(stage)
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(sd.current).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _run_fold(
+        spark, "bottomk", values, fold, lambda ep: ep.state("sample", schema)
+    )
 
 
 def streaming_linkage_probe(
@@ -1190,18 +1139,17 @@ def streaming_linkage_probe(
 ) -> DataFrame:
     """Streaming record-linkage candidates against a PERSISTED FastSS
     variant index — the linkage twin of :func:`streaming_decontam`,
-    same design: new records arrive as a file stream and each
-    micro-batch runs the BATCH probe unchanged via ``foreachBatch``
-    (``dedup.probe_variant_index`` → ``verify_edit_distance``). The
-    standing corpus is variant-expanded once at freeze time into
-    ``variant_index`` and checkpointed here, never re-expanded per
-    micro-batch; the verify joins names from the static corpus plus
-    the micro-batch itself (id-disjoint by contract), and batch↔batch
-    pairs are deliberately NOT emitted (same contract as the batch
-    probe — run the cheap self-join path over the accumulated batch
-    set for those). Per-pair verification is independent, so per-batch
-    results union to the all-at-once probe answer with no cross-batch
-    state (pytest-pinned).
+    same design: each micro-batch of new records runs the BATCH probe
+    unchanged (``dedup.probe_variant_index`` →
+    ``verify_edit_distance``). The standing corpus is variant-expanded
+    once at freeze time into ``variant_index`` and checkpointed here,
+    never re-expanded per micro-batch; the verify joins names from the
+    static corpus plus the micro-batch itself (id-disjoint by
+    contract), and batch↔batch pairs are deliberately NOT emitted
+    (same contract as the batch probe — run the cheap self-join path
+    over the accumulated batch set for those). Per-pair verification
+    is independent, so per-batch results union to the all-at-once
+    probe answer with no cross-batch state (pytest-pinned).
 
     Returns ``(id_a, id_b, dist)`` — id_a the new record, id_b the
     corpus record — across all micro-batches. Scoring (e.g.
@@ -1215,39 +1163,24 @@ def streaming_linkage_probe(
             f"variant_index must be a fastss_variant_index result; got "
             f"{variant_index.columns}"
         )
-    root = _stream_scratch("linkage_stream_")
-    stage = os.path.join(root, "staged")
-    out_dir = os.path.join(root, "verified")
-    src = new_records.select(
-        F.col(id_col).cast("long").alias(id_col), text_col
-    )
-    src.write.parquet(stage)
     variant_index = variant_index.localCheckpoint(eager=True)
     corpus_names = corpus.select(
         F.col(id_col).cast("long").alias(id_col), text_col
     ).localCheckpoint(eager=True)
 
-    def probe_batch(batch_df, _epoch_id):
+    def fold(batch_df, ep):
         cand = dedup_ops.probe_variant_index(
             batch_df, variant_index, text_col, id_col
         )
         names = corpus_names.unionByName(batch_df.select(id_col, text_col))
-        dedup_ops.verify_edit_distance(
+        ep.write("verified", dedup_ops.verify_edit_distance(
             cand, names, text_col, id_col, max_dist=max_dist
-        ).write.mode("append").parquet(out_dir)
+        ))
 
-    try:
-        raw = spark.readStream.schema(src.schema).parquet(stage)
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(probe_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    src = new_records.select(F.col(id_col).cast("long").alias(id_col), text_col)
+    return _run_fold(spark, "linkage", src, fold, lambda ep: ep.history(
+        "verified", "id_a long, id_b long, dist long"
+    ))
 
 
 def streaming_ewma(
@@ -1266,21 +1199,12 @@ def streaming_ewma(
     batch counterpart (timeseries.ewma_outliers) deliberately
     truncates the window to stay a closed-form SQL expression. In a
     stream the recursion is natural — per key the state is ONE number
-    (the running EWMA), folded forward each micro-batch.
-
-    Mechanics: the input stages as time-range slices written in
-    order + maxFilesPerTrigger=1, so micro-batches arrive in event-
-    time order (the file-source guarantee a real queue provides via
-    per-key ordering); ``foreachBatch`` left-joins the standing
-    per-key state onto the batch, an ``applyInPandas`` per key folds
-    the batch's rows in (ts, id) order seeded from the state, the
-    rows append to the output, and the new state (each key's last
-    EWMA) overwrites the state table — per-key-scalar state forever,
-    the same fenced fold discipline as streaming_cms. The result is
-    EXACTLY the single-pass recursion over the whole ordered input
-    regardless of slice boundaries (pytest-pinned against a pandas
-    reference), because EWMA folding is associative over ordered
-    segments given the carried seed.
+    (the running EWMA), folded forward each event-time-ordered
+    micro-batch by a per-key ``applyInPandas`` seeded from the state.
+    The result is EXACTLY the single-pass recursion over the whole
+    ordered input regardless of slice boundaries (pytest-pinned
+    against a pandas reference), because EWMA folding is associative
+    over ordered segments given the carried seed.
 
     Returns every row with its EWMA: ``(key, ts, id, value, ewma)``,
     ewma rounded to 9."""
@@ -1289,11 +1213,6 @@ def streaming_ewma(
     if n_slices < 1:
         raise ValueError(f"streaming_ewma: n_slices must be >= 1, got {n_slices}")
     import pandas as pd
-
-    root = _stream_scratch("ewma_stream_")
-    stage = os.path.join(root, "staged")
-    out_dir = os.path.join(root, "out")
-    os.makedirs(stage)
 
     src = events.select(
         F.col(key_col).alias("k"),
@@ -1305,104 +1224,54 @@ def streaming_ewma(
         F.col(id_col).cast("long").alias("eid"),
         F.col(value_col).cast("double").alias("x"),
     ).where(F.col("x").isNotNull() & F.col("ts").isNotNull())
-    # slice by ntile-free ts range cutpoints: exact percentiles of the
-    # epoch seconds give n_slices non-overlapping, ordered segments.
-    # ONE array-percentile aggregate — N separate percentile() exprs
-    # would each buffer the full column (the calibration_curve fix)
-    if n_slices > 1:
-        fracs = ", ".join(repr(i / n_slices) for i in range(1, n_slices))
-        cuts = list(
-            src.select(
-                F.expr(f"percentile(tsl, array({fracs}))").alias("_bs")
-            ).first()["_bs"]
-        )
-    else:
-        cuts = []
-    # one-pass ordered staging (mtime-pinned slices, see the helper)
-    staged_schema = _stage_ordered_slices(
-        src, stage, _range_slice_id(F.col("tsl"), cuts), n_slices
-    )
-
     state_schema = "k string, ewma double"
     out_schema = "k string, ts timestamp, eid long, x double, ewma double"
-    sd = _VersionedState(root)
 
-    def fold_batch(batch_df, _epoch_id):
-        state = sd.read(spark, state_schema)
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(["ts", "eid"])
+        seed = pdf["_seed"].iloc[0]
+        e = None if pd.isna(seed) else float(seed)
+        out = []
+        for x in pdf["x"].tolist():
+            e = float(x) if e is None else alpha * float(x) + (1.0 - alpha) * e
+            out.append(e)
+        pdf = pdf.drop(columns=["_seed"]).copy()
+        pdf["ewma"] = out
+        return pdf
+
+    def fold(batch_df, ep):
+        state = ep.state("state", state_schema)
         seeded = batch_df.drop("tsl").join(
             state.withColumnRenamed("ewma", "_seed"), "k", "left"
         )
+        # The fold runs ONCE, inside the output write; the state job
+        # then reads back the bytes that write produced — no eager
+        # checkpoint job, no second applyInPandas execution. (A
+        # persist() variant measured 6.2s -> 10.9s in the r14 profiler:
+        # building the columnar InMemoryRelation per batch costs more
+        # than the job it saves.)
+        ep.write("out", seeded.groupBy("k").applyInPandas(fn, out_schema))
+        last = (
+            spark.read.schema(out_schema).parquet(ep.path("out"))
+            .groupBy("k")
+            .agg(F.max_by("ewma", F.struct("ts", "eid")).alias("ewma"))
+        )
+        ep.advance(
+            "state", state.join(last.select("k"), "k", "left_anti").unionByName(last)
+        )
 
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(["ts", "eid"])
-            seed = pdf["_seed"].iloc[0]
-            e = None if pd.isna(seed) else float(seed)
-            out = []
-            for x in pdf["x"].tolist():
-                e = float(x) if e is None else alpha * float(x) + (1.0 - alpha) * e
-                out.append(e)
-            pdf = pdf.drop(columns=["_seed"]).copy()
-            pdf["ewma"] = out
-            return pdf
-
-        # folded is consumed twice (output append + last-EWMA state).
-        # The fold runs ONCE inside the append-write job; the state
-        # job then derives from the parquet bytes that write just
-        # produced (the batch's new files, isolated by a directory
-        # diff) — no eager checkpoint job, no second applyInPandas
-        # execution. (A persist() variant measured 6.2s -> 10.9s in
-        # the r14 profiler — building the columnar InMemoryRelation
-        # per batch costs more than the job it saves; reading back
-        # the just-written files costs only a footer read.)
-        folded = seeded.groupBy("k").applyInPandas(fn, out_schema)
-        before = (
-            set(os.listdir(out_dir)) if os.path.isdir(out_dir) else set()
-        )
-        folded.write.mode("append").parquet(out_dir)
-        new_files = [
-            os.path.join(out_dir, f)
-            for f in sorted(set(os.listdir(out_dir)) - before)
-            if f.endswith(".parquet")
-        ]
-        batch_out = (
-            spark.read.schema(out_schema).parquet(*new_files)
-            if new_files
-            else local_rows_df(spark, [], out_schema)
-        )
-        last = batch_out.groupBy("k").agg(
-            F.max_by("ewma", F.struct("ts", "eid")).alias("ewma")
-        )
-        new_state = state.join(last.select("k"), "k", "left_anti").unionByName(
-            last
-        )
-        sd.write(new_state)
-
-    try:
-        raw = (
-            spark.readStream.schema(staged_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return (
-            spark.read.parquet(out_dir)
-            .select(
-                F.col("k").alias(key_col),
-                F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias(ts_col),
-                F.col("eid").alias(id_col),
-                F.col("x").alias(value_col),
-                F.round("ewma", 9).alias("ewma"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _run_fold(
+        spark, "ewma", src, fold,
+        lambda ep: ep.history("out", out_schema).select(
+            F.col("k").alias(key_col),
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias(ts_col),
+            F.col("eid").alias(id_col),
+            F.col("x").alias(value_col),
+            F.round("ewma", 9).alias("ewma"),
+        ),
+        slice_by=_range_slices(src, "tsl", n_slices),
+        n_slices=n_slices,
+    )
 
 
 def streaming_quantile_digest(
@@ -1415,62 +1284,42 @@ def streaming_quantile_digest(
 ) -> DataFrame:
     """Streaming quantile summary: build a k-point equi-depth digest
     per micro-batch and FOLD it into the standing digest via
-    ``foreachBatch`` + ``rollup.digest_merge`` — the quantile sibling
-    of :func:`streaming_bottomk` (bottom-k folds exactly by the KMV
+    ``rollup.digest_merge`` — the quantile sibling of
+    :func:`streaming_bottomk` (bottom-k folds exactly by the KMV
     merge property; digests fold within the pytest-pinned ≤2/k rank
     bound, the price a bounded-state quantile pays — an exact
     streaming quantile needs every value forever). State is the
     (k+1)-row digest per group regardless of stream length — the
     bounded-state monitor a 100 TB ingest keeps per partition/day.
 
-    Staging mirrors streaming_ewma: the input splits into
-    ``n_slices`` ordered file slices (mod-time pinned) so the file
-    source replays a multi-micro-batch history deterministically.
+    The input is hash-sliced on the value into ``n_slices``
+    micro-batches, so the multi-batch history is deterministic.
     Returns the standing digest in :func:`rollup.quantile_digest`'s
     schema after the stream drains."""
+    from pyspark.sql import types as T
+
     from ..operators.rollup import digest_merge, quantile_digest
 
     keys = group_cols or []
-    root = _stream_scratch("qdigest_stream_")
-    stage = os.path.join(root, "staged")
-    os.makedirs(stage)
     src = values.select(
         *keys, F.col(value_col).cast("double").alias("_v")
     ).where(F.col("_v").isNotNull())
-    staged_schema = _stage_ordered_slices(
-        src, stage, F.pmod(F.xxhash64("_v"), F.lit(n_slices)), n_slices
+    schema = T.StructType(
+        [src.schema[c] for c in keys]
+        + T.StructType.fromDDL("rank_frac double, value double, n long").fields
     )
-    sd = _VersionedState(root, "digest")
 
-    def fold_batch(batch_df, _epoch_id):
-        batch_digest = quantile_digest(
-            batch_df, "_v", k=k, group_cols=keys or None
-        )
-        if sd.has_state:
-            prev = spark.read.parquet(sd.current)
-            merged = digest_merge(
-                prev, batch_digest, group_cols=keys or None, k=k
-            )
-        else:
-            merged = batch_digest
-        sd.write(merged)
+    def fold(batch_df, ep):
+        digest = quantile_digest(batch_df, "_v", k=k, group_cols=keys or None)
+        prev = ep.previous("digest", schema)
+        if prev is not None:
+            digest = digest_merge(prev, digest, group_cols=keys or None, k=k)
+        ep.advance("digest", digest)
 
-    try:
-        raw = (
-            spark.readStream.schema(src.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage)
-        )
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(sd.current).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _run_fold(
+        spark, "qdigest", src, fold, lambda ep: ep.state("digest", schema),
+        slice_by=F.pmod(F.xxhash64("_v"), F.lit(n_slices)), n_slices=n_slices,
+    )
 
 
 def streaming_skyline(
@@ -1480,49 +1329,29 @@ def streaming_skyline(
     maximize: list[str] | None = None,
 ) -> DataFrame:
     """Streaming skyline (Pareto-optimal set) maintenance: fold each
-    micro-batch's local skyline into the standing skyline via
-    ``foreachBatch`` — the same merge identity the batch operator's
-    partition phase uses (``skyline(A ∪ B) = skyline(skyline(A) ∪
-    skyline(B))``, dominance being transitive) makes the stream fold
-    EXACT for inserts: after any number of micro-batches the standing
-    set is the batch ``sampling.skyline`` over everything seen
-    (pytest-pinned; the registered query hash-matches the same
-    NOT-EXISTS oracle). State is the skyline itself — bounded by the
-    answer's size, not the stream's. Insert-only by construction
-    (deletions would need dominated candidates retained; out of
-    contract, like every fold in this module)."""
+    micro-batch's local skyline into the standing skyline — the same
+    merge identity the batch operator's partition phase uses
+    (``skyline(A ∪ B) = skyline(skyline(A) ∪ skyline(B))``, dominance
+    being transitive) makes the stream fold EXACT for inserts: after
+    any number of micro-batches the standing set is the batch
+    ``sampling.skyline`` over everything seen (pytest-pinned; the
+    registered query hash-matches the same NOT-EXISTS oracle). State
+    is the skyline itself — bounded by the answer's size, not the
+    stream's. Insert-only by construction (deletions would need
+    dominated candidates retained; out of contract, like every fold in
+    this module)."""
     from ..operators.sampling import skyline
 
-    root = _stream_scratch("skyline_stream_")
-    stage = os.path.join(root, "staged")
-    rows.write.parquet(stage)
-    sd = _VersionedState(root, "skyline")
+    def fold(batch_df, ep):
+        sky = skyline(batch_df, minimize=minimize, maximize=maximize)
+        prev = ep.previous("skyline", rows.schema)
+        if prev is not None:
+            sky = skyline(prev.unionByName(sky), minimize=minimize, maximize=maximize)
+        ep.advance("skyline", sky)
 
-    def fold_batch(batch_df, _epoch_id):
-        batch_sky = skyline(batch_df, minimize=minimize, maximize=maximize)
-        if sd.has_state:
-            prev = spark.read.parquet(sd.current)
-            merged = skyline(
-                prev.unionByName(batch_sky),
-                minimize=minimize,
-                maximize=maximize,
-            )
-        else:
-            merged = batch_sky
-        sd.write(merged)
-
-    try:
-        raw = spark.readStream.schema(rows.schema).parquet(stage)
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(sd.current).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _run_fold(
+        spark, "skyline", rows, fold, lambda ep: ep.state("skyline", rows.schema)
+    )
 
 
 def streaming_connected_components(
@@ -1533,10 +1362,10 @@ def streaming_connected_components(
 ) -> DataFrame:
     """Streaming connected-components maintenance: edges arrive in
     micro-batches and each batch folds into a standing ``(node,
-    component)`` labeling via ``foreachBatch`` — exact by the
-    contraction identity ``CC(E₁ ∪ E₂) = CC(star(E₁) ∪ E₂)``: a
-    component's star edges (every node → its label) are connectivity-
-    equivalent to the original edges, so re-running the batch operator
+    component)`` labeling — exact by the contraction identity
+    ``CC(E₁ ∪ E₂) = CC(star(E₁) ∪ E₂)``: a component's star edges
+    (every node → its label) are connectivity-equivalent to the
+    original edges, so re-running the batch operator
     (``graph.connected_components``, the Kiveris et al. star
     contraction) on standing-star-edges ∪ new-batch-edges yields the
     labeling of everything seen (pytest-pinned; the registered query
@@ -1545,38 +1374,20 @@ def streaming_connected_components(
     edges, never the full history."""
     from ..operators.graph import connected_components
 
-    root = _stream_scratch("cc_stream_")
-    stage = os.path.join(root, "staged")
-    src = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
-    src.write.parquet(stage)
-    sd = _VersionedState(root, "components")
+    src = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    dt = src.schema["src"].dataType.simpleString()
+    schema = f"node {dt}, component {dt}"
 
-    def fold_batch(batch_df, _epoch_id):
-        b = batch_df.select("src", "dst")
-        if sd.has_state:
-            prev = spark.read.parquet(sd.current)
+    def fold(batch_df, ep):
+        prev = ep.previous("components", schema)
+        if prev is not None:
             star = prev.where(F.col("node") != F.col("component")).select(
                 F.col("component").alias("src"), F.col("node").alias("dst")
             )
-            merged = connected_components(star.unionByName(b))
-        else:
-            merged = connected_components(b)
-        sd.write(merged)
+            batch_df = star.unionByName(batch_df)
+        ep.advance("components", connected_components(batch_df))
 
-    try:
-        raw = spark.readStream.schema(src.schema).parquet(stage)
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(sd.current).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _run_fold(spark, "cc", src, fold, lambda ep: ep.state("components", schema))
 
 
 def streaming_twap(
@@ -1594,11 +1405,10 @@ def streaming_twap(
     MICROSECONDS; the per-key tail observation is pending until a
     successor arrives). Per key the carried state is FOUR scalars —
     last timestamp, last value, the exact Σ v·Δt accumulator and the
-    Σ Δt span — folded forward each micro-batch in event-time order
-    (the staged-slice + maxFilesPerTrigger=1 ordering discipline of
-    ``streaming_ewma``), so the final fold is EXACTLY the batch
-    operator's answer regardless of slice boundaries: this query
-    hash-matches the SAME DuckDB oracle as the batch form.
+    Σ Δt span — folded forward each event-time-ordered micro-batch,
+    so the final fold is EXACTLY the batch operator's answer
+    regardless of slice boundaries: this query hash-matches the SAME
+    DuckDB oracle as the batch form.
 
     Exactness AND speed: the TWAP fold is ASSOCIATIVE over ordered
     segments, so each batch reduces JVM-side to per-key partials
@@ -1612,10 +1422,7 @@ def streaming_twap(
     (double))`` — the batch operator's exact schema."""
     if n_slices < 1:
         raise ValueError(f"streaming_twap: n_slices must be >= 1, got {n_slices}")
-
-    root = _stream_scratch("twap_stream_")
-    stage = os.path.join(root, "staged")
-    os.makedirs(stage)
+    from pyspark.sql import Window
 
     src = events.select(
         F.col(key_col).cast("string").alias("k"),
@@ -1626,30 +1433,14 @@ def streaming_twap(
     ).where(
         F.col("k").isNotNull() & F.col("t").isNotNull() & F.col("v").isNotNull()
     )
-    if n_slices > 1:
-        fracs = ", ".join(repr(i / n_slices) for i in range(1, n_slices))
-        cuts = list(
-            src.select(
-                F.expr(f"percentile(t, array({fracs}))").alias("_bs")
-            ).first()["_bs"]
-        )
-    else:
-        cuts = []
-    staged_schema = _stage_ordered_slices(
-        src, stage, _range_slice_id(F.col("t"), cuts), n_slices
-    )
-
     state_schema = (
         "k string, n long, last_t long, last_v long, "
         "acc_vt decimal(38,0), acc_dt long"
     )
     dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    sd = _VersionedState(root)
 
-    def fold_batch(batch_df, _epoch_id):
-        from pyspark.sql import Window
-
-        state = sd.read(spark, state_schema)
+    def fold(batch_df, ep):
+        state = ep.state("state", state_schema)
         # per-key batch partials, all JVM-side: one lead window + one
         # groupBy (the batch operator's own shape, scoped to the batch)
         # tie-breaker MUST be (t, v) — the batch operator and the shared
@@ -1679,7 +1470,7 @@ def streaming_twap(
             F.col("last_t").isNotNull() & F.col("_bft").isNotNull(),
             F.col("_bft") - F.col("last_t"),
         ).otherwise(F.lit(0)).cast("long")
-        new_state = joined.select(
+        ep.advance("state", joined.select(
             "k",
             (F.coalesce(F.col("n"), F.lit(0)) + F.coalesce(F.col("_bn"), F.lit(0)))
             .cast("long")
@@ -1701,46 +1492,91 @@ def streaming_twap(
             )
             .cast("long")
             .alias("acc_dt"),
-        )
-        sd.write(new_state)
+        ))
 
-    try:
-        raw = (
-            spark.readStream.schema(staged_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
+    def readout(ep):
+        return ep.state("state", state_schema).select(
+            F.col("k").alias("key"),
+            F.col("n").alias("n_events"),
+            F.floor(F.col("acc_dt") / F.lit(1_000_000))
+            .cast("long")
+            .alias("span_seconds"),
+            F.when(
+                F.col("acc_dt") > 0,
+                F.round(
+                    F.col("acc_vt").cast("decimal(38,0)").cast("double")
+                    / (F.col("acc_dt").cast("double") * F.lit(float(unit_scale))),
+                    9,
+                ),
+            ).alias("twap"),
         )
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        final = sd.read(spark, state_schema)
-        return (
-            final.select(
-                F.col("k").alias("key"),
-                F.col("n").alias("n_events"),
-                F.floor(F.col("acc_dt") / F.lit(1_000_000))
-                .cast("long")
-                .alias("span_seconds"),
-                F.when(
-                    F.col("acc_dt") > 0,
-                    F.round(
-                        F.col("acc_vt").cast("decimal(38,0)").cast("double")
-                        / (
-                            F.col("acc_dt").cast("double")
-                            * F.lit(float(unit_scale))
-                        ),
-                        9,
-                    ),
-                ).alias("twap"),
-            )
-            .localCheckpoint(eager=True)
+
+    return _run_fold(
+        spark, "twap", src, fold, readout,
+        slice_by=_range_slices(src, "t", n_slices), n_slices=n_slices,
+    )
+
+
+_DAY_SCHEMA = "day date, sv decimal(38,6)"
+
+
+def _day_fold(
+    spark: SparkSession,
+    fn_name: str,
+    events: DataFrame,
+    ts_col: str,
+    value_col: str,
+    unit_scale: int,
+    n_slices: int,
+    readout,
+) -> DataFrame:
+    """The day-grain fold shared by the calendar folds
+    (:func:`streaming_ols_trend`, :func:`streaming_max_drawdown`,
+    :func:`streaming_mase`). The carried state is the DAY-GRAIN total
+    table — one ``(day, Σ value)`` row per present day, CALENDAR-
+    bounded (the period_over_period contract: decades of state fit in
+    kilobytes) — folded forward each day-range micro-batch with one
+    day aggregation and one full-outer decimal merge. A calendar day
+    may SPAN two micro-batches, and none of the three readouts is
+    additive over partial days (Σy², demeaning by the final mean, |Δ|
+    against a neighbor day), while daily totals are: the day merge is
+    the associative unit, so every readout hash-matches its batch
+    oracle for ANY slicing. ``readout`` gets the final day table as
+    ``(day, _x)``, ``_x`` the total quantized to ``unit_scale``."""
+    if n_slices < 1:
+        raise ValueError(f"{fn_name}: n_slices must be >= 1, got {n_slices}")
+    src = events.select(
+        F.date_trunc("day", F.col(ts_col).cast("timestamp"))
+        .cast("date")
+        .alias("day"),
+        F.col(value_col).cast("decimal(30,6)").alias("v"),
+    ).where(F.col("day").isNotNull() & F.col("v").isNotNull())
+    zero = F.lit(0).cast("decimal(38,6)")
+
+    def fold(batch_df, ep):
+        part = batch_df.groupBy("day").agg(
+            F.sum("v").cast("decimal(38,6)").alias("_bv")
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        merged = ep.state("days", _DAY_SCHEMA).join(part, "day", "full").select(
+            "day",
+            (F.coalesce(F.col("sv"), zero) + F.coalesce(F.col("_bv"), zero))
+            .cast("decimal(38,6)")
+            .alias("sv"),
+        )
+        ep.advance("days", merged)
+
+    def result(ep):
+        return readout(ep.state("days", _DAY_SCHEMA).select(
+            "day",
+            F.round(F.col("sv").cast("double") * F.lit(unit_scale))
+            .cast("long")
+            .alias("_x"),
+        ))
+
+    return _run_fold(
+        spark, fn_name, src, fold, result,
+        slice_by=_range_slices(src, "unix_date(day)", n_slices), n_slices=n_slices,
+    )
 
 
 def streaming_ols_trend(
@@ -1752,129 +1588,20 @@ def streaming_ols_trend(
     n_slices: int = 4,
 ) -> DataFrame:
     """Streaming OLS daily trend — the incremental twin of
-    ``timeseries.ols_trend``: the carried state is the DAY-GRAIN total
-    table (one ``(day, Σ quantized value)`` row per present day —
-    CALENDAR-bounded, the period_over_period contract: decades of
-    state fit in kilobytes), folded forward each micro-batch with one
-    day-grain aggregation and one full-outer decimal merge, and the
-    regression readout (slope/SE/t/R²) runs once on the final state.
+    ``timeseries.ols_trend`` on the shared day-grain fold
+    (:func:`_day_fold`); the batch operator's regression readout
+    (slope/SE/t/R²) runs once on the final day table. Why the state is
+    the day table and not the five moment sums: Σy² over day totals is
+    not additive across partial days ((y₁+y₂)² ≠ y₁²+y₂²), so a
+    moment-sum fold would silently depend on slice boundaries. Output:
+    the batch operator's exact one-row schema ``(n_days, slope,
+    intercept, se_slope, t_stat, r2)``."""
+    from ..operators.timeseries import _ols_readout
 
-    Why the state is the day table and not the five moment sums: a
-    calendar day may SPAN two micro-batches, and Σy² over day totals
-    is not additive across partial days ((y₁+y₂)² ≠ y₁²+y₂²) — the
-    moment-sum fold would silently depend on slice boundaries. The
-    day-grain merge is exactly associative (daily totals add), so
-    this query hash-matches the SAME DuckDB oracle as the batch form
-    for ANY slicing — the streaming_twap contract. Output: the batch
-    operator's exact one-row schema ``(n_days, slope, intercept,
-    se_slope, t_stat, r2)``."""
-    if n_slices < 1:
-        raise ValueError(
-            f"streaming_ols_trend: n_slices must be >= 1, got {n_slices}"
-        )
-    root = _stream_scratch("ols_stream_")
-    stage = os.path.join(root, "staged")
-    os.makedirs(stage)
-
-    src = events.select(
-        F.date_trunc("day", F.col(ts_col).cast("timestamp"))
-        .cast("date")
-        .alias("day"),
-        F.col(value_col).cast("decimal(30,6)").alias("v"),
-    ).where(F.col("day").isNotNull() & F.col("v").isNotNull())
-    if n_slices > 1:
-        fracs = ", ".join(repr(i / n_slices) for i in range(1, n_slices))
-        cuts = list(
-            src.select(
-                F.expr(
-                    f"percentile(unix_date(day), array({fracs}))"
-                ).alias("_bs")
-            ).first()["_bs"]
-        )
-    else:
-        cuts = []
-    staged_schema = _stage_ordered_slices(
-        src, stage, _range_slice_id(F.unix_date(F.col("day")), cuts), n_slices
+    return _day_fold(
+        spark, "streaming_ols_trend", events, ts_col, value_col, unit_scale, n_slices,
+        lambda daily: _ols_readout(daily.withColumnRenamed("_x", "_y"), unit_scale),
     )
-
-    state_schema = "day date, sv decimal(38,6)"
-    sd = _VersionedState(root)
-
-    def fold_batch(batch_df, _epoch_id):
-        state = sd.read(spark, state_schema)
-        part = batch_df.groupBy("day").agg(
-            F.sum("v").cast("decimal(38,6)").alias("_bv")
-        )
-        merged = state.join(part, "day", "full").select(
-            "day",
-            (
-                F.coalesce(F.col("sv"), F.lit(0).cast("decimal(38,6)"))
-                + F.coalesce(F.col("_bv"), F.lit(0).cast("decimal(38,6)"))
-            )
-            .cast("decimal(38,6)")
-            .alias("sv"),
-        )
-        sd.write(merged)
-
-    try:
-        raw = (
-            spark.readStream.schema(staged_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        daily = sd.read(spark, state_schema).select(
-            "day",
-            F.round(F.col("sv").cast("double") * F.lit(unit_scale))
-            .cast("long")
-            .alias("_y"),
-        )
-        # the batch operator's exact finishing readout over the state
-        first = daily.agg(F.min("day").alias("_d0"))
-        dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-        staged_m = daily.crossJoin(F.broadcast(first)).select(
-            F.datediff(F.col("day"), F.col("_d0")).cast("long").alias("_x"),
-            "_y",
-        )
-        m = staged_m.agg(
-            F.count(F.lit(1)).cast("long").alias("n_days"),
-            F.coalesce(F.sum(dec(F.col("_x"))), F.lit(0).cast("decimal(38,0)")).alias("_sx"),
-            F.coalesce(F.sum(dec(F.col("_y"))), F.lit(0).cast("decimal(38,0)")).alias("_sy"),
-            F.coalesce(F.sum((dec(F.col("_x")) * dec(F.col("_y"))).cast("decimal(38,0)")), F.lit(0).cast("decimal(38,0)")).alias("_sxy"),
-            F.coalesce(F.sum((dec(F.col("_x")) * dec(F.col("_x"))).cast("decimal(38,0)")), F.lit(0).cast("decimal(38,0)")).alias("_sxx"),
-            F.coalesce(F.sum((dec(F.col("_y")) * dec(F.col("_y"))).cast("decimal(38,0)")), F.lit(0).cast("decimal(38,0)")).alias("_syy"),
-        )
-        n = F.col("n_days").cast("double")
-        sx, sy = F.col("_sx").cast("double"), F.col("_sy").cast("double")
-        sxy, sxx, syy = (
-            F.col("_sxy").cast("double"),
-            F.col("_sxx").cast("double"),
-            F.col("_syy").cast("double"),
-        )
-        s = F.lit(float(unit_scale))
-        cxx = sxx - sx * sx / n
-        cyy = syy - sy * sy / n
-        cxy = sxy - sx * sy / n
-        b = cxy / cxx
-        sse = cyy - b * cxy
-        se_b = F.sqrt(sse / (n - F.lit(2.0)) / cxx)
-        ok = (F.col("n_days") >= 3) & (cxx > 0)
-        return m.select(
-            "n_days",
-            F.when(ok, F.round(b / s, 9)).alias("slope"),
-            F.when(ok, F.round((sy / n - b * sx / n) / s, 9)).alias("intercept"),
-            F.when(ok & (sse > 0), F.round(se_b / s, 9)).alias("se_slope"),
-            F.when(ok & (sse > 0), F.round(b / se_b, 9)).alias("t_stat"),
-            F.when(ok & (cyy > 0), F.round(b * cxy / cyy, 9)).alias("r2"),
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def streaming_max_drawdown(
@@ -1886,116 +1613,19 @@ def streaming_max_drawdown(
     n_slices: int = 4,
 ) -> DataFrame:
     """Streaming maximum drawdown — the incremental twin of
-    ``timeseries.max_drawdown`` with the same state discipline as
-    ``streaming_ols_trend``: the carried state is the DAY-GRAIN total
-    table (calendar-bounded; demeaning needs the FINAL global mean, so
-    no scalar fold can be exact mid-stream — the day merge is the
-    associative unit), and the batch finishing readout (n-scaled
-    deviations, exact running sum/max windows, first trough day) runs
-    once on the final state. Hash-matches the SAME DuckDB oracle as
-    the batch form for ANY slicing. Output: the batch operator's
-    one-row schema ``(n_days, max_drawdown, trough_day)``."""
-    if n_slices < 1:
-        raise ValueError(
-            f"streaming_max_drawdown: n_slices must be >= 1, got {n_slices}"
-        )
-    root = _stream_scratch("dd_stream_")
-    stage = os.path.join(root, "staged")
-    os.makedirs(stage)
+    ``timeseries.max_drawdown`` on the shared day-grain fold
+    (:func:`_day_fold`; demeaning needs the FINAL global mean, so no
+    scalar fold can be exact mid-stream). The batch operator's
+    finishing readout (n-scaled deviations, exact running sum/max
+    windows, first trough day) runs once on the final day table.
+    Output: the batch operator's one-row schema ``(n_days,
+    max_drawdown, trough_day)``."""
+    from ..operators.timeseries import _drawdown_readout
 
-    src = events.select(
-        F.date_trunc("day", F.col(ts_col).cast("timestamp"))
-        .cast("date")
-        .alias("day"),
-        F.col(value_col).cast("decimal(30,6)").alias("v"),
-    ).where(F.col("day").isNotNull() & F.col("v").isNotNull())
-    if n_slices > 1:
-        fracs = ", ".join(repr(i / n_slices) for i in range(1, n_slices))
-        cuts = list(
-            src.select(
-                F.expr(f"percentile(unix_date(day), array({fracs}))").alias("_bs")
-            ).first()["_bs"]
-        )
-    else:
-        cuts = []
-    staged_schema = _stage_ordered_slices(
-        src, stage, _range_slice_id(F.unix_date(F.col("day")), cuts), n_slices
+    return _day_fold(
+        spark, "streaming_max_drawdown", events, ts_col, value_col, unit_scale,
+        n_slices, lambda daily: _drawdown_readout(daily, unit_scale),
     )
-
-    state_schema = "day date, sv decimal(38,6)"
-    sd = _VersionedState(root)
-
-    def fold_batch(batch_df, _epoch_id):
-        state = sd.read(spark, state_schema)
-        part = batch_df.groupBy("day").agg(
-            F.sum("v").cast("decimal(38,6)").alias("_bv")
-        )
-        merged = state.join(part, "day", "full").select(
-            "day",
-            (
-                F.coalesce(F.col("sv"), F.lit(0).cast("decimal(38,6)"))
-                + F.coalesce(F.col("_bv"), F.lit(0).cast("decimal(38,6)"))
-            )
-            .cast("decimal(38,6)")
-            .alias("sv"),
-        )
-        sd.write(merged)
-
-    try:
-        raw = (
-            spark.readStream.schema(staged_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        # batch finishing readout over the state (timeseries.max_drawdown
-        # from the day table onward — restated on the quantized totals)
-        from pyspark.sql import Window
-
-        daily = sd.read(spark, state_schema).select(
-            "day",
-            F.round(F.col("sv").cast("double") * F.lit(unit_scale))
-            .cast("long")
-            .alias("_x"),
-        )
-        dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-        tot = daily.agg(
-            F.count(F.lit(1)).cast("long").alias("_n"),
-            F.coalesce(F.sum(dec("_x")), F.lit(0).cast("decimal(38,0)")).alias("_t"),
-        )
-        staged_d = daily.crossJoin(F.broadcast(tot))
-        w = Window.orderBy(F.col("day").asc()).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        dev = (dec("_n") * dec("_x") - F.col("_t")).cast("decimal(38,0)")
-        cum = staged_d.select(
-            "day", "_n", F.sum(dev).over(w).cast("decimal(38,0)").alias("_c")
-        ).select(
-            "day", "_n", "_c",
-            F.max("_c").over(w).cast("decimal(38,0)").alias("_p"),
-        )
-        dd = cum.select(
-            "day", "_n",
-            (F.col("_p") - F.col("_c")).cast("decimal(38,0)").alias("_dd"),
-        )
-        top = dd.agg(F.max("_dd").alias("_mx"))
-        out = dd.crossJoin(F.broadcast(top)).where(F.col("_dd") == F.col("_mx"))
-        return out.groupBy().agg(
-            F.max("_n").cast("long").alias("n_days"),
-            (
-                F.max("_mx").cast("double")
-                / (F.max("_n").cast("double") * F.lit(float(unit_scale)))
-            ).alias("max_drawdown"),
-            F.when(F.max("_mx") > 0, F.min("day")).alias("trough_day"),
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def streaming_mase(
@@ -2008,126 +1638,18 @@ def streaming_mase(
     n_slices: int = 4,
 ) -> DataFrame:
     """Streaming MASE — the incremental twin of
-    ``timeseries.mase_seasonal_naive`` with the streaming_ols/
-    streaming_max_drawdown state discipline: the carried state is the
-    DAY-GRAIN total table (calendar-bounded — a |Δ| against a
-    neighbor day is NOT additive when either day spans two batches,
-    so the day merge is the associative unit), and the batch
-    finishing readout (quantize, date-shift equi-joins, two exact
-    |Δ| folds, one IEEE ratio) runs once on the final state.
-    Hash-matches the SAME DuckDB oracle as the batch form for ANY
-    slicing. Output: the batch operator's one-row schema
-    ``(n_seasonal_pairs, n_naive_pairs, mae_seasonal, mae_naive,
-    mase)``."""
-    if n_slices < 1:
-        raise ValueError(f"streaming_mase: n_slices must be >= 1, got {n_slices}")
+    ``timeseries.mase_seasonal_naive`` on the shared day-grain fold
+    (:func:`_day_fold`; a |Δ| against a neighbor day is NOT additive
+    when either day spans two batches). The batch operator's
+    finishing readout (date-shift equi-joins, two exact |Δ| folds, one
+    IEEE ratio) runs once on the final day table. Output: the batch
+    operator's one-row schema ``(n_seasonal_pairs, n_naive_pairs,
+    mae_seasonal, mae_naive, mase)``."""
     if season < 2:
         raise ValueError(f"streaming_mase: season must be >= 2, got {season}")
-    root = _stream_scratch("mase_stream_")
-    stage = os.path.join(root, "staged")
-    os.makedirs(stage)
+    from ..operators.timeseries import _mase_readout
 
-    src = events.select(
-        F.date_trunc("day", F.col(ts_col).cast("timestamp"))
-        .cast("date")
-        .alias("day"),
-        F.col(value_col).cast("decimal(30,6)").alias("v"),
-    ).where(F.col("day").isNotNull() & F.col("v").isNotNull())
-    if n_slices > 1:
-        fracs = ", ".join(repr(i / n_slices) for i in range(1, n_slices))
-        cuts = list(
-            src.select(
-                F.expr(f"percentile(unix_date(day), array({fracs}))").alias("_bs")
-            ).first()["_bs"]
-        )
-    else:
-        cuts = []
-    staged_schema = _stage_ordered_slices(
-        src, stage, _range_slice_id(F.unix_date(F.col("day")), cuts), n_slices
+    return _day_fold(
+        spark, "streaming_mase", events, ts_col, value_col, unit_scale, n_slices,
+        lambda daily: _mase_readout(daily, season, unit_scale),
     )
-
-    state_schema = "day date, sv decimal(38,6)"
-    sd = _VersionedState(root)
-
-    def fold_batch(batch_df, _epoch_id):
-        state = sd.read(spark, state_schema)
-        part = batch_df.groupBy("day").agg(
-            F.sum("v").cast("decimal(38,6)").alias("_bv")
-        )
-        merged = state.join(part, "day", "full").select(
-            "day",
-            (
-                F.coalesce(F.col("sv"), F.lit(0).cast("decimal(38,6)"))
-                + F.coalesce(F.col("_bv"), F.lit(0).cast("decimal(38,6)"))
-            )
-            .cast("decimal(38,6)")
-            .alias("sv"),
-        )
-        sd.write(merged)
-
-    try:
-        raw = (
-            spark.readStream.schema(staged_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        # batch finishing readout: mase_seasonal_naive from the day
-        # table onward, restated on the quantized totals
-        daily = sd.read(spark, state_schema).select(
-            "day",
-            F.round(F.col("sv").cast("double") * F.lit(unit_scale))
-            .cast("long")
-            .alias("_x"),
-        )
-        dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-
-        def _mae(shift: int, tag: str) -> DataFrame:
-            prev = daily.select(
-                F.date_add("day", shift).alias("day"), F.col("_x").alias("_p")
-            )
-            return (
-                daily.join(prev, "day")
-                .select(F.abs(dec(F.col("_x")) - dec(F.col("_p"))).alias("_a"))
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias(f"n_{tag}_pairs"),
-                    F.coalesce(F.sum("_a"), F.lit(0).cast("decimal(38,0)")).alias(
-                        f"_s_{tag}"
-                    ),
-                )
-            )
-
-        tot = _mae(season, "seasonal").crossJoin(F.broadcast(_mae(1, "naive")))
-        s = F.lit(float(unit_scale))
-        mae_s = (
-            F.col("_s_seasonal").cast("double")
-            / F.col("n_seasonal_pairs").cast("double")
-        )
-        mae_n = (
-            F.col("_s_naive").cast("double")
-            / F.col("n_naive_pairs").cast("double")
-        )
-        ok = (
-            (F.col("n_seasonal_pairs") > 0)
-            & (F.col("n_naive_pairs") > 0)
-            & (F.col("_s_naive") > 0)
-        )
-        return tot.select(
-            "n_seasonal_pairs",
-            "n_naive_pairs",
-            F.when(F.col("n_seasonal_pairs") > 0, F.round(mae_s / s, 9)).alias(
-                "mae_seasonal"
-            ),
-            F.when(F.col("n_naive_pairs") > 0, F.round(mae_n / s, 9)).alias(
-                "mae_naive"
-            ),
-            F.when(ok, F.round(mae_s / mae_n, 9)).alias("mase"),
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)

@@ -2,8 +2,10 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 import pytest
+from pyspark.sql.streaming import StreamingQueryListener
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -22,3 +24,40 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+class _MicroBatchCounter(StreamingQueryListener):
+    """Counts the micro-batches of every streaming query started while it
+    is registered (one progress event per executed batch)."""
+
+    def __init__(self) -> None:
+        self.started = self.ended = 0
+        self.batches: set[tuple[str, int]] = set()
+
+    def onQueryStarted(self, event) -> None:
+        self.started += 1
+
+    def onQueryProgress(self, event) -> None:
+        self.batches.add((str(event.progress.id), event.progress.batchId))
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        self.ended += 1
+
+    def count(self) -> int:
+        """Batches run so far, once every started query's events are in
+        (listener events arrive asynchronously, termination last)."""
+        deadline = time.monotonic() + 30
+        while self.ended < self.started and time.monotonic() < deadline:
+            time.sleep(0.05)
+        return len(self.batches)
+
+
+@pytest.fixture
+def micro_batches(spark):
+    counter = _MicroBatchCounter()
+    spark.streams.addListener(counter)
+    yield counter
+    spark.streams.removeListener(counter)

@@ -2860,7 +2860,7 @@ def test_bm25_from_tf_equals_text_path(spark):
     assert sorted(a) == sorted(b) and len(a) == 3  # doc 4 matches no term
 
 
-def test_bottomk_merge_and_estimator(spark):
+def test_bottomk_merge_and_estimator(spark, micro_batches):
     """KMV contracts: (a) bottomk over a union equals the merge of the
     parts' bottomks (the property that makes the sampler streamable);
     (b) the sample is partitioning-independent; (c) the distinct
@@ -2901,9 +2901,10 @@ def test_bottomk_merge_and_estimator(spark):
         spark, df.repartitionByRange(4, "doc_id"), "doc_id", k
     )
     assert ids(streamed) == base
+    assert micro_batches.count() >= 2  # the merge branch ran
 
 
-def test_streaming_anchor_index_equals_batch(spark):
+def test_streaming_anchor_index_equals_batch(spark, micro_batches):
     """The streaming anchor-index fold accumulated over micro-batches
     equals the batch rebuild over all pages — both tf and the
     distinct-doc count (each page's links live in exactly one
@@ -2935,6 +2936,7 @@ def test_streaming_anchor_index_equals_batch(spark):
         (r.canon, r.token): (r.tf, r.n_docs) for r in df.collect()
     }
     assert key(streamed) == key(batch)
+    assert micro_batches.count() >= 2  # the merge branch ran
 
 
 def test_streaming_linkage_probe_equals_batch(spark):
@@ -4543,7 +4545,7 @@ def test_blocklist_filter_semantics(spark):
     assert strict == {2, 4, 5}
 
 
-def test_cms_properties_and_streaming_fold(spark):
+def test_cms_properties_and_streaming_fold(spark, micro_batches):
     """CMS guarantees: estimate >= true count for every value;
     merge ≡ build-on-union exactly; the streaming fold equals one
     batch build over everything seen; depth/width sanity guards."""
@@ -4573,8 +4575,9 @@ def test_cms_properties_and_streaming_fold(spark):
     )
     assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, sk.collect()))
 
-    folded = streaming_cms(spark, df, "w", depth=4, width=64)
+    folded = streaming_cms(spark, df.repartition(4), "w", depth=4, width=64)
     assert sorted(map(tuple, folded.collect())) == sorted(map(tuple, sk.collect()))
+    assert micro_batches.count() >= 2  # the merge branch ran
 
     with _pytest.raises(ValueError):
         cms_build(df, "w", depth=0)

@@ -476,12 +476,12 @@ def test_streaming_curation_equals_batch_stages(spark, sf_dir):
     surv = decontaminate_incremental(surv, grams, "text", "doc_id", min_hits=3)
     want = sorted(r.doc_id for r in surv.collect())
 
-    # first-arrival-wins: which of the duplicate pair {20, 900}
-    # survives depends on file-arrival order (same-mtime listing order
-    # is not guaranteed), so assert EXACTLY ONE survives and the rest
-    # of the answer matches the batch stages exactly
+    # first-arrival-wins: micro-batches arrive in input-partition
+    # order, so of the duplicate pair {20, 900} the copy in the first
+    # range partition survives, and the rest of the answer matches the
+    # batch stages exactly
     dup_pair = {20, 900}
-    assert len(dup_pair & set(got)) == 1  # cross-batch dedup fired
+    assert dup_pair & set(got) == {20}  # cross-batch dedup fired
     assert sorted(set(got) - dup_pair) == sorted(set(want) - dup_pair) and got
     assert 101 not in got  # corpus copy dropped at the exact stage
     assert 305 not in got  # bench copy dropped at decontamination

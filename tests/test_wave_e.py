@@ -168,7 +168,7 @@ def test_soundex_blocking_pairs_contract(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_streaming_skyline_equals_batch(spark):
+def test_streaming_skyline_equals_batch(spark, micro_batches):
     from dlp_rdb_bq_import_spark.operators.sampling import skyline
     from dlp_rdb_bq_import_spark.streaming.jobs import streaming_skyline
 
@@ -191,3 +191,4 @@ def test_streaming_skyline_equals_batch(spark):
         ).collect()
     }
     assert streamed == batch and len(batch) > 0
+    assert micro_batches.count() >= 2  # the merge branch ran

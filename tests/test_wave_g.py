@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def test_streaming_connected_components_equals_batch(spark):
+def test_streaming_connected_components_equals_batch(spark, micro_batches):
     from dlp_rdb_bq_import_spark.operators.graph import connected_components
     from dlp_rdb_bq_import_spark.streaming.jobs import (
         streaming_connected_components,
@@ -39,6 +39,7 @@ def test_streaming_connected_components_equals_batch(spark):
         ).collect()
     }
     assert streamed == batch
+    assert micro_batches.count() >= 2  # the merge branch ran
 
 
 def test_theil_sen_resists_planted_outliers(spark):
