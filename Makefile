@@ -6,10 +6,16 @@
 SF ?= /root/testdata/sf0.01
 BENCH_SF ?= /root/testdata/sf0.1
 
-.PHONY: test gate-full bench plan-lint
+# perfbench workload and seed (BENCHMARK.json lists the workloads)
+W ?= pipeline
+SEED ?= 1
 
+.PHONY: test gate-full bench perfbench plan-lint
+
+# the ROADMAP tier-1 command
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 gate-full:
 	python tools/compare_oracle.py --sf $(SF)
@@ -19,3 +25,6 @@ plan-lint:
 
 bench:
 	SPARK_GRAFT_SF_DIR=$(BENCH_SF) python bench.py
+
+perfbench:
+	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 10

@@ -21,19 +21,13 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from dlp_rdb_bq_import_spark import harness  # noqa: E402
+from dlp_rdb_bq_import_spark.session import sql_confs  # noqa: E402
 
 
 def _configure(spark: SparkSession) -> SparkSession:
     """Apply the engine's session posture to a driver-provided session
-    (idempotent; runtime-settable confs only)."""
-    for k, v in {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # events.parquet stores TIMESTAMP(NANOS); read as long + convert
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-    }.items():
+    (idempotent; the runtime-settable confs of ``session.sql_confs``)."""
+    for k, v in sql_confs().items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -2785,9 +2785,9 @@ def q_hll_sketch_rollup(spark, sf_dir):
 @query("dedup_clusters")  # iterative connected components — rows-only
 def q_dedup_clusters(spark, sf_dir):
     """Near-dup pairs → transitive duplicate clusters (min-id label).
-    Iterative label propagation is not SQL-expressible (the oracle
-    cannot state a fixpoint); correctness is pinned against a union-find
-    reference in tests/test_llm_ops.py."""
+    Rows-only; correctness is pinned against a union-find reference in
+    tests/test_llm_ops.py, and dedup_clusters_exact below hash-matches
+    a recursive-CTE oracle."""
     d = t(spark, sf_dir, "documents")
     pairs = dedup.minhash_dedup_pairs(
         d, "text", "doc_id", threshold=0.35, shingle_n=3, shingle_unit="word"
@@ -5883,7 +5883,7 @@ def q_entity_golden_records(spark, sf_dir):
 
     Scale shape: the match-edge graph tracks true duplicate density
     (not corpus size), closure runs on that small graph (driver
-    union-find below 1M edges, min-label rounds above), and the only
+    union-find up to 1M edges, star-contraction rounds above), and the only
     corpus-sized work is one left join against the cluster map plus
     the golden-record groupBy on entity_id. The reference's import
     pipeline ships duplicate source rows as-is (common/

@@ -766,145 +766,32 @@ def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _union_find_labels(pairs: list[tuple[int, int]]) -> dict[int, int]:
-    """Classic union-find with path compression; min element labels the
-    component."""
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {x: find(x) for x in parent}
-
-
-# Default driver_threshold for duplicate_clusters — module-level so a
-# soak/harness can lower it to force the distributed propagation path
-# (the r15 fixpoint-branch telemetry contract).
-_DRIVER_PAIR_THRESHOLD = 1_000_000
-
-
 def duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iterations: int = 20,
-    driver_threshold: int | None = None,
+    max_iterations: int = 50,
 ) -> DataFrame:
     """Connected components over near-dup pairs: (doc_id, cluster_id)
     where cluster_id is the minimum doc id in the component. Pair lists
     alone don't dedup a corpus — transitive closure does (a~b, b~c must
     collapse to ONE keeper even when a~c was never emitted).
 
-    Adaptive strategy, same spirit as AQE's broadcast decision: the pair
-    set is orders of magnitude smaller than the corpus (it's the near-
-    dup graph, not the data), so up to ``driver_threshold`` pairs it is
-    collected and solved with union-find in milliseconds driver-side —
-    one Spark job instead of one per propagation round. Above the
-    threshold, iterative min-label propagation runs as a driver-side
-    loop of DataFrame joins: each round every node takes the min of its
-    own and its neighbors' labels, converging in O(component diameter)
-    rounds (near-dup components are shallow stars). ``localCheckpoint``
-    cuts plan lineage each round; a changed-label count is the early
-    exit.
+    The ids are cast to long and solved by ``graph.connected_components``:
+    driver union-find up to its measured edge bound, star contraction
+    (O(log n) rounds, at most ``max_iterations``) past it.
 
     Only ids that appear in some pair are emitted; singletons are their
     own implicit cluster (callers: see ``dedup_keep_representative``).
     """
-    if driver_threshold is None:
-        driver_threshold = _DRIVER_PAIR_THRESHOLD
-    if max_iterations < 1:
-        raise ValueError(
-            f"max_iterations must be >= 1, got {max_iterations} — the "
-            "non-convergence check needs at least one propagation round"
-        )
-    # Materialize the edge list ONCE (localCheckpoint is eager): pairs
-    # may be the tail of an expensive pipeline (minhash → LSH → verify),
-    # and everything below references it repeatedly — without this the
-    # upstream pipeline would recompute per action.
-    plain = pairs.select(
+    from .graph import connected_components
+
+    edges = pairs.select(
         F.col(id_a).cast("long").alias("src"), F.col(id_b).cast("long").alias("dst")
-    ).localCheckpoint()
-    if plain.count() <= driver_threshold:
-        labels = _union_find_labels([(r["src"], r["dst"]) for r in plain.collect()])
-        from . import local_rows_df, note_fixpoint_branch
-
-        note_fixpoint_branch("duplicate_clusters", "driver")
-        return local_rows_df(
-            plain.sparkSession, list(labels.items()), "doc_id long, cluster_id long"
-        )
-    # staged on dst — the per-round label-join key — so each round
-    # reuses the edge partitioning and shuffles only the |V|-sized
-    # label table (graph._stage_edges: cached repartition survives AQE
-    # where a checkpoint's partitioning does not)
-    from . import note_fixpoint_branch
-    from .graph import _stage_edges
-
-    note_fixpoint_branch("duplicate_clusters", "distributed")
-    edges = _stage_edges(
-        plain.union(
-            plain.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct(),
-        "dst",
     )
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    ).localCheckpoint()
-    from .graph import _score_side
-
-    n_nodes = labels.count()
-    for _ in range(max_iterations):
-        nbr = (
-            edges.join(
-                _score_side(
-                    labels.select(
-                        F.col("id").alias("dst"), F.col("label").alias("dst_label")
-                    ),
-                    n_nodes,
-                ),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("dst_label").alias("nbr_label"))
-            .select(F.col("src").alias("id"), "nbr_label")
-        )
-        joined = (
-            labels.join(nbr, "id", "left")
-            .select(
-                F.col("id"),
-                F.col("label").alias("_old"),
-                F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias(
-                    "label"
-                ),
-            )
-            .localCheckpoint()
-        )
-        # convergence check reads the just-materialized checkpoint — no
-        # extra join against the previous labels
-        changed = joined.where(F.col("label") != F.col("_old")).count()
-        labels = joined.select("id", "label")
-        if changed == 0:
-            break
-    else:
-        # Exiting by exhausting max_iterations with labels still moving
-        # means some component's diameter exceeds the budget: two docs in
-        # one duplicate component would carry different cluster_ids and
-        # BOTH survive dedup_keep_representative. Fail loudly — silent
-        # partial dedup is the worst outcome for a curation pipeline.
-        raise RuntimeError(
-            f"duplicate_clusters: label propagation did not converge within "
-            f"max_iterations={max_iterations} ({changed} labels still changing); "
-            f"raise max_iterations (components deeper than the budget) or lower "
-            f"driver_threshold to use exact union-find"
-        )
-    return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
+    return connected_components(edges, max_iterations=max_iterations).select(
+        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
+    )
 
 
 def dedup_keep_representative(

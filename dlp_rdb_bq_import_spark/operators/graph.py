@@ -11,10 +11,9 @@ out-degree table computed once up front. Dangling mass (nodes with no
 out-edges) is redistributed uniformly each iteration via a single-row
 aggregate, so ranks sum to 1 exactly like the textbook formulation.
 ``localCheckpoint`` after every iteration cuts the lineage chain (the
-same discipline as the label-propagation path in
-``operators/dedup.py:duplicate_clusters``) — without it, iteration k
-replans k stacked shuffles and the job dies long before convergence at
-any scale.
+same discipline as the star-contraction rounds of
+``connected_components``) — without it, iteration k replans k stacked
+shuffles and the job dies long before convergence at any scale.
 
 At 100 TB the iteration cost is dominated by the contributions shuffle
 (|E| rows hashed by dst); skewed in-degree (every web graph) is AQE
@@ -158,8 +157,8 @@ def _node_index(rows):
 
 def _rank_index(rows):
     """Distinct endpoint values in SORTED order + int rank arrays, for
-    the exact-integer driver fixpoints (connected_components / kcore /
-    label_propagation) whose recurrences compare node ids by VALUE
+    the exact-integer driver fixpoints (kcore / label_propagation)
+    whose recurrences compare node ids by VALUE
     (min / least / tie-breaks): rank order == value order, so every
     comparison on ranks reproduces the Spark comparison on values.
     Only used for dtypes where Python ordering provably equals Spark
@@ -184,6 +183,26 @@ def _driver_orderable(dtype) -> bool:
         dtype,
         (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.StringType),
     )
+
+
+def _union_find_labels(pairs) -> dict:
+    """Union-find with path halving over ``(a, b)`` pairs: node → the
+    minimum node of its component (the min-id labelling of
+    ``connected_components``). Node values must be ``_driver_orderable``."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
 
 
 def triangle_count(
@@ -1195,24 +1214,28 @@ def connected_components(
     dst_col: str = "dst",
     max_iterations: int = 50,
 ) -> DataFrame:
-    """Connected components by alternating large-star/small-star
-    contraction (Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii,
-    SoCC 2014 — "Connected Components in MapReduce and Beyond"): each
-    round hangs every node off the minimum id in its neighborhood, so
-    component trees flatten in O(log n) ROUNDS regardless of graph
-    diameter — the scale path where per-hop propagation (the
-    label-propagation strategy in ``dedup.duplicate_clusters``, or
-    BFS) needs O(diameter) rounds and dies on long chains.
-
-    Returns ``(node, component)`` with component = the MINIMUM node id
-    of the component (deterministic, partitioning-independent — the
-    same labeling the recursive-CTE oracle and union-find produce).
-    Nodes with no edges never reach an edge-driven operator; union
-    singleton rows downstream if the node universe matters. A node
-    whose ONLY incident edges are self-loops IS emitted, as its own
+    """Connected components, labelled by the MINIMUM node id of each
+    component: ``(node, component)``, deterministic and
+    partitioning-independent (the labelling the recursive-CTE oracle
+    produces). Nodes with no edges never reach an edge-driven operator;
+    union singleton rows downstream if the node universe matters. A
+    node whose ONLY incident edges are self-loops IS emitted, as its own
     singleton ``(node, node)`` component — a self-loop carries no
-    connectivity but does assert the node exists, so dropping it
-    would silently shrink the node universe of the edge list.
+    connectivity but does assert the node exists, so dropping it would
+    silently shrink the node universe of the edge list. NULL endpoints
+    are dropped.
+
+    Measured-size branch (see ``_DRIVER_FIXPOINT_EDGE_BOUND``): up to
+    the bound the edge list is collected and solved by union-find on the
+    driver — no rounds, one collect. Past it (or for ids whose Python
+    order is not Spark's, see ``_driver_orderable``) the components come
+    from alternating large-star/small-star contraction (Kiveris,
+    Lattanzi, Mirrokni, Rastogi & Vassilvitskii, SoCC 2014 — "Connected
+    Components in MapReduce and Beyond"): each round hangs every node
+    off the minimum id in its neighborhood, so component trees flatten
+    in O(log n) ROUNDS regardless of graph diameter, where per-hop
+    propagation needs O(diameter) rounds and dies on long chains. The
+    min-id labelling is unique, so both branches emit the same rows.
 
     Per round: large-star (symmetrize → per-center min → re-hang
     larger neighbors) then small-star (orient to the larger endpoint →
@@ -1221,103 +1244,38 @@ def connected_components(
     ``localCheckpoint`` lineage cut. Convergence = the small-star
     output IS its input (set equality via count + subtract — exact,
     not a checksum); at the fixpoint every edge is (component-min,
-    node) by construction."""
+    node) by construction. ``max_iterations`` bounds the rounds; a
+    contraction still moving after it raises."""
+    if max_iterations < 1:
+        raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
     reserved = {"node", "component", "_u", "_v", "_m"}
     clash = reserved & {src_col, dst_col}
     if clash:
         raise ValueError(f"edge columns collide with reserved names: {sorted(clash)}")
-    raw = edges.select(
-        F.least(F.col(src_col), F.col(dst_col)).alias("_u"),
-        F.greatest(F.col(src_col), F.col(dst_col)).alias("_v"),
-    ).where(F.col("_u").isNotNull() & F.col("_v").isNotNull())
-    e = (
-        raw.where(F.col("_u") < F.col("_v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    # Lazy checkpoint: the count materializes it, and the driver
+    # branch's collect reads it back — the input pipeline (often minhash
+    # → LSH → verify) runs once, with no shuffle before the branch.
+    raw = (
+        edges.select(
+            F.least(F.col(src_col), F.col(dst_col)).alias("_u"),
+            F.greatest(F.col(src_col), F.col(dst_col)).alias("_v"),
+        )
+        .where(F.col("_u").isNotNull() & F.col("_v").isNotNull())
+        .localCheckpoint(eager=False)
     )
-    m = e.count()
-    # measured-size driver fixpoint (see _DRIVER_FIXPOINT_EDGE_BOUND):
-    # star contraction is an EXACT integer recurrence (min-id hanging,
-    # set-equality convergence), so the driver twin below replays the
-    # IDENTICAL large-star/small-star rounds on rank-encoded numpy
-    # arrays — same round structure, same convergence test, same
-    # max_iterations contract, bit-identical (node, component) output.
-    # Large graphs run the distributed loop unchanged.
-    if m <= _DRIVER_FIXPOINT_EDGE_BOUND and _driver_orderable(
-        e.schema[0].dataType
-    ):
-        rows = _collect_clean_edges(e, 2)
-        if rows is not None:
-            note_fixpoint_branch("connected_components", "driver")
-            import numpy as np
+    dt = raw.schema[0].dataType
+    if raw.count() <= _DRIVER_FIXPOINT_EDGE_BOUND and _driver_orderable(dt):
+        note_fixpoint_branch("connected_components", "driver")
+        from pyspark.sql import types as T
 
-            from pyspark.sql import types as T
-
-            spark = edges.sparkSession
-            dt = e.schema[0].dataType
-            schema = T.StructType(
-                [
-                    T.StructField("node", dt),
-                    T.StructField("component", dt),
-                ]
-            )
-            loop_vals = [
-                r[0]
-                for r in raw.where(F.col("_u") == F.col("_v"))
-                .select(F.col("_u").alias("node"))
-                .distinct()
-                .collect()
-            ]
-            vals, _rank, ui, vi = _rank_index(rows)
-            n = len(vals)
-            e_codes = np.unique(ui * np.int64(n) + vi)
-            for _ in range(max_iterations):
-                eu, ev = e_codes // n, e_codes % n
-                U = np.concatenate([eu, ev])
-                V = np.concatenate([ev, eu])
-                mins = np.full(n, n, dtype=np.int64)
-                np.minimum.at(mins, U, V)
-                # large-star: strictly-larger neighbors re-hang on the min
-                lmask = V > U
-                lu = np.minimum(mins[U], U)[lmask]
-                lv = V[lmask]
-                lkeep = lu < lv
-                large = np.unique(lu[lkeep] * np.int64(n) + lv[lkeep])
-                # small-star: center = larger endpoint; everything
-                # (center included) re-hangs on the neighborhood min
-                cu = large % n  # center (the larger endpoint)
-                cv = large // n  # its smaller neighbor
-                mins2 = np.full(n, n, dtype=np.int64)
-                np.minimum.at(mins2, cu, cv)
-                centers = np.unique(cu)
-                hang_u = np.concatenate(
-                    [mins2[centers], mins2[cu][cv != mins2[cu]]]
-                )
-                hang_v = np.concatenate([centers, cv[cv != mins2[cu]]])
-                nkeep = hang_u < hang_v
-                new_codes = np.unique(
-                    hang_u[nkeep] * np.int64(n) + hang_v[nkeep]
-                )
-                same = new_codes.size == e_codes.size and np.array_equal(
-                    new_codes, e_codes
-                )
-                e_codes = new_codes
-                if same:
-                    eu, ev = e_codes // n, e_codes % n
-                    out = {(vals[int(b)], vals[int(a)]) for a, b in zip(eu, ev)}
-                    out |= {(vals[int(a)], vals[int(a)]) for a in np.unique(eu)}
-                    endpoint_vals = set(vals)
-                    out |= {
-                        (s, s) for s in loop_vals if s not in endpoint_vals
-                    }
-                    return local_rows_df(spark, sorted(out), schema)
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iterations} "
-                "rounds (the star contraction needs O(log n) — this "
-                "indicates a bug or an adversarial id space, not normal "
-                "data)"
-            )
+        labels = _union_find_labels(raw.collect())
+        schema = T.StructType(
+            [T.StructField("node", dt), T.StructField("component", dt)]
+        )
+        return local_rows_df(edges.sparkSession, sorted(labels.items()), schema)
     note_fixpoint_branch("connected_components", "distributed")
+    e = raw.where(F.col("_u") < F.col("_v")).distinct().localCheckpoint(eager=True)
+    m = e.count()
     # self-loop-only nodes: the _u < _v canonicalization discards
     # self-loops (they carry no connectivity), but a node whose only
     # incident edge is a self-loop must still appear — as its own

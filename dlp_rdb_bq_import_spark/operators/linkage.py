@@ -44,8 +44,8 @@ def assign_entity_ids(
     edge list (typically :func:`score_candidate_pairs` filtered to
     ``verdict = 'match'``); transitive closure assigns every matched
     record the MINIMUM record id of its connected component
-    (``dedup.duplicate_clusters`` — driver union-find below its pair
-    threshold, min-label propagation above it), and unmatched records
+    (``dedup.duplicate_clusters`` — driver union-find up to the graph
+    edge bound, star contraction above it), and unmatched records
     become singleton entities labeled by their own id. Returns
     ``records`` plus a long ``entity_id`` column.
 

@@ -19,21 +19,52 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def get_spark(
-    app_name: str = "dlp_rdb_bq_import_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
-    cpus = default_parallelism()
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+def sql_confs() -> dict[str, str]:
+    """The engine's runtime-settable SQL confs: ``get_spark`` sets them
+    on the builder and ``__spark_entry__._configure`` on a session it is
+    handed, so both run the same plans."""
+    return {
         # Shuffle sizing: ~cores locally. On a real cluster this would be
         # sized to data volume (AQE coalesces down from a high initial
         # number); at 100 TB you set the *initial* partition count high
         # (e.g. 2000+) and let adaptive coalescing right-size each stage.
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        "spark.sql.shuffle.partitions": str(default_parallelism()),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        # AQE coalescing floor: the default 1 MB minPartitionSize lets
+        # the coalescer collapse a small-byte stage to ONE task even
+        # when its CPU-per-byte is enormous (this package's regex/text/
+        # graph-expansion stages: e.g. web_curation's block-classify
+        # reduce — 1.5 MB, 1.4 s of single-task CPU at the default).
+        # 64 KB keeps such stages parallel; measured in-process A/B
+        # min-of-3 at sf0.1 local[32]: web_curation 2.83→1.76,
+        # record_linkage_review 2.49→1.31, clustering_coeff 2.98→1.89,
+        # assortativity 3.12→1.82, CC star 3.13→2.12, TPC-H and the
+        # dedup family flat (±0.1 s). Scale-safe: parallelismFirst
+        # already targets bytes/defaultParallelism, so this floor only
+        # binds on stages tiny relative to the cluster.
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        # Parquet scans: 128 MB split targets; vectorized reader on.
+        "spark.sql.files.maxPartitionBytes": "134217728",
+        "spark.sql.parquet.filterPushdown": "true",
+        # Fixture `events` stores TIMESTAMP(NANOS) which Spark's vectorized
+        # reader rejects; read as long and convert (values are µs-precision).
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+    }
+
+
+def get_spark(
+    app_name: str = "dlp_rdb_bq_import_spark",
+    master: str | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> SparkSession:
+    builder = (
+        SparkSession.builder.appName(app_name)
+        .master(master or f"local[{default_parallelism()}]")
         # Shuffle writer: always the sort-based writer. The bypass-merge
         # writer (default below 200 reduce partitions when there is no
         # map-side combine) opens one file stream PER REDUCER PER MAP
@@ -48,33 +79,9 @@ def get_spark(
         # R exceeds the 200 default anyway, so forcing the sort writer
         # is the scale-consistent posture, not a local tune.
         .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE coalescing floor: the default 1 MB minPartitionSize lets
-        # the coalescer collapse a small-byte stage to ONE task even
-        # when its CPU-per-byte is enormous (this package's regex/text/
-        # graph-expansion stages: e.g. web_curation's block-classify
-        # reduce — 1.5 MB, 1.4 s of single-task CPU at the default).
-        # 64 KB keeps such stages parallel; measured in-process A/B
-        # min-of-3 at sf0.1 local[32]: web_curation 2.83→1.76,
-        # record_linkage_review 2.49→1.31, clustering_coeff 2.98→1.89,
-        # assortativity 3.12→1.82, CC star 3.13→2.12, TPC-H and the
-        # dedup family flat (±0.1 s). Scale-safe: parallelismFirst
-        # already targets bytes/defaultParallelism, so this floor only
-        # binds on stages tiny relative to the cluster.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Parquet scans: 128 MB split targets; vectorized reader on.
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        # Fixture `events` stores TIMESTAMP(NANOS) which Spark's vectorized
-        # reader rejects; read as long and convert (values are µs-precision).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config(map=sql_confs())
     )
     # Deployment-parameterised overrides (cluster posture differs from
     # the local default): JSON dict of spark conf key -> value, applied

@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 
 from dlp_rdb_bq_import_spark.operators import (
     dedup,
+    graph,
     sampling,
     similarity,
     text as text_ops,
@@ -471,32 +472,34 @@ def _union_find_clusters(pairs: list[tuple[int, int]]) -> dict[int, int]:
     return {x: find(x) for x in parent}
 
 
-@pytest.mark.parametrize("driver_threshold", [1_000_000, 0])
-def test_duplicate_clusters_matches_union_find(spark, driver_threshold):
+@pytest.mark.parametrize("bound", [1_000_000, 0])
+def test_duplicate_clusters_matches_union_find(spark, monkeypatch, bound):
     """Chains, stars, disjoint components — transitive closure must
     match union-find even for pairs never directly emitted (a~b, b~c
-    ⇒ a,c share a cluster). Both strategies checked: driver-side
-    union-find (small pair sets) and distributed label propagation
-    (threshold forced to 0)."""
+    ⇒ a,c share a cluster). Both branches checked: driver-side
+    union-find (small pair sets) and distributed star contraction
+    (graph edge bound forced to 0)."""
+    monkeypatch.setattr(graph, "_DRIVER_FIXPOINT_EDGE_BOUND", bound)
     pairs = [(1, 2), (2, 3), (3, 4), (4, 5),  # 5-chain: needs propagation depth
              (10, 11), (10, 12), (10, 13),    # star
              (20, 21)]                         # pair
     pdf = spark.createDataFrame(pairs, ["id_a", "id_b"])
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup.duplicate_clusters(pdf, driver_threshold=driver_threshold).collect()
+        for r in dedup.duplicate_clusters(pdf).collect()
     }
     assert got == _union_find_clusters(pairs)
 
 
-def test_duplicate_clusters_raises_on_non_convergence(spark):
-    """Exhausting max_iterations with labels still moving must raise —
-    silently returning partially-merged clusters would let two docs of
-    one duplicate component both survive dedup."""
+def test_duplicate_clusters_raises_on_non_convergence(spark, monkeypatch):
+    """Exhausting max_iterations with the contraction still moving must
+    raise — silently returning partially-merged clusters would let two
+    docs of one duplicate component both survive dedup."""
+    monkeypatch.setattr(graph, "_DRIVER_FIXPOINT_EDGE_BOUND", 0)
     chain = [(i, i + 1) for i in range(12)]
     pdf = spark.createDataFrame(chain, ["id_a", "id_b"])
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.duplicate_clusters(pdf, driver_threshold=0, max_iterations=2)
+        dedup.duplicate_clusters(pdf, max_iterations=2)
 
 
 def test_dedup_keep_representative(spark):
@@ -1132,12 +1135,12 @@ def test_dedup_caches_released_after_action(spark, sf_dir):
 
 
 def test_label_propagation_distributed_at_scale(spark):
-    """>1e6 pairs forces the distributed min-label-propagation branch
-    (driver_threshold default 1e6). 260k disjoint 5-node chains have an
-    analytically known answer — cluster_id = block start — and diameter
-    4, so propagation must converge well inside max_iterations."""
+    """>1e6 pairs forces the distributed star-contraction branch (graph
+    edge bound default 1e6). 260k disjoint 5-node chains have an
+    analytically known answer — cluster_id = block start — so the
+    contraction must converge well inside max_iterations."""
     block = 5
-    n_blocks = 260_000  # 260k * 4 = 1.04M edges > driver_threshold
+    n_blocks = 260_000  # 260k * 4 = 1.04M edges > the driver edge bound
     edges = (
         spark.range(n_blocks * block)
         .where((F.col("id") % block) != block - 1)
@@ -1151,15 +1154,33 @@ def test_label_propagation_distributed_at_scale(spark):
     assert bad == 0
 
 
-def test_label_propagation_nonconvergence_raises(spark):
+def test_label_propagation_nonconvergence_raises(spark, monkeypatch):
     """A 30-deep chain cannot converge in 3 rounds: the distributed
     branch must fail loudly (silent partial dedup would let both copies
     of a duplicate survive)."""
+    monkeypatch.setattr(graph, "_DRIVER_FIXPOINT_EDGE_BOUND", 0)
     edges = spark.range(30).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.duplicate_clusters(edges, max_iterations=3, driver_threshold=0)
+        dedup.duplicate_clusters(edges, max_iterations=3)
+
+
+def test_deep_duplicate_component_converges(spark, monkeypatch):
+    """The same 30-hop chain on the distributed branch at the default
+    max_iterations: star contraction needs O(log n) rounds, not one per
+    hop, so all 31 ids land in cluster 0."""
+    from dlp_rdb_bq_import_spark.operators import FIXPOINT_BRANCHES
+
+    monkeypatch.setattr(graph, "_DRIVER_FIXPOINT_EDGE_BOUND", -1)
+    edges = spark.range(30).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    key = ("connected_components", "distributed")
+    before = FIXPOINT_BRANCHES.get(key, 0)
+    got = {r["doc_id"]: r["cluster_id"] for r in dedup.duplicate_clusters(edges).collect()}
+    assert FIXPOINT_BRANCHES.get(key, 0) == before + 1
+    assert got == {i: 0 for i in range(31)}
 
 
 def test_tfidf_top_terms_hand_computed(spark):

@@ -249,8 +249,9 @@ def test_extract_features_ignores_with_meta(spark):
 
 
 def test_integer_fixpoint_driver_paths_bit_identical(spark, monkeypatch):
-    """connected_components / kcore / label_propagation driver twins
-    are EXACT integer recurrences — the fast path must equal the
+    """The kcore / label_propagation driver twins are EXACT integer
+    recurrences and connected_components' driver union-find yields the
+    same unique min-id labelling — each fast path must equal the
     distributed loop bit-for-bit (not to tolerance), including
     self-loop singletons, string node ids, and the max_iterations
     error contracts."""
@@ -288,19 +289,24 @@ def test_integer_fixpoint_driver_paths_bit_identical(spark, monkeypatch):
     assert dict(fast["k2"]) == {1: 2, 2: 2, 3: 2}
     monkeypatch.undo()
 
-    # error contracts: identical on both paths
+    # error contracts: identical on both paths (connected_components'
+    # union-find branch has no rounds, so only its distributed loop can
+    # run out of them)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "src long, dst long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         graph.kcore(chain, k=2, max_iterations=1)
-    with pytest.raises(RuntimeError, match="did not converge"):
+    with pytest.raises(ValueError, match="max_iterations"):
         graph.connected_components(chain, max_iterations=0)
+    assert len(graph.connected_components(chain, max_iterations=1).collect()) == 13
     monkeypatch.setattr(graph, "_DRIVER_FIXPOINT_EDGE_BOUND", -1)
     with pytest.raises(RuntimeError, match="did not converge"):
         graph.kcore(chain, k=2, max_iterations=1)
-    with pytest.raises(RuntimeError, match="did not converge"):
+    with pytest.raises(ValueError, match="max_iterations"):
         graph.connected_components(chain, max_iterations=0)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph.connected_components(chain, max_iterations=1)
 
 
 def test_fan_out_preserves_rows_and_widens(spark):

@@ -158,17 +158,17 @@ def test_attach_media_per_row_dispatch_matches_scalar(spark):
 
 def test_fixpoint_branch_telemetry(spark, monkeypatch):
     from dlp_rdb_bq_import_spark import operators as ops
-    from dlp_rdb_bq_import_spark.operators import dedup
+    from dlp_rdb_bq_import_spark.operators import dedup, graph
 
     pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
     before = dict(ops.FIXPOINT_BRANCHES)
     dedup.duplicate_clusters(pairs).collect()
-    assert ops.FIXPOINT_BRANCHES.get(("duplicate_clusters", "driver"), 0) > before.get(
-        ("duplicate_clusters", "driver"), 0
+    assert ops.FIXPOINT_BRANCHES.get(("connected_components", "driver"), 0) > before.get(
+        ("connected_components", "driver"), 0
     )
-    monkeypatch.setattr(dedup, "_DRIVER_PAIR_THRESHOLD", 0)
+    monkeypatch.setattr(graph, "_DRIVER_FIXPOINT_EDGE_BOUND", 0)
     before = dict(ops.FIXPOINT_BRANCHES)
     dedup.duplicate_clusters(pairs).collect()
     assert ops.FIXPOINT_BRANCHES.get(
-        ("duplicate_clusters", "distributed"), 0
-    ) > before.get(("duplicate_clusters", "distributed"), 0)
+        ("connected_components", "distributed"), 0
+    ) > before.get(("connected_components", "distributed"), 0)

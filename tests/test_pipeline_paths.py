@@ -207,25 +207,6 @@ def test_transform_binding_end_to_end(spark, tmp_path):
     assert restored == {1: "AliceSmith", 2: "BobJones"}
 
 
-def test_sql_registered_tokenize_roundtrip(spark):
-    """The SQL surface: SELECT detokenize(tokenize(col)) must round-trip
-    inside a plain spark.sql query (SURVEY.md §7.3 exposure)."""
-    from dlp_rdb_bq_import_spark.functions.tokenize import make_sql_udfs
-
-    template = DeidTemplate(name="sql-udfs", key=KEY)
-    make_sql_udfs(spark, template)
-    spark.createDataFrame(
-        [("4111111111111111",), ("abcDEF123",)], ["v"]
-    ).createOrReplaceTempView("sql_udf_src")
-    rows = spark.sql(
-        "SELECT v, tokenize(v) AS tok, detokenize(tokenize(v)) AS back FROM sql_udf_src"
-    ).collect()
-    for r in rows:
-        assert r["tok"] != r["v"]
-        assert len(r["tok"]) == len(r["v"])  # format-preserving
-        assert r["back"] == r["v"]
-
-
 def test_reid_pipeline_publishes_detokenized_json(spark, tmp_path):
     """Full reid path: tokenized view → run_reid(template + column_map +
     output_dir) → JSON batches contain the ORIGINAL values under the

@@ -55,7 +55,7 @@ def main() -> None:
     ap.add_argument(
         "--fixpoint-bound", type=int, default=0,
         help="override the measured-size driver-fixpoint bounds "
-        "(graph/k-center/BPE/union-find) so the soak TIMES the "
+        "(graph incl. union-find CC, k-center, BPE) so the soak TIMES the "
         "distributed loops (default 0 = always distributed; pass -1 "
         "to keep production bounds, in which case the branch guard "
         "may fire)")
@@ -70,7 +70,6 @@ def main() -> None:
     spark = get_spark(app_name="soak_full")
     if args.fixpoint_bound >= 0:
         from dlp_rdb_bq_import_spark.operators import (
-            dedup as _dd,
             graph as _g,
             similarity as _sim,
             text as _tx,
@@ -81,7 +80,6 @@ def main() -> None:
         _sim._KCENTER_DRIVER_CELLS = args.fixpoint_bound
         _tx._BPE_DRIVER_VOCAB_ROWS = args.fixpoint_bound
         _tx._BPE_DRIVER_VOCAB_CHARS = args.fixpoint_bound
-        _dd._DRIVER_PAIR_THRESHOLD = args.fixpoint_bound
         print(f"fixpoint driver bounds overridden to {args.fixpoint_bound}")
     spark.range(1000).count()  # JVM/codegen warmup
     qs = harness.queries()
