@@ -2,7 +2,12 @@
 
 from __future__ import annotations
 
+import logging
+from typing import Callable, TypeVar
+
 from pyspark.sql import DataFrame, SparkSession
+
+_P = TypeVar("_P")
 
 
 def fan_out(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -142,12 +147,25 @@ def _local_rows_arrow_ok(rows, struct) -> bool:
     return True
 
 
+# The one driver-or-distributed bound of the dual-path operators
+# (pagerank, personalized_pagerank, hits, kcore, label_propagation,
+# connected_components, kcenter_sample, bpe_learn), counted in values
+# the driver branch would collect: 2 per edge, k-center rows × dim, BPE
+# vocab characters. 2M values is the 1M-edge bound the graph driver
+# fixpoints were measured at (r14: each eager round of a distributed
+# loop pays ~0.3 s of job overhead at any size). A module constant, not
+# an option: the tests and the sf1 soak set it (0 sends every non-empty
+# input to the distributed loop, -1 every input).
+DRIVER_VALUE_BOUND = 2_000_000
+
+_log = logging.getLogger("dlp_rdb_bq_import_spark")
+
 # (operator, branch) -> count of fixpoint invocations this process.
 # The soak asserts every fixpoint operator exercised its DISTRIBUTED
 # branch at least once at sf1 (r14 verdict: after the measured-size
 # driver fast paths landed, no *timed* run covered the distributed
 # loops at sf0.1 — a regression there could hide behind the driver
-# path; this counter plus one stderr line per invocation makes which
+# path; this counter plus one log record per invocation makes which
 # branch ran visible and assertable).
 FIXPOINT_BRANCHES: dict[tuple[str, str], int] = {}
 
@@ -155,8 +173,20 @@ FIXPOINT_BRANCHES: dict[tuple[str, str], int] = {}
 def note_fixpoint_branch(op: str, branch: str) -> None:
     """Record + log that measured-size fixpoint ``op`` took ``branch``
     ('driver' or 'distributed') for this invocation."""
-    import sys
-
     key = (op, branch)
     FIXPOINT_BRANCHES[key] = FIXPOINT_BRANCHES.get(key, 0) + 1
-    print(f"# fixpoint-branch {op}={branch}", file=sys.stderr)
+    _log.info("fixpoint-branch %s=%s", op, branch)
+
+
+def driver_payload(op: str, values: int, collect: Callable[[], _P | None]) -> _P | None:
+    """Decide and record the branch of dual-path operator ``op``.
+
+    ``values`` is the measured number of values its driver branch would
+    collect. Within ``DRIVER_VALUE_BOUND`` this calls ``collect()``,
+    which fetches the driver payload or returns None when the input is
+    not driver-safe (NULL endpoints, ragged vectors, ids whose Python
+    order is not Spark's). Returns the payload when the driver branch
+    runs, None when the caller must run its distributed loop."""
+    payload = collect() if values <= DRIVER_VALUE_BOUND else None
+    note_fixpoint_branch(op, "distributed" if payload is None else "driver")
+    return payload

@@ -1,9 +1,20 @@
-"""Distributed graph operators over an edge DataFrame: PageRank,
-triangle counting, and k-core decomposition — the domain/source
+"""Distributed graph operators over an edge DataFrame: PageRank
+(global and personalized), HITS, triangle counting, k-core, label
+propagation, BFS/SSSP and connected components — the domain/source
 quality signals a web-scale crawl-curation pipeline ranks and prunes
 with (public algorithms: Page et al. 1999, Suri & Vassilvitskii 2011,
 Batagelj & Zaveršnik 2003; no reference counterpart — the reference
 has no graph surface).
+
+Six of them are dual-path: pagerank, personalized_pagerank, hits,
+kcore, label_propagation and connected_components count their
+materialized edge table, and ``_driver_edges`` hands the endpoint
+count to the package's one driver-or-distributed rule
+(``operators.driver_payload``). A graph within the bound runs as one
+collect plus a numpy loop on the driver — the distributed loop pays a
+fixed scheduler round-trip per round whatever the size — and a larger
+one runs the Spark loop described below. Both branches compute the
+same recurrence.
 
 Spark-first shape: each power iteration is one shuffle — contributions
 grouped by destination — plus a broadcast-able join against the
@@ -31,10 +42,12 @@ this, k iterations re-shuffle |E| k times, which at 100 TB of edges ×
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from . import local_rows_df, note_fixpoint_branch
+from . import driver_payload, local_rows_df
 
 
 # Above this many nodes the per-round score table stops being a safe
@@ -109,40 +122,43 @@ def _score_side(df: DataFrame, n_nodes: int) -> DataFrame:
     return F.broadcast(df) if n_nodes <= _BROADCAST_NODE_BOUND else df
 
 
-# Driver fast-path bound for the FIXED-ITERATION float fixpoints
-# (pagerank / personalized_pagerank / hits): when the edge table is at
-# most this many rows (counted on the materialized checkpoint the loop
-# pays anyway), the k-round power iteration runs as one collect + a
-# numpy scatter-add loop instead of k sequential scheduler round-trips
-# over kilobyte tables — the r14 measurement: each eager round costs a
-# fixed ~0.3 s of job overhead at ANY data size, so a host-graph HITS
-# spent >95% of its wall-clock scheduling. The recurrence, iteration
-# count, normalization cadence, dangling-mass handling and teleport
-# vector are IDENTICAL expressions; the only difference is float64
-# summation order (numpy scatter-add vs Spark partial aggregation),
-# which agrees to ~1 ulp — these operators are registered rows-only /
-# tolerance-pinned for exactly that class of reason, and the fast path
-# is pinned to the distributed loop at 1e-12 in tests/test_opt_r14.py.
-# Corpora past the bound run the distributed loop unchanged.
-_DRIVER_FIXPOINT_EDGE_BOUND = 1_000_000
+def _driver_edges(op: str, e: DataFrame, ordered: bool = False):
+    """The measured-size prelude of the dual-path graph operators:
+    count the materialized edge table ``e`` and hand its endpoint count
+    to the one driver-or-distributed rule (``operators.driver_payload``).
+    Returns ``(rows, m)``: the collected edge rows when the driver branch
+    runs (None for the distributed loop) and the count ``m``.
+
+    Rows holding a NULL (endpoint or weight) go distributed — null
+    semantics stay with the Spark loop — and so do ``ordered``
+    operators, whose recurrences compare node ids by value, when the
+    ids are not ``_driver_orderable``. The driver twins run the same
+    recurrence: the exact-integer ones (kcore, label propagation,
+    union-find CC) emit identical rows, the float power methods
+    (pagerank, personalized pagerank, hits) differ only in float64
+    summation order (numpy scatter-add vs Spark partial aggregation,
+    pinned to 1e-12 in tests/test_dual_path_parity.py)."""
+    m = e.count()
+
+    def collect():
+        if ordered and not _driver_orderable(e.schema[0].dataType):
+            return None
+        rows = e.collect()
+        return None if any(v is None for r in rows for v in r) else rows
+
+    return driver_payload(op, 2 * m, collect), m
 
 
-def _collect_clean_edges(e0: DataFrame, n_cols: int):
-    """Collect a materialized edge table for the driver fixpoint; None
-    when any endpoint (or weight) is NULL — null semantics stay with
-    the distributed path."""
-    rows = e0.collect()
-    for r in rows:
-        for i in range(n_cols):
-            if r[i] is None:
-                return None
-    return rows
+def _node_rows_df(e: DataFrame, rows, **cols) -> DataFrame:
+    """A driver branch's result: ``node`` (typed like ``e``'s first
+    column) plus ``cols`` (name → Spark type), built driver-locally."""
+    fields = [T.StructField("node", e.schema[0].dataType)]
+    fields += [T.StructField(c, t) for c, t in cols.items()]
+    return local_rows_df(e.sparkSession, rows, T.StructType(fields))
 
 
 def _node_index(rows):
     """Distinct src∪dst in first-seen order + int index arrays."""
-    import numpy as np
-
     idx: dict = {}
     for r in rows:
         if r[0] not in idx:
@@ -177,8 +193,6 @@ def _driver_orderable(dtype) -> bool:
     """True when Python's total order on the collected values is the
     same as Spark's (int family and strings). Floats are excluded (NaN
     ordering differs), as is anything exotic — those stay distributed."""
-    from pyspark.sql import types as T
-
     return isinstance(
         dtype,
         (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.StringType),
@@ -332,61 +346,38 @@ def kcore(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    m = canon.count()
-    # measured-size driver fixpoint (see _DRIVER_FIXPOINT_EDGE_BOUND):
     # peeling is an EXACT integer recurrence (degree counts, >= k
     # threshold), so the driver twin is bit-identical to the
     # distributed loop — same simultaneous-peel rounds, same
-    # max_iterations contract. Large graphs run the loop unchanged.
-    if m <= _DRIVER_FIXPOINT_EDGE_BOUND and _driver_orderable(
-        canon.schema[0].dataType
-    ):
-        rows = _collect_clean_edges(canon, 2)
-        if rows is not None:
-            note_fixpoint_branch("kcore", "driver")
-            import numpy as np
-
-            from pyspark.sql import types as T
-
-            spark = edges.sparkSession
-            schema = T.StructType(
-                [
-                    T.StructField("node", canon.schema[0].dataType),
-                    T.StructField("degree", T.LongType()),
-                ]
-            )
-            vals, _rank, ui, vi = _rank_index(rows)
-            n = len(vals)
-            for _ in range(max_iterations):
-                deg_arr = np.bincount(ui, minlength=n) + np.bincount(
-                    vi, minlength=n
+    # max_iterations contract.
+    rows, m = _driver_edges("kcore", canon, ordered=True)
+    if rows is not None:
+        vals, _rank, ui, vi = _rank_index(rows)
+        n = len(vals)
+        for _ in range(max_iterations):
+            deg_arr = np.bincount(ui, minlength=n) + np.bincount(vi, minlength=n)
+            keep = deg_arr >= k
+            n_keep = int(keep.sum())
+            if n_keep == int((deg_arr > 0).sum()):
+                return _node_rows_df(
+                    canon,
+                    [(vals[i], int(deg_arr[i])) for i in np.nonzero(keep)[0]],
+                    degree=T.LongType(),
                 )
-                present = deg_arr > 0
-                keep = deg_arr >= k
-                n_keep = int(keep.sum())
-                if n_keep == int(present.sum()):
-                    return local_rows_df(spark, 
-                        [
-                            (vals[i], int(deg_arr[i]))
-                            for i in np.nonzero(keep)[0]
-                        ],
-                        schema,
-                    )
-                mask = keep[ui] & keep[vi]
-                ui, vi = ui[mask], vi[mask]
-                if n_keep == 0:
-                    return local_rows_df(spark, [], schema)
-            raise RuntimeError(
-                f"kcore did not converge in {max_iterations} iterations "
-                "(raise max_iterations for very deep peeling chains)"
-            )
+            mask = keep[ui] & keep[vi]
+            ui, vi = ui[mask], vi[mask]
+            if n_keep == 0:
+                return _node_rows_df(canon, [], degree=T.LongType())
+        raise RuntimeError(
+            f"kcore did not converge in {max_iterations} iterations "
+            "(raise max_iterations for very deep peeling chains)"
+        )
 
     # staged on _u each round: the first (larger-side) semi-join then
     # reuses the edge partitioning and shuffles only the |V|-sized keep
     # set; the surviving-edge _v semi-join is the round's one edge
     # exchange. The previous round's cache unpins once its successor
     # materializes.
-    note_fixpoint_branch("kcore", "distributed")
     live = _stage_edges(canon, "_u", precounted=m)
 
     deg = None
@@ -457,61 +448,43 @@ def label_propagation(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    m = canon.count()
-    # measured-size driver fixpoint (see _DRIVER_FIXPOINT_EDGE_BOUND):
     # synchronous label propagation is an EXACT integer recurrence
     # (vote counts, count-desc/label-asc argmax), so the driver twin is
     # bit-identical — same rounds, same own-label vote, same stop rule.
-    if m <= _DRIVER_FIXPOINT_EDGE_BOUND and _driver_orderable(
-        canon.schema[0].dataType
-    ):
-        rows = _collect_clean_edges(canon, 2)
-        if rows is not None:
-            note_fixpoint_branch("label_propagation", "driver")
-            import numpy as np
-
-            from pyspark.sql import types as T
-
-            spark = edges.sparkSession
-            schema = T.StructType(
-                [
-                    T.StructField("node", canon.schema[0].dataType),
-                    T.StructField("community", canon.schema[0].dataType),
-                ]
-            )
-            if not rows:
-                return local_rows_df(spark, [], schema)
-            vals, _rank, ui, vi = _rank_index(rows)
-            n = len(vals)
-            A = np.concatenate([ui, vi])  # voting node
-            B = np.concatenate([vi, ui])  # its neighbor
-            own = np.arange(n, dtype=np.int64)
-            lbl = own.copy()
-            for _ in range(max_iterations):
-                votes_node = np.concatenate([A, own])
-                votes_lbl = np.concatenate([lbl[B], lbl])
-                code = votes_node * n + votes_lbl
-                uniq, cnt = np.unique(code, return_counts=True)
-                nodes_c = uniq // n
-                labels_c = uniq % n
-                order = np.lexsort((labels_c, -cnt, nodes_c))
-                nodes_o = nodes_c[order]
-                first = np.ones(len(nodes_o), dtype=bool)
-                first[1:] = nodes_o[1:] != nodes_o[:-1]
-                new_lbl = lbl.copy()
-                new_lbl[nodes_o[first]] = labels_c[order][first]
-                changed = int((new_lbl != lbl).sum())
-                lbl = new_lbl
-                if changed == 0:
-                    break
-            return local_rows_df(spark, 
-                [(vals[i], vals[lbl[i]]) for i in range(n)], schema
-            )
+    rows, _ = _driver_edges("label_propagation", canon, ordered=True)
+    if rows is not None:
+        vals, _rank, ui, vi = _rank_index(rows)
+        n = len(vals)
+        A = np.concatenate([ui, vi])  # voting node
+        B = np.concatenate([vi, ui])  # its neighbor
+        own = np.arange(n, dtype=np.int64)
+        lbl = own.copy()
+        for _ in range(max_iterations):
+            votes_node = np.concatenate([A, own])
+            votes_lbl = np.concatenate([lbl[B], lbl])
+            code = votes_node * n + votes_lbl
+            uniq, cnt = np.unique(code, return_counts=True)
+            nodes_c = uniq // n
+            labels_c = uniq % n
+            order = np.lexsort((labels_c, -cnt, nodes_c))
+            nodes_o = nodes_c[order]
+            first = np.ones(len(nodes_o), dtype=bool)
+            first[1:] = nodes_o[1:] != nodes_o[:-1]
+            new_lbl = lbl.copy()
+            new_lbl[nodes_o[first]] = labels_c[order][first]
+            changed = int((new_lbl != lbl).sum())
+            lbl = new_lbl
+            if changed == 0:
+                break
+        return _node_rows_df(
+            canon,
+            [(vals[i], vals[lbl[i]]) for i in range(n)],
+            community=canon.schema[0].dataType,
+        )
 
     # adjacency in both directions: (node, _nbr) — staged on _nbr, the
     # per-round label-join key, so each round shuffles only the
     # |V|-sized label table (module docstring)
-    note_fixpoint_branch("label_propagation", "distributed")
     adj = _stage_edges(
         canon.select(F.col("_u").alias("node"), F.col("_v").alias("_nbr"))
         .unionByName(
@@ -575,6 +548,39 @@ def pagerank(
     front — a w=0 edge is mathematically no edge, and filtering it
     keeps the out-weight sums strictly positive (no 0/0 NaN poisoning
     every reachable rank)."""
+    return _power_method(
+        "pagerank", edges, src_col, dst_col, damping, iterations, weight_col
+    )
+
+
+def _check_seeds(n_seeds: int, missing: int) -> None:
+    """personalized_pagerank's seed contract, the same on both branches."""
+    if n_seeds == 0:
+        raise ValueError("personalized_pagerank: empty seed set")
+    if missing:
+        raise ValueError(
+            f"personalized_pagerank: {missing} seed(s) not present as an "
+            "edge endpoint — add self-loop edges to include isolated seeds"
+        )
+
+
+def _power_method(
+    op: str,
+    edges: DataFrame,
+    src_col: str,
+    dst_col: str,
+    damping: float,
+    iterations: int,
+    weight_col: str | None = None,
+    seeds: DataFrame | None = None,
+) -> DataFrame:
+    """The power method of :func:`pagerank` and, given ``seeds`` (one
+    distinct ``node`` column), of :func:`personalized_pagerank`, on both
+    branches. The two differ only in where teleport mass goes: the
+    (1−d) reset and the dangling mass spread uniformly (``1/n``), or
+    over the seed vector ``_e`` (1/|S| on seeds, 0 elsewhere). An
+    unweighted edge carries ``w = 1.0``, so ``rank * w / deg`` and the
+    out-weight sums are bit-identical to the unweighted recurrence."""
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0,1), got {damping}")
     w_expr = (
@@ -597,49 +603,46 @@ def pagerank(
         e = e.select("src", "dst", checked.alias("w")).where(F.col("w") > 0)
     try:
         e0 = e.localCheckpoint(eager=True)
-        m = e0.count()
     except Exception as ex:  # surface the in-plan guard as the API's ValueError
         if "NULL weights" in str(ex):
             raise ValueError(f"pagerank: NULL weights in {weight_col!r}") from None
         raise
-    # measured-size driver fixpoint (see _DRIVER_FIXPOINT_EDGE_BOUND)
-    if m <= _DRIVER_FIXPOINT_EDGE_BOUND:
-        rows = _collect_clean_edges(e0, 3)
-        if rows is not None:
-            note_fixpoint_branch("pagerank", "driver")
-            import numpy as np
-
-            spark = edges.sparkSession
-            from pyspark.sql import types as T
-
-            schema = T.StructType(
-                [
-                    T.StructField("node", e0.schema[0].dataType),
-                    T.StructField("rank", T.DoubleType()),
-                ]
-            )
-            if not rows:
-                return local_rows_df(spark, [], schema)
-            node_list, _idx, ui, vi = _node_index(rows)
-            n = len(node_list)
-            w = np.fromiter((float(r[2]) for r in rows), dtype=np.float64,
-                            count=len(rows))
-            deg = np.zeros(n)
-            np.add.at(deg, ui, w)
-            has_out = deg > 0
+    rows, _ = _driver_edges(op, e0)
+    if rows is not None:
+        node_list, idx, ui, vi = _node_index(rows)
+        n = len(node_list)
+        if n == 0:
+            return _node_rows_df(e0, [], rank=T.DoubleType())
+        if seeds is None:
+            ev = None
             ranks = np.full(n, 1.0 / n)
-            d = damping
-            for _ in range(iterations):
-                dm = ranks[~has_out].sum()
-                contrib = np.zeros(n)
-                np.add.at(contrib, vi, ranks[ui] * w / deg[ui])
+        else:
+            seed_vals = {r[0] for r in seeds.collect()}
+            _check_seeds(len(seed_vals), sum(1 for v in seed_vals if v not in idx))
+            ev = np.zeros(n)
+            for v in seed_vals:
+                ev[idx[v]] = 1.0 / len(seed_vals)
+            ranks = ev.copy()
+        w = np.fromiter((float(r[2]) for r in rows), dtype=np.float64,
+                        count=len(rows))
+        deg = np.zeros(n)
+        np.add.at(deg, ui, w)
+        has_out = deg > 0
+        d = damping
+        for _ in range(iterations):
+            dm = ranks[~has_out].sum()
+            contrib = np.zeros(n)
+            np.add.at(contrib, vi, ranks[ui] * w / deg[ui])
+            if ev is None:
                 ranks = (1.0 - d) / n + d * (contrib + dm / n)
-            return local_rows_df(spark, 
-                [(node_list[i], float(ranks[i])) for i in range(n)], schema
-            )
+            else:
+                ranks = (1.0 - d) * ev + d * (contrib + dm * ev)
+        return _node_rows_df(
+            e0, [(node_list[i], float(ranks[i])) for i in range(n)],
+            rank=T.DoubleType(),
+        )
     # staged on src — the per-round rank join key — so iterations
     # shuffle only the |V|-sized rank table (module docstring)
-    note_fixpoint_branch("pagerank", "distributed")
     e = _stage_edges(e0, "src")
 
     nodes = (
@@ -651,16 +654,36 @@ def pagerank(
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
+    contrib = F.coalesce(F.col("contrib"), F.lit(0.0))
+    if seeds is None:
+        base, start = nodes, F.lit(1.0 / n)
+        new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * (
+            contrib + F.col("dm") / n
+        )
+    else:
+        n_seeds = seeds.count()
+        _check_seeds(n_seeds, seeds.join(nodes, "node", "left_anti").count())
+        # teleport distribution _e attached once to the dense node table
+        # (the seed set is dimension-sized)
+        base = nodes.join(
+            F.broadcast(seeds.withColumn("_e", F.lit(1.0 / n_seeds))), "node", "left"
+        ).select("node", F.coalesce("_e", F.lit(0.0)).alias("_e")).localCheckpoint(
+            eager=True
+        )
+        start = F.col("_e")
+        new_rank = F.lit(1.0 - damping) * F.col("_e") + F.lit(damping) * (
+            contrib + F.col("dm") * F.col("_e")
+        )
     outdeg = (
         e.groupBy(F.col("src").alias("node"))
         .agg(F.sum("w").alias("deg"))
         .localCheckpoint(eager=True)
     )
 
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(eager=True)
+    ranks = base.select("node", start.alias("rank")).localCheckpoint(eager=True)
     for _ in range(iterations):
         with_deg = ranks.join(outdeg, "node", "left")
-        # mass from dangling nodes (no out-edges) spreads uniformly
+        # mass from dangling nodes (no out-edges) goes where teleport goes
         dangling = (
             with_deg.where(F.col("deg").isNull())
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
@@ -675,16 +698,9 @@ def pagerank(
             .agg(F.sum("c").alias("contrib"))
         )
         ranks = (
-            nodes.join(contribs, "node", "left")
+            base.join(contribs, "node", "left")
             .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.col("dm") / n)
-                ).alias("rank"),
-            )
+            .select("node", new_rank.alias("rank"))
             .localCheckpoint(eager=True)
         )
     return ranks
@@ -731,52 +747,33 @@ def hits(
     e0 = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).localCheckpoint(eager=True)
-    # measured-size driver fixpoint (see _DRIVER_FIXPOINT_EDGE_BOUND)
-    if e0.count() <= _DRIVER_FIXPOINT_EDGE_BOUND:
-        rows = _collect_clean_edges(e0, 2)
-        if rows is not None:
-            note_fixpoint_branch("hits", "driver")
-            import numpy as np
-
-            spark = edges.sparkSession
-            from pyspark.sql import types as T
-
-            schema = T.StructType(
-                [
-                    T.StructField("node", e0.schema[0].dataType),
-                    T.StructField("hub", T.DoubleType()),
-                    T.StructField("authority", T.DoubleType()),
-                ]
-            )
-            if not rows:
-                return local_rows_df(spark, [], schema)
-            node_list, _idx, ui, vi = _node_index(rows)
-            n = len(node_list)
-            hub = np.zeros(n)
-            hub[np.unique(ui)] = 1.0
+    rows, _ = _driver_edges("hits", e0)
+    if rows is not None:
+        node_list, _idx, ui, vi = _node_index(rows)
+        n = len(node_list)
+        hub = np.zeros(n)
+        hub[np.unique(ui)] = 1.0
+        auth = np.zeros(n)
+        for it in range(iterations):
+            normalize = (it + 1) % norm_every == 0 or it == iterations - 1
             auth = np.zeros(n)
-            for it in range(iterations):
-                normalize = (it + 1) % norm_every == 0 or it == iterations - 1
-                auth = np.zeros(n)
-                np.add.at(auth, vi, hub[ui])
-                if normalize:
-                    auth /= auth.sum()
-                hub = np.zeros(n)
-                np.add.at(hub, ui, auth[vi])
-                if normalize:
-                    hub /= hub.sum()
-            return local_rows_df(spark, 
-                [
-                    (node_list[i], float(hub[i]), float(auth[i]))
-                    for i in range(n)
-                ],
-                schema,
-            )
+            np.add.at(auth, vi, hub[ui])
+            if normalize:
+                auth /= auth.sum()
+            hub = np.zeros(n)
+            np.add.at(hub, ui, auth[vi])
+            if normalize:
+                hub /= hub.sum()
+        return _node_rows_df(
+            e0,
+            [(node_list[i], float(hub[i]), float(auth[i])) for i in range(n)],
+            hub=T.DoubleType(),
+            authority=T.DoubleType(),
+        )
     # two staged copies — each half-iteration joins scores on a
     # DIFFERENT edge endpoint, so one copy per key keeps both joins
     # edge-shuffle-free across all rounds (2·|E| cached once vs
     # 2·iterations·|E| shuffled)
-    note_fixpoint_branch("hits", "distributed")
     e = _stage_edges(e0, "src")
     e_dst = _stage_edges(e, "dst")
     nodes = (
@@ -1077,135 +1074,15 @@ def personalized_pagerank(
     shape as pagerank: staged edge table (zero per-round edge
     shuffles), node-sized score exchanges, one broadcast scalar
     aggregate per round, localCheckpoint lineage cuts."""
-    if not 0.0 < damping < 1.0:
-        raise ValueError(f"damping must be in (0,1), got {damping}")
     if iterations < 1:
         raise ValueError(
             f"personalized_pagerank: iterations must be >= 1, got {iterations}"
         )
-    e0 = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=True)
-    # measured-size driver fixpoint (see _DRIVER_FIXPOINT_EDGE_BOUND);
-    # seed validation is replicated exactly (same errors, same counts)
-    if e0.count() <= _DRIVER_FIXPOINT_EDGE_BOUND:
-        rows = _collect_clean_edges(e0, 2)
-        if rows is not None:
-            note_fixpoint_branch("personalized_pagerank", "driver")
-            import numpy as np
-
-            spark = edges.sparkSession
-            from pyspark.sql import types as T
-
-            schema = T.StructType(
-                [
-                    T.StructField("node", e0.schema[0].dataType),
-                    T.StructField("rank", T.DoubleType()),
-                ]
-            )
-            if not rows:
-                return local_rows_df(spark, [], schema)
-            node_list, idx, ui, vi = _node_index(rows)
-            n = len(node_list)
-            seed_vals = {
-                r[0]
-                for r in seeds.select(F.col(seed_col).alias("node"))
-                .distinct()
-                .collect()
-            }
-            if not seed_vals:
-                raise ValueError("personalized_pagerank: empty seed set")
-            missing = sum(1 for sv in seed_vals if sv not in idx)
-            if missing:
-                raise ValueError(
-                    f"personalized_pagerank: {missing} seed(s) not present "
-                    "as an edge endpoint — add self-loop edges to include "
-                    "isolated seeds"
-                )
-            ev = np.zeros(n)
-            for sv in seed_vals:
-                ev[idx[sv]] = 1.0 / len(seed_vals)
-            deg = np.zeros(n)
-            np.add.at(deg, ui, 1.0)
-            has_out = deg > 0
-            ranks = ev.copy()
-            d = damping
-            for _ in range(iterations):
-                dm = ranks[~has_out].sum()
-                contrib = np.zeros(n)
-                np.add.at(contrib, vi, ranks[ui] / deg[ui])
-                ranks = (1.0 - d) * ev + d * (contrib + dm * ev)
-            return local_rows_df(spark, 
-                [(node_list[i], float(r)) for i, r in enumerate(ranks)],
-                schema,
-            ).select("node", F.round("rank", 9).alias("rank"))
-    note_fixpoint_branch("personalized_pagerank", "distributed")
-    e = _stage_edges(e0, "src")
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    s = seeds.select(F.col(seed_col).alias("node")).distinct()
-    n_seeds = s.count()
-    if n_seeds == 0:
-        raise ValueError("personalized_pagerank: empty seed set")
-    missing = s.join(nodes, "node", "left_anti").count()
-    if missing:
-        raise ValueError(
-            f"personalized_pagerank: {missing} seed(s) not present as an "
-            "edge endpoint — add self-loop edges to include isolated seeds"
-        )
-    # teleport distribution e_v: 1/|S| on seeds, 0 elsewhere — attached
-    # once to the dense node table (seed set is dimension-sized)
-    nodes_e = nodes.join(
-        F.broadcast(s.withColumn("_e", F.lit(1.0 / n_seeds))), "node", "left"
-    ).select("node", F.coalesce("_e", F.lit(0.0)).alias("_e")).localCheckpoint(
-        eager=True
-    )
-    outdeg = (
-        e.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).cast("double").alias("deg"))
-        .localCheckpoint(eager=True)
-    )
-    ranks = nodes_e.select("node", F.col("_e").alias("rank")).localCheckpoint(
-        eager=True
-    )
-    for _ in range(iterations):
-        with_deg = ranks.join(outdeg, "node", "left")
-        dangling = with_deg.where(F.col("deg").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-        )
-        contribs = (
-            e.join(
-                _score_side(with_deg.where(F.col("deg").isNotNull()), n),
-                e.src == F.col("node"),
-            )
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = (
-            nodes_e.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * F.col("_e")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("dm") * F.col("_e")
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks.select("node", F.round("rank", 9).alias("rank"))
+    seeds = seeds.select(F.col(seed_col).alias("node")).distinct()
+    return _power_method(
+        "personalized_pagerank", edges, src_col, dst_col, damping, iterations,
+        seeds=seeds,
+    ).select("node", F.round("rank", 9).alias("rank"))
 
 
 def connected_components(
@@ -1225,8 +1102,8 @@ def connected_components(
     silently shrink the node universe of the edge list. NULL endpoints
     are dropped.
 
-    Measured-size branch (see ``_DRIVER_FIXPOINT_EDGE_BOUND``): up to
-    the bound the edge list is collected and solved by union-find on the
+    Measured-size branch (``operators.driver_payload``): up to the
+    bound the edge list is collected and solved by union-find on the
     driver — no rounds, one collect. Past it (or for ids whose Python
     order is not Spark's, see ``_driver_orderable``) the components come
     from alternating large-star/small-star contraction (Kiveris,
@@ -1263,17 +1140,13 @@ def connected_components(
         .where(F.col("_u").isNotNull() & F.col("_v").isNotNull())
         .localCheckpoint(eager=False)
     )
-    dt = raw.schema[0].dataType
-    if raw.count() <= _DRIVER_FIXPOINT_EDGE_BOUND and _driver_orderable(dt):
-        note_fixpoint_branch("connected_components", "driver")
-        from pyspark.sql import types as T
-
-        labels = _union_find_labels(raw.collect())
-        schema = T.StructType(
-            [T.StructField("node", dt), T.StructField("component", dt)]
+    rows, _ = _driver_edges("connected_components", raw, ordered=True)
+    if rows is not None:
+        return _node_rows_df(
+            raw,
+            sorted(_union_find_labels(rows).items()),
+            component=raw.schema[0].dataType,
         )
-        return local_rows_df(edges.sparkSession, sorted(labels.items()), schema)
-    note_fixpoint_branch("connected_components", "distributed")
     e = raw.where(F.col("_u") < F.col("_v")).distinct().localCheckpoint(eager=True)
     m = e.count()
     # self-loop-only nodes: the _u < _v canonicalization discards

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from . import local_rows_df, note_fixpoint_branch
+from . import driver_payload, local_rows_df
 
 QUANT_SCALE = 10_000_000  # 1e7: float32 has ~7 significant digits
 
@@ -60,50 +60,41 @@ def with_norm(df: DataFrame, vec_col: str, out: str = "_norm") -> DataFrame:
     )
 
 
-# Driver fast-path bounds for kcenter_sample: the greedy loop may run
-# locally only when the quantized table is provably driver-sized —
-# at most this many rows AND this many int64 cells (rows × dim; 4M
-# cells ≈ 32 MB). Past either bound the k-round distributed loop runs
-# unchanged. The dim is probed with a 1-row job BEFORE any collect, so
-# an unexpectedly wide vector can never pull an unbounded payload.
-_KCENTER_DRIVER_ROWS = 100_000
-_KCENTER_DRIVER_CELLS = 4_000_000
+def _kcenter_matrix(
+    cur: DataFrame, dim: int
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """Collect a (id, _qv array<long>) table as (ids, n × dim int64
+    matrix); ``None`` when a vector is NULL, ragged or holds a NULL —
+    the distributed loop owns those semantics."""
+    rows = cur.collect()
+    ids = np.empty(len(rows), dtype=np.int64)
+    try:
+        mat = np.empty((len(rows), dim), dtype=np.int64)
+        for i, r in enumerate(rows):
+            ids[i] = r[0]
+            v = r[1]
+            if v is None or len(v) != dim or any(x is None for x in v):
+                return None
+            mat[i] = v
+    except (TypeError, ValueError, OverflowError):
+        return None
+    return ids, mat
 
 
 def _kcenter_driver_picks(
-    cur: DataFrame, id_col: str, k: int
-) -> list[tuple[int, int]] | None:
+    ids: np.ndarray, mat: np.ndarray, k: int
+) -> list[tuple[int, int]]:
     """Exact driver-side replay of the greedy k-center recurrence over
-    a (id, _qv array<long>) table that fits the measured bounds;
-    ``None`` when the table is too large/ragged/null-bearing for the
-    fast path (caller falls through to the distributed loop).
+    the collected quantized table.
 
     Bit-identical to the distributed loop by construction: inputs are
     the ALREADY-quantized int64 vectors, distances are exact integer
     sums (order-independent), and both argmaxes break ties by
     (score desc, id asc) — the same total order as
     ``orderBy(desc, asc).limit(1)``."""
-    probe = cur.select(F.size("_qv").alias("_d")).first()
-    if probe is None:  # empty input: let the shared empty path handle it
+    n = len(ids)
+    if n == 0:
         return []
-    dim = probe["_d"]
-    if dim is None or dim < 0:
-        return None  # null vector — distributed path owns the semantics
-    n = cur.count()
-    if n > _KCENTER_DRIVER_ROWS or n * max(dim, 1) > _KCENTER_DRIVER_CELLS:
-        return None
-    rows = cur.collect()
-    ids = np.empty(n, dtype=np.int64)
-    try:
-        mat = np.empty((n, dim), dtype=np.int64)
-        for i, r in enumerate(rows):
-            ids[i] = r[0]
-            v = r[1]
-            if v is None or len(v) != dim or any(x is None for x in v):
-                return None  # ragged/null — fall back
-            mat[i] = v
-    except (TypeError, ValueError, OverflowError):
-        return None
     alive = np.ones(n, dtype=bool)
 
     def argbest(score: np.ndarray) -> int:
@@ -172,23 +163,27 @@ def kcenter_sample(
 
     # Measured-cardinality fast path: greedy selection is k SEQUENTIAL
     # argmax rounds, so the distributed loop below costs k driver
-    # round-trip jobs even when the quantized table is kilobytes. When
-    # the table provably fits the driver (row AND cell bounds, dim
-    # probed before collecting anything wide), run the SAME integer
-    # recurrence in one collect + a numpy loop — every distance is the
-    # identical exact int64 sum and every tie breaks (score desc, id
-    # asc) exactly like the orderBy().limit(1) path, so the pick
-    # sequence (and the DuckDB recursive-CTE hash) is unchanged. The
-    # distributed loop stays the production path for corpora past the
-    # bound — same discipline as graph._BROADCAST_NODE_BOUND.
-    picks = _kcenter_driver_picks(cur, id_col, k)
-    if picks is not None:
-        note_fixpoint_branch("kcenter_sample", "driver")
+    # round-trip jobs even when the quantized table is kilobytes. One
+    # aggregate measures rows × dim (the widest vector, so a wide one
+    # can never pull an unbounded payload) before anything is
+    # collected; within the package's one driver bound
+    # (``operators.driver_payload``) the SAME integer recurrence runs
+    # in one collect + a numpy loop — every distance is the identical
+    # exact int64 sum and every tie breaks (score desc, id asc) exactly
+    # like the orderBy().limit(1) path, so the pick sequence (and the
+    # DuckDB recursive-CTE hash) is unchanged.
+    n, dim = cur.agg(F.count(F.lit(1)), F.max(F.size("_qv"))).first()
+    dim = dim or 0
+    local = driver_payload(
+        "kcenter_sample", n * max(dim, 1), lambda: _kcenter_matrix(cur, dim)
+    )
+    if local is not None:
         return local_rows_df(
-            df.sparkSession, picks, f"{id_col} long, pick_order long"
+            df.sparkSession,
+            _kcenter_driver_picks(*local, k),
+            f"{id_col} long, pick_order long",
         )
 
-    note_fixpoint_branch("kcenter_sample", "distributed")
     first = (
         cur.withColumn("_n2", _int_dot(F.col("_qv"), F.col("_qv")))
         .orderBy(F.col("_n2").desc(), F.col(id_col).asc())

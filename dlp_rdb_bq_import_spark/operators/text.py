@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import local_rows_df, note_fixpoint_branch
+from . import driver_payload, local_rows_df
 # Tiny deterministic marker-word lists per language for the n-gram/
 # stopword language-ID heuristic. The point is a deterministic,
 # SQL-expressible scorer, not linguistic accuracy.
@@ -704,17 +704,6 @@ def bm25_batch_topk(
     )
 
 
-# Driver fast-path bounds for bpe_learn: the merge loop may run
-# locally only when the word-frequency table is provably driver-sized
-# (both measured in one aggregate before anything is collected).
-# 16 merge rounds over 1M chars is a few seconds of pure-Python work —
-# comparable to the distributed loop's per-round job overhead at the
-# SAME size — and past either bound the distributed fold runs
-# unchanged, so scale posture is untouched.
-_BPE_DRIVER_VOCAB_ROWS = 65_536
-_BPE_DRIVER_VOCAB_CHARS = 1_000_000
-
-
 def bpe_learn(
     df: DataFrame,
     text_col: str = "text",
@@ -770,25 +759,28 @@ def bpe_learn(
     # driver argmax (the recurrence is inherently iterative), so the
     # distributed loop costs num_merges round-trip jobs even when the
     # word-frequency table is kilobytes — which it always is for the
-    # bounded-sample trainer real pipelines run. When the vocab is
-    # provably driver-sized (row AND char bounds measured in one agg),
-    # run the SAME recurrence locally: integer pair weights, the same
-    # (w desc, l asc, r asc) tie-break (Python code-point order ==
-    # Spark's UTF8String byte order — UTF-8 preserves code-point
-    # order), the same left-to-right non-overlapping fold, the same
-    # early stop. Output is bit-identical; the distributed loop stays
-    # the path for vocabularies past the bound.
-    meas = vocab.agg(
-        F.count(F.lit(1)).alias("n"), F.sum(F.length("word")).alias("chars")
-    ).first()
-    if meas["n"] <= _BPE_DRIVER_VOCAB_ROWS and (
-        meas["chars"] or 0
-    ) <= _BPE_DRIVER_VOCAB_CHARS:
-        note_fixpoint_branch("bpe_learn_merges", "driver")
-        local = [
+    # bounded-sample trainer real pipelines run. When the vocab's
+    # characters (measured in one agg before anything is collected)
+    # fit the package's one driver bound (``operators.driver_payload``;
+    # 16 merge rounds over 1M chars is a few seconds of pure Python,
+    # comparable to the distributed loop's per-round job overhead at
+    # the SAME size), run the SAME recurrence locally: integer pair
+    # weights, the same (w desc, l asc, r asc) tie-break (Python
+    # code-point order == Spark's UTF8String byte order — UTF-8
+    # preserves code-point order), the same left-to-right
+    # non-overlapping fold, the same early stop. Output is
+    # bit-identical; the distributed loop stays the path for
+    # vocabularies past the bound.
+    chars = vocab.agg(F.sum(F.length("word"))).first()[0] or 0
+    local = driver_payload(
+        "bpe_learn_merges",
+        chars,
+        lambda: [
             (r["word"], int(r["freq"]), list(r["word"]))
             for r in vocab.select("word", "freq").collect()
-        ]
+        ],
+    )
+    if local is not None:
         merges_l: list[tuple[int, str, str, str]] = []
         for rank in range(1, num_merges + 1):
             pair_w: dict[tuple[str, str], int] = {}
@@ -821,7 +813,6 @@ def bpe_learn(
         return local_rows_df(
             spark, merges_l, "rank long, left string, right string, merged string"
         )
-    note_fixpoint_branch("bpe_learn_merges", "distributed")
     merges: list[tuple[int, str, str, str]] = []
     for rank in range(1, num_merges + 1):
         pairs = (
@@ -873,7 +864,6 @@ def bpe_learn(
         vocab = vocab.withColumn("symbols", step)
         if rank % 4 == 0:
             vocab = vocab.localCheckpoint(eager=True)
-    spark = df.sparkSession
     if return_segments:
         return vocab.select("word", "freq", "symbols")
     return local_rows_df(

@@ -283,13 +283,15 @@ class Warehouse:
     def quarantine(self, dataset: str, records: list[dict]) -> None:
         """Dead-letter channel: one JSONL file per job run (replaces the
         reference's Flatten→LOG.error at DBImportPipeline.java:148-162
-        with something queryable)."""
+        with something queryable). Each file gets a fresh unique name,
+        opened with exclusive create, so no run can overwrite the dead
+        letters of another."""
         if not records:
             return
         qdir = os.path.join(self.root, dataset, "_quarantine")
         os.makedirs(qdir, exist_ok=True)
-        path = os.path.join(qdir, f"deadletter-{len(os.listdir(qdir))}.jsonl")
-        with open(path, "w") as f:
+        path = os.path.join(qdir, f"deadletter-{uuid.uuid4().hex}.jsonl")
+        with open(path, "x") as f:
             for r in records:
                 f.write(json.dumps(r) + "\n")
 

@@ -61,3 +61,17 @@ def micro_batches(spark):
     spark.streams.addListener(counter)
     yield counter
     spark.streams.removeListener(counter)
+
+
+@pytest.fixture
+def driver_bound(monkeypatch):
+    """Set ``operators.DRIVER_VALUE_BOUND``, the one driver-or-distributed
+    bound of the dual-path operators, for this test: ``driver_bound(0)``
+    sends every non-empty input to the distributed loop, ``-1`` every
+    input."""
+    from dlp_rdb_bq_import_spark import operators
+
+    def set_bound(values: int) -> None:
+        monkeypatch.setattr(operators, "DRIVER_VALUE_BOUND", values)
+
+    return set_bound

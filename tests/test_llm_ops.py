@@ -29,7 +29,6 @@ from pyspark.sql import types as T
 
 from dlp_rdb_bq_import_spark.operators import (
     dedup,
-    graph,
     sampling,
     similarity,
     text as text_ops,
@@ -473,13 +472,13 @@ def _union_find_clusters(pairs: list[tuple[int, int]]) -> dict[int, int]:
 
 
 @pytest.mark.parametrize("bound", [1_000_000, 0])
-def test_duplicate_clusters_matches_union_find(spark, monkeypatch, bound):
+def test_duplicate_clusters_matches_union_find(spark, driver_bound, bound):
     """Chains, stars, disjoint components — transitive closure must
     match union-find even for pairs never directly emitted (a~b, b~c
     ⇒ a,c share a cluster). Both branches checked: driver-side
     union-find (small pair sets) and distributed star contraction
-    (graph edge bound forced to 0)."""
-    monkeypatch.setattr(graph, "_DRIVER_FIXPOINT_EDGE_BOUND", bound)
+    (driver bound forced to 0)."""
+    driver_bound(bound)
     pairs = [(1, 2), (2, 3), (3, 4), (4, 5),  # 5-chain: needs propagation depth
              (10, 11), (10, 12), (10, 13),    # star
              (20, 21)]                         # pair
@@ -491,11 +490,11 @@ def test_duplicate_clusters_matches_union_find(spark, monkeypatch, bound):
     assert got == _union_find_clusters(pairs)
 
 
-def test_duplicate_clusters_raises_on_non_convergence(spark, monkeypatch):
+def test_duplicate_clusters_raises_on_non_convergence(spark, driver_bound):
     """Exhausting max_iterations with the contraction still moving must
     raise — silently returning partially-merged clusters would let two
     docs of one duplicate component both survive dedup."""
-    monkeypatch.setattr(graph, "_DRIVER_FIXPOINT_EDGE_BOUND", 0)
+    driver_bound(0)
     chain = [(i, i + 1) for i in range(12)]
     pdf = spark.createDataFrame(chain, ["id_a", "id_b"])
     with pytest.raises(RuntimeError, match="did not converge"):
@@ -1154,11 +1153,11 @@ def test_label_propagation_distributed_at_scale(spark):
     assert bad == 0
 
 
-def test_label_propagation_nonconvergence_raises(spark, monkeypatch):
+def test_label_propagation_nonconvergence_raises(spark, driver_bound):
     """A 30-deep chain cannot converge in 3 rounds: the distributed
     branch must fail loudly (silent partial dedup would let both copies
     of a duplicate survive)."""
-    monkeypatch.setattr(graph, "_DRIVER_FIXPOINT_EDGE_BOUND", 0)
+    driver_bound(0)
     edges = spark.range(30).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
@@ -1166,13 +1165,13 @@ def test_label_propagation_nonconvergence_raises(spark, monkeypatch):
         dedup.duplicate_clusters(edges, max_iterations=3)
 
 
-def test_deep_duplicate_component_converges(spark, monkeypatch):
+def test_deep_duplicate_component_converges(spark, driver_bound):
     """The same 30-hop chain on the distributed branch at the default
     max_iterations: star contraction needs O(log n) rounds, not one per
     hop, so all 31 ids land in cluster 0."""
     from dlp_rdb_bq_import_spark.operators import FIXPOINT_BRANCHES
 
-    monkeypatch.setattr(graph, "_DRIVER_FIXPOINT_EDGE_BOUND", -1)
+    driver_bound(-1)
     edges = spark.range(30).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )

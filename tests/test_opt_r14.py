@@ -1,11 +1,9 @@
-"""Round-14 optimization regression tests: the measured-cardinality
-driver fast paths must be BIT-IDENTICAL to the distributed loops they
-short-circuit (both are pure integer recurrences), and the loops must
-still run when the bounds force the distributed path."""
+"""Round-14 optimization regression tests. The branch parity of the
+measured-size driver fast paths on registered queries lives in
+tests/test_dual_path_parity.py; the k-center toy cases stay here."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 import pytest
 
 
@@ -24,58 +22,28 @@ def emb(spark):
     return spark.createDataFrame(data, "vec_id long, embedding array<double>")
 
 
-def test_kcenter_driver_path_equals_distributed(spark, emb, monkeypatch):
+def test_kcenter_driver_path_equals_distributed(spark, emb, driver_bound):
     from dlp_rdb_bq_import_spark.operators import similarity
 
     fast = _rows(similarity.kcenter_sample(emb, k=9), "vec_id", "pick_order")
-    # force the distributed loop by zeroing the row bound
-    monkeypatch.setattr(similarity, "_KCENTER_DRIVER_ROWS", 0)
+    # force the distributed loop by zeroing the bound
+    driver_bound(0)
     slow = _rows(similarity.kcenter_sample(emb, k=9), "vec_id", "pick_order")
     assert fast == slow
     assert len(fast) == 9
 
 
-def test_kcenter_driver_path_cell_bound_falls_back(spark, emb, monkeypatch):
+def test_kcenter_driver_path_cell_bound_falls_back(spark, emb, driver_bound):
+    from dlp_rdb_bq_import_spark import operators
     from dlp_rdb_bq_import_spark.operators import similarity
 
-    # cell bound of 1 can never fit 60 x 8 — must fall back, not fail
-    monkeypatch.setattr(similarity, "_KCENTER_DRIVER_CELLS", 1)
+    # a bound of 1 value can never fit 60 rows x 8 dims — must fall back, not fail
+    driver_bound(1)
+    key = ("kcenter_sample", "distributed")
+    before = operators.FIXPOINT_BRANCHES.get(key, 0)
     out = _rows(similarity.kcenter_sample(emb, k=3), "vec_id", "pick_order")
     assert len(out) == 3
-
-
-def test_bpe_learn_driver_path_equals_distributed(spark, monkeypatch):
-    from dlp_rdb_bq_import_spark.operators import text
-
-    docs = spark.createDataFrame(
-        [
-            (1, "low lower lowest low low"),
-            (2, "new newer newest new knew"),
-            (3, "low new low new widest wide wide"),
-        ],
-        "doc_id long, text string",
-    )
-    fast_m = _rows(
-        text.bpe_learn(docs, num_merges=10), "rank", "left", "right", "merged"
-    )
-    fast_s = _rows(
-        text.bpe_learn(docs, num_merges=10, return_segments=True),
-        "word",
-        "freq",
-        "symbols",
-    )
-    monkeypatch.setattr(text, "_BPE_DRIVER_VOCAB_ROWS", 0)
-    slow_m = _rows(
-        text.bpe_learn(docs, num_merges=10), "rank", "left", "right", "merged"
-    )
-    slow_s = _rows(
-        text.bpe_learn(docs, num_merges=10, return_segments=True),
-        "word",
-        "freq",
-        "symbols",
-    )
-    assert fast_s == slow_s
-    assert fast_m == slow_m
+    assert operators.FIXPOINT_BRANCHES.get(key, 0) > before
 
 
 def test_bpe_learn_driver_path_empty_and_single_char(spark):
@@ -88,74 +56,6 @@ def test_bpe_learn_driver_path_empty_and_single_char(spark):
     )
     # no adjacent pair ever repeats inside a word — zero merges
     assert text.bpe_learn(singles, num_merges=4).count() == 0
-
-
-def test_fixpoint_driver_path_matches_distributed(spark, monkeypatch):
-    """The measured-size driver fixpoints (pagerank / personalized /
-    hits) must agree with the distributed loops to float64 roundoff —
-    same recurrence, same iteration count, same normalization cadence;
-    only the summation order differs."""
-    from dlp_rdb_bq_import_spark.operators import graph
-
-    edges = [(i, (i * 3 + 1) % 9) for i in range(9)] + [
-        (0, 4), (7, 2), (8, 1), (3, 3), (5, 1)
-    ]
-    e = spark.createDataFrame(edges, "src long, dst long")
-    we = spark.createDataFrame(
-        [(u, v, float(1 + (u + v) % 3)) for u, v in edges],
-        "src long, dst long, w double",
-    )
-    seeds = spark.createDataFrame([(0,), (7,)], "node long")
-
-    fast_pr = {r["node"]: r["rank"] for r in graph.pagerank(e).collect()}
-    fast_wpr = {
-        r["node"]: r["rank"]
-        for r in graph.pagerank(we, weight_col="w").collect()
-    }
-    fast_ppr = {
-        r["node"]: r["rank"]
-        for r in graph.personalized_pagerank(e, seeds).collect()
-    }
-    fast_h = {
-        r["node"]: (r["hub"], r["authority"]) for r in graph.hits(e).collect()
-    }
-    monkeypatch.setattr(graph, "_DRIVER_FIXPOINT_EDGE_BOUND", 0)
-    slow_pr = {r["node"]: r["rank"] for r in graph.pagerank(e).collect()}
-    slow_wpr = {
-        r["node"]: r["rank"]
-        for r in graph.pagerank(we, weight_col="w").collect()
-    }
-    slow_ppr = {
-        r["node"]: r["rank"]
-        for r in graph.personalized_pagerank(e, seeds).collect()
-    }
-    slow_h = {
-        r["node"]: (r["hub"], r["authority"]) for r in graph.hits(e).collect()
-    }
-    assert set(fast_pr) == set(slow_pr)
-    for u in slow_pr:
-        assert fast_pr[u] == pytest.approx(slow_pr[u], abs=1e-12)
-        assert fast_wpr[u] == pytest.approx(slow_wpr[u], abs=1e-12)
-        assert fast_ppr[u] == pytest.approx(slow_ppr[u], abs=1e-12)
-        assert fast_h[u][0] == pytest.approx(slow_h[u][0], abs=1e-12)
-        assert fast_h[u][1] == pytest.approx(slow_h[u][1], abs=1e-12)
-
-    # error contracts survive the fast path
-    with pytest.raises(ValueError, match="empty seed set"):
-        graph.personalized_pagerank(
-            e, spark.createDataFrame([], "node long")
-        )
-    with pytest.raises(ValueError, match="not present"):
-        graph.personalized_pagerank(
-            e, spark.createDataFrame([(12345,)], "node long")
-        )
-    with pytest.raises(ValueError, match="NULL weights"):
-        graph.pagerank(
-            spark.createDataFrame(
-                [(1, 2, None)], "src long, dst long, w double"
-            ),
-            weight_col="w",
-        )
 
 
 def test_graph_loop_rank_parity(spark):
@@ -246,67 +146,6 @@ def test_extract_features_ignores_with_meta(spark):
         .collect()
     )
     assert a == b
-
-
-def test_integer_fixpoint_driver_paths_bit_identical(spark, monkeypatch):
-    """The kcore / label_propagation driver twins are EXACT integer
-    recurrences and connected_components' driver union-find yields the
-    same unique min-id labelling — each fast path must equal the
-    distributed loop bit-for-bit (not to tolerance), including
-    self-loop singletons, string node ids, and the max_iterations
-    error contracts."""
-    from dlp_rdb_bq_import_spark.operators import graph
-
-    # two components + a chain + a self-loop-only node + parallel dirs
-    edges = [
-        (1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (6, 7), (2, 1),
-        (8, 8), (9, 10), (10, 11), (12, 13),
-    ]
-    e = spark.createDataFrame(edges, "src long, dst long")
-    se = spark.createDataFrame(
-        [(f"h{u}", f"h{v}") for u, v in edges], "src string, dst string"
-    )
-
-    fast = {
-        "cc": _rows(graph.connected_components(e), "node", "component"),
-        "cc_s": _rows(graph.connected_components(se), "node", "component"),
-        "k2": _rows(graph.kcore(e, k=2), "node", "degree"),
-        "lp": _rows(graph.label_propagation(e), "node", "community"),
-        "lp_s": _rows(graph.label_propagation(se), "node", "community"),
-    }
-    monkeypatch.setattr(graph, "_DRIVER_FIXPOINT_EDGE_BOUND", -1)
-    slow = {
-        "cc": _rows(graph.connected_components(e), "node", "component"),
-        "cc_s": _rows(graph.connected_components(se), "node", "component"),
-        "k2": _rows(graph.kcore(e, k=2), "node", "degree"),
-        "lp": _rows(graph.label_propagation(e), "node", "community"),
-        "lp_s": _rows(graph.label_propagation(se), "node", "community"),
-    }
-    assert fast == slow
-    # sanity on content, not just parity
-    cc = dict(fast["cc"])
-    assert cc[3] == 1 and cc[7] == 4 and cc[8] == 8 and cc[11] == 9
-    assert dict(fast["k2"]) == {1: 2, 2: 2, 3: 2}
-    monkeypatch.undo()
-
-    # error contracts: identical on both paths (connected_components'
-    # union-find branch has no rounds, so only its distributed loop can
-    # run out of them)
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "src long, dst long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        graph.kcore(chain, k=2, max_iterations=1)
-    with pytest.raises(ValueError, match="max_iterations"):
-        graph.connected_components(chain, max_iterations=0)
-    assert len(graph.connected_components(chain, max_iterations=1).collect()) == 13
-    monkeypatch.setattr(graph, "_DRIVER_FIXPOINT_EDGE_BOUND", -1)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        graph.kcore(chain, k=2, max_iterations=1)
-    with pytest.raises(ValueError, match="max_iterations"):
-        graph.connected_components(chain, max_iterations=0)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        graph.connected_components(chain, max_iterations=1)
 
 
 def test_fan_out_preserves_rows_and_widens(spark):

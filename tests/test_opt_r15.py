@@ -156,9 +156,9 @@ def test_attach_media_per_row_dispatch_matches_scalar(spark):
         ).collect()
 
 
-def test_fixpoint_branch_telemetry(spark, monkeypatch):
+def test_fixpoint_branch_telemetry(spark, driver_bound):
     from dlp_rdb_bq_import_spark import operators as ops
-    from dlp_rdb_bq_import_spark.operators import dedup, graph
+    from dlp_rdb_bq_import_spark.operators import dedup
 
     pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
     before = dict(ops.FIXPOINT_BRANCHES)
@@ -166,7 +166,7 @@ def test_fixpoint_branch_telemetry(spark, monkeypatch):
     assert ops.FIXPOINT_BRANCHES.get(("connected_components", "driver"), 0) > before.get(
         ("connected_components", "driver"), 0
     )
-    monkeypatch.setattr(graph, "_DRIVER_FIXPOINT_EDGE_BOUND", 0)
+    driver_bound(0)
     before = dict(ops.FIXPOINT_BRANCHES)
     dedup.duplicate_clusters(pairs).collect()
     assert ops.FIXPOINT_BRANCHES.get(

@@ -325,6 +325,24 @@ class _TypedStringSource(Source):
         return spark.createDataFrame(self.ROWS, "id string, qty string, req string")
 
 
+def test_quarantine_never_overwrites_dead_letters(tmp_path):
+    """Two runs into one dataset, with a dead-letter file already named
+    the way a count-based name would pick next: every record set must
+    survive."""
+    wh = Warehouse(str(tmp_path))
+    qdir = os.path.join(str(tmp_path), "DS", "_quarantine")
+    os.makedirs(qdir)
+    with open(os.path.join(qdir, "deadletter-1.jsonl"), "w") as f:
+        f.write(json.dumps({"table": "old", "error": "e0"}) + "\n")
+    wh.quarantine("DS", [{"table": "a", "error": "e1"}])
+    wh.quarantine("DS", [{"table": "b", "error": "e2"}, {"table": "c", "error": "e3"}])
+    records = []
+    for fname in os.listdir(qdir):
+        with open(os.path.join(qdir, fname)) as f:
+            records.extend(json.loads(line) for line in f)
+    assert sorted(r["table"] for r in records) == ["a", "b", "c", "old"]
+
+
 def test_row_level_quarantine(spark, tmp_path):
     """Three poisoned rows: the table still imports n-3 rows (typed) and
     exactly 3 quarantine records carry the row payload + reason."""

@@ -54,10 +54,11 @@ def main() -> None:
     ap.add_argument("--out", default=".scratch/soak_full.json")
     ap.add_argument(
         "--fixpoint-bound", type=int, default=0,
-        help="override the measured-size driver-fixpoint bounds "
-        "(graph incl. union-find CC, k-center, BPE) so the soak TIMES the "
+        help="override operators.DRIVER_VALUE_BOUND, the one driver-or-"
+        "distributed bound of the dual-path operators (graph incl. "
+        "union-find CC, k-center, BPE), so the soak TIMES the "
         "distributed loops (default 0 = always distributed; pass -1 "
-        "to keep production bounds, in which case the branch guard "
+        "to keep the production bound, in which case the branch guard "
         "may fire)")
     ap.add_argument(
         "--rethreshold",
@@ -69,18 +70,10 @@ def main() -> None:
 
     spark = get_spark(app_name="soak_full")
     if args.fixpoint_bound >= 0:
-        from dlp_rdb_bq_import_spark.operators import (
-            graph as _g,
-            similarity as _sim,
-            text as _tx,
-        )
+        from dlp_rdb_bq_import_spark import operators
 
-        _g._DRIVER_FIXPOINT_EDGE_BOUND = args.fixpoint_bound
-        _sim._KCENTER_DRIVER_ROWS = args.fixpoint_bound
-        _sim._KCENTER_DRIVER_CELLS = args.fixpoint_bound
-        _tx._BPE_DRIVER_VOCAB_ROWS = args.fixpoint_bound
-        _tx._BPE_DRIVER_VOCAB_CHARS = args.fixpoint_bound
-        print(f"fixpoint driver bounds overridden to {args.fixpoint_bound}")
+        operators.DRIVER_VALUE_BOUND = args.fixpoint_bound
+        print(f"fixpoint driver bound overridden to {args.fixpoint_bound}")
     spark.range(1000).count()  # JVM/codegen warmup
     qs = harness.queries()
     results: dict[str, dict] = {}
