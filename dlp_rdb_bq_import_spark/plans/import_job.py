@@ -110,10 +110,13 @@ def run_import(
                 table.full_name,
                 max_retries=options.write_retries,
             )
-            n_bad = warehouse.quarantine_rows(
-                violations, options.dataset, table.full_name
-            )
-            res.quarantined_rows = n_bad
+            try:
+                res.quarantined_rows = warehouse.quarantine_rows(
+                    violations, options.dataset, table.full_name
+                )
+            except Exception as e:  # the table's rows may be visible: keep its destination
+                prior = f"{res.error}\n" if res.error else ""
+                res.status, res.error = "failed", f"{prior}row quarantine failed: {e}"
             return res
         finally:
             df.unpersist()

@@ -16,20 +16,18 @@ PUBLIC ``google-cloud-bigquery`` client the same way
   in-memory fake through the same surface tests the JDBC/parquet
   warehouses pass, without the package installed.
 
-Staged-atomic delivery, restated in BigQuery job primitives:
+The staged-atomic contract is ``StagedSink``'s; the BigQuery job
+primitives:
 
-- every attempt loads the DataFrame (written to parquet locally; at
-  deployment scale the files would sit on GCS and a single multi-URI
-  load job would ingest them) into a FRESH staging table — a failed
-  attempt leaves only an orphan staging table, never destination rows;
+- staging is a fresh ``<table>_stg<hex>`` table in the dataset (created
+  on demand), filled by load jobs from the DataFrame written to parquet
+  locally (at deployment scale the files would sit on GCS and one
+  multi-URI load job would ingest them);
 - publish is ONE server-side COPY JOB, which BigQuery executes
   atomically: ``WRITE_APPEND`` for append (an interrupted copy lands
-  zero rows, so the bounded retry can never double-append),
-  ``WRITE_TRUNCATE`` + ``CREATE_IF_NEEDED`` for create-on-demand and
+  zero rows), ``WRITE_TRUNCATE`` + ``CREATE_IF_NEEDED`` for create and
   overwrite (the destination swaps complete-or-not-at-all);
-- the staging DELETE after a committed copy is best-effort CLEANUP
-  outside the retryable unit (the jdbc_warehouse r13 discipline: an
-  orphan staging table is harmless, a double append is not).
+- discard is ``delete_table(staging, not_found_ok=True)``.
 
 ``read`` surfaces rows via ``list_rows`` → Arrow → DataFrame — the
 contract/readback surface; a production read path would use the Spark
@@ -42,12 +40,11 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import traceback
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .warehouse import WriteResult
+from .warehouse import StagedSink
 
 
 class TableNotFound(Exception):
@@ -60,7 +57,7 @@ def _is_not_found(e: Exception) -> bool:
     return isinstance(e, TableNotFound) or type(e).__name__ == "NotFound"
 
 
-class BigQueryWarehouse:
+class BigQueryWarehouse(StagedSink):
     """Dataset/table namespace on one BigQuery project. ``dataset``
     maps to a BigQuery dataset (created on demand), ``full_name`` to a
     table; write/read/table_exists mirror the parquet and JDBC
@@ -109,44 +106,17 @@ class BigQueryWarehouse:
                 return False
             raise
 
-    def write(
-        self,
-        df: DataFrame,
-        dataset: str,
-        full_name: str,
-        mode: str = "append",
-        max_retries: int = 2,
-    ) -> WriteResult:
-        if mode not in ("append", "overwrite"):
-            raise ValueError(f"unsupported write mode {mode!r}")
-        dest = self.qualified(dataset, full_name)
-        last: str | None = None
-        for attempt in range(1, max_retries + 2):
-            staging = self.qualified(
-                dataset, f"{full_name}_stg{uuid.uuid4().hex[:8]}"
-            )
-            try:
-                self.client.create_dataset(
-                    f"{self.project}.{dataset}", exists_ok=True
-                )
-                self._load_staging(df, staging)
-                self._publish(staging, dest, dataset, full_name, mode)
-                return WriteResult(full_name, dest, "ok", attempts=attempt)
-            except Exception as e:  # dead-letter, not crash (S9)
-                last = f"{e}\n{traceback.format_exc()}"
-                try:
-                    self.client.delete_table(staging, not_found_ok=True)
-                except Exception:
-                    pass
-        return WriteResult(full_name, dest, "failed", last, attempts=max_retries + 1)
+    # -- staged-write primitives ---------------------------------------------
 
-    # -- internals ----------------------------------------------------------
+    @staticmethod
+    def _staging_name(dest: str) -> str:
+        return f"{dest}_stg{uuid.uuid4().hex[:8]}"
 
-    def _load_staging(self, df: DataFrame, staging: str) -> None:
-        """One load attempt: DataFrame → parquet part files → load jobs
-        into the fresh staging table (the retryable unit; tests inject
-        failures here, exactly like the JDBC warehouse's
-        ``_write_attempt``)."""
+    def _write_attempt(self, df: DataFrame, staging: str) -> None:
+        """DataFrame → parquet part files → one load job per file into
+        the staging table; each job's ``result()`` surfaces its error
+        inside this attempt."""
+        self.client.create_dataset(staging.rsplit(".", 1)[0], exists_ok=True)
         tmp = tempfile.mkdtemp(prefix="bqstage_")
         try:
             df.write.mode("overwrite").parquet(tmp)
@@ -160,9 +130,19 @@ class BigQueryWarehouse:
                     job = self.client.load_table_from_file(
                         fh, staging, job_config=self._parquet_load_config()
                     )
-                job.result()  # surface load errors inside THIS attempt
+                job.result()
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
+
+    def _publish(self, spark: SparkSession, staging: str, dest: str, how: str) -> None:
+        self.client.copy_table(
+            staging, dest, job_config=self._copy_config(how)
+        ).result()
+
+    def _discard(self, spark: SparkSession, staging: str) -> None:
+        self.client.delete_table(staging, not_found_ok=True)
+
+    # -- job configs --------------------------------------------------------
 
     def _parquet_load_config(self):
         """Real-client LoadJobConfig(source_format=PARQUET); fakes that
@@ -176,44 +156,20 @@ class BigQueryWarehouse:
         except ImportError:
             return None
 
-    def _copy_config(self, mode: str):
+    def _copy_config(self, how: str):
         try:  # pragma: no cover - package not in container
             from google.cloud import bigquery
 
             return bigquery.CopyJobConfig(
                 write_disposition=(
                     bigquery.WriteDisposition.WRITE_APPEND
-                    if mode == "append"
+                    if how == "append"
                     else bigquery.WriteDisposition.WRITE_TRUNCATE
                 ),
                 create_disposition=bigquery.CreateDisposition.CREATE_IF_NEEDED,
             )
         except ImportError:
-            return {"mode": mode}  # fakes interpret the plain dict
-
-    def _publish(
-        self, staging: str, dest: str, dataset: str, full_name: str, mode: str
-    ) -> None:
-        exists = False
-        try:
-            self.client.get_table(dest)
-            exists = True
-        except Exception as e:
-            if not _is_not_found(e):
-                raise
-        effective = "overwrite" if (mode == "overwrite" or not exists) else "append"
-        # ONE atomic server-side copy job — the retryable unit ends
-        # when it commits
-        self.client.copy_table(
-            staging, dest, job_config=self._copy_config(effective)
-        ).result()
-        # best-effort cleanup OUTSIDE the retryable unit (a failed
-        # delete after a committed copy must not re-enter the retry
-        # loop and double-append — the jdbc_warehouse discipline)
-        try:
-            self.client.delete_table(staging, not_found_ok=True)
-        except Exception:
-            pass
+            return {"mode": how}  # fakes interpret the plain dict
 
     def read(self, spark: SparkSession, dataset: str, full_name: str) -> DataFrame:
         rows = self.client.list_rows(self.qualified(dataset, full_name))

@@ -10,34 +10,27 @@ in tests (the same public driver the JDBC source tests use), and
 engine-generic for PostgreSQL/MySQL/SQL Server (the publish SQL is
 ANSI ``INSERT INTO … SELECT`` plus one RENAME).
 
-Delivery semantics — the staged-atomic discipline of the parquet
-warehouse, restated in SQL:
+The staged-atomic contract is ``StagedSink``'s; the SQL primitives:
 
-- every attempt writes to a FRESH staging table (Spark JDBC overwrite
-  — a failed attempt leaves only an orphan staging table, never rows
-  in the destination);
-- create-on-demand publish is ``RENAME TABLE staging TO final``
-  (atomic DDL — the destination appears fully populated or not at
-  all);
-- append publish is ONE ``INSERT INTO final SELECT * FROM staging``
+- staging is a fresh ``<TABLE>_STG<hex>`` table written by Spark's JDBC
+  writer, in the dataset's schema (created on demand);
+- create publishes by ``RENAME TABLE staging TO final`` (atomic DDL —
+  the destination appears fully populated or not at all); overwrite
+  drops the destination first, then renames;
+- append publishes by ONE ``INSERT INTO final SELECT * FROM staging``
   statement — statement atomicity means a failed append inserts
-  nothing, so the bounded retry can never double-append;
-- overwrite publish drops the destination first, then renames.
-
-Failed attempts clean their staging table best-effort and return a
-``WriteResult(status="failed")`` with the error — dead-letter, not
-crash (the S9 contract), matching the parquet warehouse exactly.
+  nothing;
+- discard is ``DROP TABLE staging``.
 """
 
 from __future__ import annotations
 
 import re
-import traceback
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .warehouse import WriteResult
+from .warehouse import StagedSink
 
 _IDENT = re.compile(r"^[A-Za-z][A-Za-z0-9_]*$")
 
@@ -51,7 +44,7 @@ def _ident(name: str, what: str) -> str:
     return name.upper()  # Derby/ANSI fold unquoted identifiers up
 
 
-class JdbcWarehouse:
+class JdbcWarehouse(StagedSink):
     """Dataset/table namespace on one JDBC engine. ``dataset`` maps to
     a SQL schema (created on demand); ``full_name`` to a table."""
 
@@ -101,42 +94,14 @@ class JdbcWarehouse:
         finally:
             conn.close()
 
-    # -- write/read surface (parquet-warehouse parity) ----------------------
+    # -- staged-write primitives ---------------------------------------------
 
-    def write(
-        self,
-        df: DataFrame,
-        dataset: str,
-        full_name: str,
-        mode: str = "append",
-        max_retries: int = 2,
-    ) -> WriteResult:
-        if mode not in ("append", "overwrite"):
-            raise ValueError(f"unsupported write mode {mode!r}")
-        spark = df.sparkSession
-        dest = self.qualified(dataset, full_name)
-        last: str | None = None
-        for attempt in range(1, max_retries + 2):
-            staging = (
-                f"{_ident(dataset, 'dataset')}."
-                f"{_ident(full_name, 'table')}_STG{uuid.uuid4().hex[:8].upper()}"
-            )
-            try:
-                self._ensure_schema(spark, dataset)
-                self._write_attempt(df, staging)
-                self._publish(spark, staging, dataset, full_name, mode)
-                return WriteResult(full_name, dest, "ok", attempts=attempt)
-            except Exception as e:  # dead-letter, not crash (S9)
-                last = f"{e}\n{traceback.format_exc()}"
-                try:
-                    self._execute(spark, f"DROP TABLE {staging}")
-                except Exception:
-                    pass
-        return WriteResult(full_name, dest, "failed", last, attempts=max_retries + 1)
+    @staticmethod
+    def _staging_name(dest: str) -> str:
+        return f"{dest}_STG{uuid.uuid4().hex[:8].upper()}"
 
     def _write_attempt(self, df: DataFrame, staging: str) -> None:
-        """One staged write (the retryable unit; tests inject
-        flakiness by overriding this — the parquet-warehouse seam)."""
+        self._ensure_schema(df.sparkSession, staging.split(".", 1)[0])
         w = df.write.format("jdbc").option("url", self.url).option(
             "dbtable", staging
         )
@@ -144,39 +109,16 @@ class JdbcWarehouse:
             w = w.option("driver", self.driver)
         w.mode("overwrite").save()
 
-    def _publish(
-        self,
-        spark: SparkSession,
-        staging: str,
-        dataset: str,
-        full_name: str,
-        mode: str,
-    ) -> None:
-        dest = self.qualified(dataset, full_name)
-        exists = self.table_exists(spark, dataset, full_name)
-        if mode == "overwrite" and exists:
-            self._execute(spark, f"DROP TABLE {dest}")
-            exists = False
-        if not exists:
-            # create-on-demand: atomic DDL rename — the destination
-            # appears fully populated or not at all
-            self._execute(
-                spark,
-                f"RENAME TABLE {staging} TO {_ident(full_name, 'table')}",
-            )
+    def _publish(self, spark: SparkSession, staging: str, dest: str, how: str) -> None:
+        if how == "append":
+            self._execute(spark, f"INSERT INTO {dest} SELECT * FROM {staging}")
             return
-        # append: ONE retryable statement — statement atomicity means a
-        # failed insert lands zero rows and the retry cannot
-        # double-append. The staging DROP is best-effort CLEANUP, not
-        # part of the retryable unit: once the INSERT commits the write
-        # succeeded, and surfacing a failed DROP would re-enter the
-        # retry loop and re-insert committed rows (an orphan _STG table
-        # is harmless; a double append is not).
-        self._execute(spark, f"INSERT INTO {dest} SELECT * FROM {staging}")
-        try:
-            self._execute(spark, f"DROP TABLE {staging}")
-        except Exception:
-            pass
+        if how == "replace":
+            self._execute(spark, f"DROP TABLE {dest}")
+        self._execute(spark, f"RENAME TABLE {staging} TO {dest.split('.', 1)[1]}")
+
+    def _discard(self, spark: SparkSession, staging: str) -> None:
+        self._execute(spark, f"DROP TABLE {staging}")
 
     def read(self, spark: SparkSession, dataset: str, full_name: str) -> DataFrame:
         r = spark.read.format("jdbc").option("url", self.url).option(

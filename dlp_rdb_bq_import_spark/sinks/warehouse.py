@@ -1,4 +1,5 @@
-"""Warehouse sink: per-table dynamic destinations + dead-letter capture.
+"""Warehouse sinks: the one staged-write loop (``StagedSink``), the
+parquet sink on it, and dead-letter capture.
 
 Parity targets:
 - Dynamic-destination write ``dataset.<schema>_<table>`` with
@@ -10,9 +11,10 @@ Parity targets:
   table — each write is a distributed job, the loop is metadata-only.
 - Write method: the reference uses STREAMING_INSERTS with transient
   retry (DBImportPipeline.java:130) while its README claims load jobs
-  (README.md:181). We use atomic batch writes (parquet append), matching
-  the README's stated intent; retries come free from Spark task
-  re-execution (SURVEY.md §4.2).
+  (README.md:181). We use atomic batch writes, matching the README's
+  stated intent; the transient retry is ``StagedSink.write``. The
+  parquet publish primitive is rename: a directory swap for create and
+  overwrite, one rename per part file for append.
 - Failed-insert capture → quarantine (DBImportPipeline.java:134-146) and
   dead-letter union+log (DBImportPipeline.java:148-162): errors become
   rows in a quarantine parquet table instead of log lines.
@@ -21,21 +23,25 @@ Parity targets:
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 import traceback
 import uuid
+from collections.abc import Sequence
+from contextlib import suppress
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+_log = logging.getLogger("dlp_rdb_bq_import_spark")
 
 def replace_dir(staged: str, path: str) -> None:
     """Publish a fully-written staging directory over ``path`` by
     metadata-only renames — the ONE implementation of the swap
-    (Warehouse overwrite publish, compaction, and the streaming upsert
-    view all call this; three hand-rolled copies previously drifted).
+    (the Warehouse publish, which compaction goes through, and the
+    streaming upsert view call this; hand-rolled copies had drifted).
 
     Failure semantics: the backup name is unique per publish, so a
     leftover backup from a crashed run can never wedge later publishes
@@ -84,15 +90,34 @@ class WriteResult:
     quarantined_rows: int = 0
 
 
-class Warehouse:
-    """A directory-backed dataset namespace: ``<root>/<dataset>/<table>/``
-    parquet directories, created on demand."""
+class StagedSink:
+    """The staged-atomic write contract every warehouse sink keeps.
 
-    def __init__(self, root: str):
-        self.root = root
+    The reference writes each table with transient retry and captures
+    failed inserts instead of failing the job (DBImportPipeline.java:
+    115-146). ``write`` runs that contract once for every sink:
 
-    def table_path(self, dataset: str, full_name: str) -> str:
-        return os.path.join(self.root, dataset, full_name)
+    - ``mode`` is ``append`` or ``overwrite``; anything else, or a
+      destination name the sink rejects, raises before any attempt;
+    - each attempt materializes the frame into a FRESH staging name
+      (``_write_attempt``), then publishes it (``_publish``) in one step
+      that lands all of the attempt or none of it. So a failed attempt
+      leaves nothing visible and the retry cannot double-append;
+    - append vs replace is decided here, per attempt, from ``mode`` and
+      ``table_exists``: ``append`` into an existing table, ``replace``
+      an existing table on overwrite, ``create`` a missing one;
+    - the staging is discarded after every attempt, best-effort. After a
+      committed publish a failed discard only leaves an orphan staging
+      (harmless); it never re-enters the retry, which would append the
+      committed rows twice;
+    - after ``max_retries + 1`` failed attempts the result is
+      ``status="failed"`` with the last error: dead-letter, not crash.
+      Every failed attempt and the final dead letter are logged on the
+      ``dlp_rdb_bq_import_spark`` logger.
+
+    A sink supplies ``qualified``, ``table_exists`` and the four
+    primitives ``_staging_name``, ``_write_attempt``, ``_publish`` and
+    ``_discard``. Tests inject faults by overriding ``_write_attempt``."""
 
     def write(
         self,
@@ -101,64 +126,100 @@ class Warehouse:
         full_name: str,
         mode: str = "append",
         max_retries: int = 2,
+        _partition_by: Sequence[str] = (),
     ) -> WriteResult:
-        """Staged-atomic write with bounded retry — the reference retries
-        transient BigQuery insert errors (DBImportPipeline.java:130-132
-        ``retryTransientErrors``). Each attempt materializes to a fresh
-        staging directory and publishes by rename, so a failed attempt
-        leaves nothing visible and a retry can never double-append."""
-        path = self.table_path(dataset, full_name)
+        if mode not in ("append", "overwrite"):
+            raise ValueError(f"unsupported write mode {mode!r}")
+        dest = self.qualified(dataset, full_name)
+        spark = df.sparkSession
+        # the private _partition_by reaches only the parquet sink's attempt
+        opts = {"partition_by": list(_partition_by)} if _partition_by else {}
+        tries = max_retries + 1
         last: str | None = None
-        staged = path + "._staging"
-        for attempt in range(1, max_retries + 2):
+        for attempt in range(1, tries + 1):
+            staging = self._staging_name(dest)
             try:
-                self._write_attempt(df, staged)
-                self._publish(staged, path, mode)
-                return WriteResult(full_name, path, "ok", attempts=attempt)
+                self._write_attempt(df, staging, **opts)
+                exists = self.table_exists(spark, dataset, full_name)
+                how = "create" if not exists else "append" if mode == "append" else "replace"
+                self._publish(spark, staging, dest, how)
+                return WriteResult(full_name, dest, "ok", attempts=attempt)
             except Exception as e:  # dead-letter, not crash (S9)
                 last = f"{e}\n{traceback.format_exc()}"
-                shutil.rmtree(staged, ignore_errors=True)
-        return WriteResult(full_name, path, "failed", last, attempts=max_retries + 1)
+                _log.warning(
+                    "write %s to %s: attempt %d of %d failed with %s",
+                    full_name, dest, attempt, tries, type(e).__name__,
+                )
+            finally:
+                with suppress(Exception):
+                    self._discard(spark, staging)
+        _log.error("write %s to %s: dead-lettered after %d attempts", full_name, dest, tries)
+        return WriteResult(full_name, dest, "failed", last, attempts=tries)
 
-    def _write_attempt(self, df: DataFrame, staged: str) -> None:
-        """One write attempt into the staging directory (the retryable
-        unit; tests inject flakiness by overriding this)."""
-        df.write.mode("overwrite").parquet(staged)
+
+class Warehouse(StagedSink):
+    """A directory-backed dataset namespace: ``<root>/<dataset>/<table>/``
+    parquet directories, created on demand. Staging is the sibling
+    ``<table>._staging``; publish is a directory swap (``replace_dir``)
+    or, for append, a rename of each staged part file into the table."""
+
+    def __init__(self, root: str):
+        self.root = root
+
+    def table_path(self, dataset: str, full_name: str) -> str:
+        return os.path.join(self.root, dataset, full_name)
+
+    qualified = table_path
+
+    def table_exists(self, spark: SparkSession, dataset: str, full_name: str) -> bool:
+        return os.path.isdir(self.table_path(dataset, full_name))
 
     @staticmethod
-    def _publish(staged: str, path: str, mode: str) -> None:
-        """Make a fully-written staging directory visible: directory
-        swap (``replace_dir``) for overwrite/first write, per-file
-        rename (uniquely prefixed) for append. Renames are metadata-only
-        — readers see the old or the new table, never a partial write.
+    def _staging_name(path: str) -> str:
+        return path + "._staging"
 
-        A partially-failed append publish moves its already-published
-        files BACK into staging before raising, so the caller's retry
-        re-publishes the whole attempt exactly once instead of
-        double-appending the files that had landed (best-effort: an
-        I/O layer that fails the move-back too can still leave
-        duplicates, but the window is one rename, not one attempt)."""
-        if mode == "overwrite" or not os.path.isdir(path):
+    def _write_attempt(
+        self, df: DataFrame, staged: str, partition_by: Sequence[str] = ()
+    ) -> None:
+        df.write.mode("overwrite").partitionBy(*partition_by).parquet(staged)
+
+    @staticmethod
+    def _publish(spark: SparkSession, staged: str, path: str, how: str) -> None:
+        """Renames are metadata-only, so readers see the old or the new
+        table, never a partial write. Append moves each part file,
+        uniquely prefixed, into the same ``col=value/`` directory of the
+        table. If that fails partway, the moved files go BACK into
+        staging before raising, so the retry re-publishes the whole
+        attempt exactly once (best-effort: an I/O layer that fails the
+        move-back too can still leave duplicates, but the window is one
+        rename, not one attempt)."""
+        if how != "append":
             replace_dir(staged, path)
             return
-        if mode != "append":
-            raise ValueError(f"unsupported write mode {mode!r}")
         token = uuid.uuid4().hex[:8]
+        parts = [
+            os.path.relpath(os.path.join(d, f), staged)
+            for d, _, files in os.walk(staged)
+            for f in files
+            if f.endswith(".parquet")
+        ]
         moved: list[tuple[str, str]] = []
         try:
-            for fname in os.listdir(staged):
-                if fname.endswith(".parquet"):
-                    dst = f"{token}-{fname}"
-                    os.rename(os.path.join(staged, fname), os.path.join(path, dst))
-                    moved.append((dst, fname))
+            for rel in parts:
+                head, fname = os.path.split(rel)
+                src, dst = os.path.join(staged, rel), os.path.join(path, head, f"{token}-{fname}")
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.rename(src, dst)
+                moved.append((dst, src))
         except BaseException:
-            for dst, fname in moved:
-                try:
-                    os.rename(os.path.join(path, dst), os.path.join(staged, fname))
-                except OSError:
-                    pass
+            for dst, src in moved:
+                with suppress(OSError):
+                    os.rename(dst, src)
             raise
-        shutil.rmtree(staged)
+
+    @staticmethod
+    def _discard(spark: SparkSession, staged: str) -> None:
+        shutil.rmtree(staged, ignore_errors=True)
 
     def read(self, spark: SparkSession, dataset: str, full_name: str) -> DataFrame:
         """Read a table; when an evolution sidecar exists the saved
@@ -303,14 +364,21 @@ class Warehouse:
         as (table, payload, error) in a queryable parquet quarantine
         table — a distributed write, unlike the table-level JSONL channel,
         because at 100 TB a hot table can reject millions of rows.
-        Expects columns (payload, error); returns the quarantined count."""
+        Expects columns (payload, error); returns the quarantined count,
+        and raises when the quarantine write dead-letters."""
         n = violations.count()
         if n == 0:
             return 0
-        qpath = os.path.join(self.root, dataset, "_quarantine_rows", full_name)
-        violations.select(
-            F.lit(full_name).alias("table"), "payload", "error"
-        ).write.mode("append").parquet(qpath)
+        res = self.write(
+            violations.select(F.lit(full_name).alias("table"), "payload", "error"),
+            os.path.join(dataset, "_quarantine_rows"),
+            full_name,
+        )
+        if res.status != "ok":
+            raise RuntimeError(
+                f"write to {res.destination} failed after {res.attempts} attempts: "
+                f"{res.error}"
+            )
         return n
 
     def write_partitioned(
@@ -329,17 +397,13 @@ class Warehouse:
         partition is written by ``files_per_partition`` tasks instead of
         every task appending a sliver to every partition — the classic
         small-file explosion (tasks × partitions files per load)."""
-        path = self.table_path(dataset, full_name)
-        try:
-            shuffled = df.repartition(
-                *([F.col(c) for c in partition_cols])
-            ) if files_per_partition == 1 else df.repartition(
-                files_per_partition, *[F.col(c) for c in partition_cols]
-            )
-            shuffled.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-            return WriteResult(full_name, path, "ok")
-        except Exception as e:
-            return WriteResult(full_name, path, "failed", f"{e}\n{traceback.format_exc()}")
+        by = [F.col(c) for c in partition_cols]
+        shuffled = (
+            df.repartition(*by)
+            if files_per_partition == 1
+            else df.repartition(files_per_partition, *by)
+        )
+        return self.write(shuffled, dataset, full_name, mode, _partition_by=partition_cols)
 
     def compact(
         self,
@@ -352,12 +416,12 @@ class Warehouse:
         maintenance pass every incrementally-appended table needs: each
         micro-batch/merge leaves small files; scans then pay per-file
         open cost and lose row-group locality). Returns the new file
-        count. The rewrite stages to a sibling directory and swaps via
-        rename, so readers see the old or the new layout, never a
-        partial mix. (Flat tables; a Hive-partitioned table compacts
-        per partition directory instead.)"""
+        count. The rewrite is an overwrite ``write``, so readers see the
+        old or the new layout, never a partial mix; an evolution sidecar
+        is kept. (Flat tables; a Hive-partitioned table compacts per
+        partition directory instead.)"""
         path = self.table_path(dataset, full_name)
-        df = spark.read.parquet(path)
+        saved = self._load_schema(path)
         size = sum(
             os.path.getsize(os.path.join(root, f))
             for root, _, files in os.walk(path)
@@ -365,9 +429,12 @@ class Warehouse:
             if f.endswith(".parquet")
         )
         n_files = max(1, -(-size // target_file_bytes))  # ceil
-        staged = path + "._compacting"
-        df.repartition(n_files).write.mode("overwrite").parquet(staged)
-        replace_dir(staged, path)
+        df = self.read(spark, dataset, full_name).repartition(n_files)
+        res = self.write(df, dataset, full_name, mode="overwrite")
+        if res.status != "ok":
+            raise RuntimeError(f"compaction of {path} failed: {res.error}")
+        if saved is not None:
+            self._save_schema(path, saved)
         return len(
             [f for f in os.listdir(path) if f.endswith(".parquet")]
         )

@@ -7,7 +7,9 @@
    timeout=0: the real kafka-python close() with no timeout BLOCKS
    until buffered records deliver, i.e. an implicit flush.
 3. (low) JdbcWarehouse append publish: a failed staging DROP after a
-   committed INSERT must NOT re-enter the retry loop (double append).
+   committed INSERT must NOT re-enter the retry loop (double append);
+   now checked for every sink by
+   ``test_sink_contract::test_failed_cleanup_after_publish_does_not_double_append``.
 4. (low) brier_decomposition's per-bin terms must fold in
    decimal(38,0) without an intermediate int64 cast.
 """
@@ -17,7 +19,6 @@ from __future__ import annotations
 from pyspark.sql import Row
 import pyspark.sql.functions as F
 
-from dlp_rdb_bq_import_spark.sinks.jdbc_warehouse import JdbcWarehouse
 from dlp_rdb_bq_import_spark.sinks.kafka_transport import KafkaTransport
 
 
@@ -122,34 +123,6 @@ def test_kafka_abort_tolerates_no_kwarg_close():
     tr.open()
     tr.abort()
     assert prod.closed
-
-
-# ------------------------------------------------ warehouse DROP after INSERT
-
-
-def test_failed_staging_drop_after_insert_does_not_double_append(spark):
-    """INSERT commits, the staging DROP fails: the write already
-    succeeded, so the sink must report ok (orphan staging table is
-    acceptable) — re-entering the retry loop would re-insert."""
-    url = "jdbc:derby:memory:whadv13;create=true"
-    spark._jvm.java.sql.DriverManager.getConnection(url).close()
-
-    class DropFails(JdbcWarehouse):
-        def _execute(self, spark_, *statements):
-            for sql in statements:
-                if sql.startswith("DROP TABLE") and "_STG" in sql:
-                    raise RuntimeError("simulated lock timeout on DROP")
-            super()._execute(spark_, *statements)
-
-    wh = DropFails(url)
-    df = spark.createDataFrame(
-        [Row(id=i) for i in range(7)], schema="id long"
-    )
-    wh.write(df, "lake", "adv_drop")  # create-on-demand (RENAME path)
-    res = wh.write(df, "lake", "adv_drop", mode="append")
-    assert res.status == "ok" and res.attempts == 1
-    got = sorted(r.id for r in wh.read(spark, "lake", "adv_drop").collect())
-    assert got == sorted(list(range(7)) * 2)  # exactly two copies, not three
 
 
 # -------------------------------------------- lint allowance grain contract

@@ -367,6 +367,15 @@ def test_row_level_quarantine(spark, tmp_path):
     assert q.filter(F.col("table") != "main_t").count() == 0
 
 
+def _dead_letters(wh_dir):
+    qdir = os.path.join(wh_dir, "DS", "_quarantine")
+    records = []
+    for fname in os.listdir(qdir):
+        with open(os.path.join(qdir, fname)) as f:
+            records.extend(json.loads(line) for line in f)
+    return records
+
+
 def test_row_quarantine_disabled_loses_whole_table(spark, tmp_path):
     """row_quarantine=False reproduces the failure mode row-level capture
     exists to fix: ANSI cast aborts the job, the WHOLE table dead-letters
@@ -382,65 +391,65 @@ def test_row_quarantine_disabled_loses_whole_table(spark, tmp_path):
     assert not os.path.exists(os.path.join(wh_dir, "DS", "main_t"))  # atomic: nothing visible
     assert not os.path.exists(os.path.join(wh_dir, "DS", "_quarantine_rows"))
     # table-level dead-letter recorded exactly once
-    qdir = os.path.join(wh_dir, "DS", "_quarantine")
-    records = []
-    for fname in os.listdir(qdir):
-        with open(os.path.join(qdir, fname)) as f:
-            records.extend(json.loads(line) for line in f)
-    assert [r["table"] for r in records] == ["main_t"]
+    assert [r["table"] for r in _dead_letters(wh_dir)] == ["main_t"]
 
 
-class _FlakyWarehouse(Warehouse):
-    """Fails the first N write attempts with a transient-style error."""
+def test_failed_row_quarantine_keeps_table_destination(spark, tmp_path, monkeypatch):
+    """The conforming rows are published, then every row-quarantine
+    attempt fails: the table's result keeps its destination (its rows
+    are visible) and fails with an error naming the quarantine write,
+    and the dead letter says the same."""
+    from dlp_rdb_bq_import_spark.plans import import_job
 
-    def __init__(self, root, fail_first_n):
-        super().__init__(root)
-        self.remaining_failures = fail_first_n
-        self.attempts_seen = 0
+    class QuarantineDown(Warehouse):
+        def _write_attempt(self, df, staged, **kw):
+            if f"{os.sep}_quarantine_rows{os.sep}" in staged:
+                raise IOError("quarantine volume unavailable")
+            super()._write_attempt(df, staged, **kw)
 
-    def _write_attempt(self, df, staged):
-        self.attempts_seen += 1
-        if self.remaining_failures > 0:
-            self.remaining_failures -= 1
-            # partial garbage must not become visible
-            os.makedirs(staged, exist_ok=True)
-            with open(os.path.join(staged, "part-junk.parquet"), "w") as f:
-                f.write("partial")
-            raise IOError("transient: backend unavailable")
-        super()._write_attempt(df, staged)
+    monkeypatch.setattr(import_job, "Warehouse", QuarantineDown)
+    wh_dir = str(tmp_path / "wh")
+    options = ImportJobOptions(jdbc_spec="unused", dataset="DS", warehouse_dir=wh_dir)
+    results = run_import(spark, options, source=_TypedStringSource())
 
-
-def test_write_retry_flaky_sink_succeeds(spark, tmp_path):
-    """First attempt fails (leaving staging garbage), retry succeeds, no
-    partial output ever visible in the table directory."""
-    wh = _FlakyWarehouse(str(tmp_path / "wh"), fail_first_n=1)
-    res = wh.write(spark.range(100), "DS", "t", max_retries=2)
-    assert res.status == "ok" and res.attempts == 2 and wh.attempts_seen == 2
-    root = wh.table_path("DS", "t")
-    assert sorted(r["id"] for r in wh.read(spark, "DS", "t").collect()) == list(range(100))
-    assert not os.path.exists(root + "._staging")
-    assert not any("junk" in f for f in os.listdir(root))
+    wh = Warehouse(wh_dir)
+    assert results[0].destination == wh.table_path("DS", "main_t")
+    assert results[0].status == "failed"
+    assert "row quarantine failed" in results[0].error
+    assert "quarantine volume unavailable" in results[0].error
+    assert wh.read(spark, "DS", "main_t").count() == 7
+    assert _dead_letters(wh_dir) == [{"table": "main_t", "error": results[0].error}]
 
 
-def test_write_retry_exhausted_reports_failure(spark, tmp_path):
-    wh = _FlakyWarehouse(str(tmp_path / "wh"), fail_first_n=99)
-    res = wh.write(spark.range(10), "DS", "t", max_retries=2)
-    assert res.status == "failed" and res.attempts == 3
-    assert "transient" in res.error
-    assert not os.path.exists(wh.table_path("DS", "t"))  # nothing visible
-    assert not os.path.exists(wh.table_path("DS", "t") + "._staging")
+def test_run_import_calls_the_swappable_warehouse(spark, tmp_path, monkeypatch):
+    """perfbench times the sink by swapping ``import_job.Warehouse`` for a
+    subclass that wraps ``write`` and ``quarantine_rows`` and reads their
+    positional arguments. run_import must keep calling both, that way,
+    or the benchmark's warehouse.* layer metrics silently read zero."""
+    from dlp_rdb_bq_import_spark.plans import import_job
 
+    calls = []
 
-def test_write_append_is_atomic_and_exact(spark, tmp_path):
-    """Two appends (the second after a failed attempt) deliver each row
-    exactly once — the staged-rename publish can't double-append."""
-    wh = _FlakyWarehouse(str(tmp_path / "wh"), fail_first_n=0)
-    assert wh.write(spark.range(0, 50), "DS", "t").status == "ok"
-    wh.remaining_failures = 1
-    res = wh.write(spark.range(50, 100), "DS", "t", max_retries=1)
-    assert res.status == "ok" and res.attempts == 2
-    got = sorted(r["id"] for r in wh.read(spark, "DS", "t").collect())
-    assert got == list(range(100))
+    class Recording(Warehouse):
+        def write(self, df, dataset, full_name, *args, **kwargs):
+            calls.append(("write", dataset, full_name))
+            return super().write(df, dataset, full_name, *args, **kwargs)
+
+        def quarantine_rows(self, violations, dataset, full_name):
+            calls.append(("quarantine_rows", dataset, full_name))
+            return super().quarantine_rows(violations, dataset, full_name)
+
+    monkeypatch.setattr(import_job, "Warehouse", Recording)
+    options = ImportJobOptions(
+        jdbc_spec="unused", dataset="DS", warehouse_dir=str(tmp_path / "wh")
+    )
+    results = run_import(spark, options, source=_TypedStringSource())
+    assert results[0].status == "ok" and results[0].quarantined_rows == 3
+    assert calls == [
+        ("write", "DS", "main_t"),
+        ("quarantine_rows", "DS", "main_t"),
+        ("write", os.path.join("DS", "_quarantine_rows"), "main_t"),
+    ]
 
 
 def test_iter_batches_limits_order_and_oversize():

@@ -98,6 +98,24 @@ def test_plain_written_table_evolves_from_disk_schema(spark, tmp_path):
     assert {r.id for r in got.collect()} == {1, 2}
 
 
+def test_compact_keeps_evolution_sidecar(spark, tmp_path):
+    """Compaction rewrites an evolved table through ``read``/``write``
+    and keeps its ``_schema.json``: both columns read back, the rows
+    written before the column existed still read NULL for it, and no
+    row is lost or doubled."""
+    wh = _wh(tmp_path)
+    v1 = spark.createDataFrame([(1,), (2,)], "id long")
+    assert wh.write_evolved(v1, "ds", "t").status == "ok"
+    v2 = spark.createDataFrame([(3, "x")], "id long, extra string")
+    assert wh.write_evolved(v2, "ds", "t").status == "ok"
+    assert wh.compact(spark, "ds", "t") == 1
+    assert os.path.isfile(os.path.join(wh.table_path("ds", "t"), "_schema.json"))
+    got = wh.read(spark, "ds", "t")
+    assert got.columns == ["id", "extra"]
+    assert got.count() == 3
+    assert {r.id: r.extra for r in got.collect()} == {1: None, 2: None, 3: "x"}
+
+
 def test_evolution_plan_actions(spark):
     from dlp_rdb_bq_import_spark.catalog import evolution_plan
 
