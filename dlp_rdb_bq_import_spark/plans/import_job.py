@@ -13,6 +13,7 @@ is captured as a dead-letter record rather than failing the job
 
 from __future__ import annotations
 
+import logging
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +30,8 @@ from ..functions.rowshape import (
 from ..functions.tokenize import TemplateRegistry, deidentify
 from ..sinks.warehouse import Warehouse, WriteResult
 from ..sources import get_source
+
+_log = logging.getLogger("dlp_rdb_bq_import_spark")
 
 
 def shape_table(
@@ -84,6 +87,9 @@ def run_import(
 
     def import_one(table: SqlTable) -> WriteResult:
         df = source.read_table(spark, table, offset_count=options.offset_count)
+        # a source without the feed (a wrapper, say) rejects nothing
+        read_rejected = getattr(source, "read_rejected", None)
+        violations = read_rejected(spark, table) if read_rejected else None
         target = table.spark_schema(mode=options.type_mode)
         split = (
             options.row_quarantine
@@ -92,24 +98,21 @@ def run_import(
             == {check_header_name(c) for c in df.columns}
         )
         df = shape_table(df, table, templates, options.type_mode, cast=not split)
-        if not split:
-            return warehouse.write(
+        # Row-level failed-insert capture: violators (and the rows the
+        # source rejected) quarantined with payload, conforming rows
+        # still written (the reference's getFailedInserts semantics —
+        # one poisoned row must not cost the table). Persist so the two
+        # branches don't re-run the source scan twice.
+        parent = df.persist() if split else None
+        try:
+            if split:
+                df, bad = conformance_split(parent, target)
+                violations = bad if violations is None else bad.unionByName(violations)
+            res = warehouse.write(
                 df, options.dataset, table.full_name, max_retries=options.write_retries
             )
-        # Row-level failed-insert capture: violators quarantined with
-        # payload, conforming rows still written (the reference's
-        # getFailedInserts semantics — one poisoned row must not cost
-        # the table). Persist so the two branches don't re-run the
-        # source scan twice.
-        df = df.persist()
-        try:
-            conforming, violations = conformance_split(df, target)
-            res = warehouse.write(
-                conforming,
-                options.dataset,
-                table.full_name,
-                max_retries=options.write_retries,
-            )
+            if violations is None:
+                return res
             try:
                 res.quarantined_rows = warehouse.quarantine_rows(
                     violations, options.dataset, table.full_name
@@ -117,9 +120,15 @@ def run_import(
             except Exception as e:  # the table's rows may be visible: keep its destination
                 prior = f"{res.error}\n" if res.error else ""
                 res.status, res.error = "failed", f"{prior}row quarantine failed: {e}"
+            if res.quarantined_rows:
+                _log.warning(
+                    "import %s: %d rows quarantined to %s/_quarantine_rows",
+                    table.full_name, res.quarantined_rows, options.dataset,
+                )
             return res
         finally:
-            df.unpersist()
+            if parent is not None:
+                parent.unpersist()
 
     with ThreadPoolExecutor(max_workers=options.max_parallel_tables) as pool:
         futures = {pool.submit(import_one, t): t for t in tables}

@@ -39,7 +39,7 @@ def get_source(spec: str, **kwargs) -> Source:
         # same directory-catalog contract as files://, binary-columnar
         # formats; quarantine is per FILE (see columnar_source)
         return ColumnarDirSource(spec.split("://", 1)[1], **kwargs)
-    return ParquetDirSource(spec)
+    return ParquetDirSource(spec, **kwargs)
 
 
 __all__ = [

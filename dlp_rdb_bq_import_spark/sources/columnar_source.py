@@ -22,7 +22,8 @@ quarantine unit here is therefore the FILE:
   schema is probed; unreadable files and files whose schema is not
   identical to the frozen one are EXCLUDED from ``read_table`` and
   surfaced by ``read_corrupt`` as ``(path, reason)`` rows — the
-  dead-letter feed, S9 parity at file grain.
+  dead-letter feed, S9 parity at file grain, which ``read_rejected``
+  hands to ``run_import``'s row quarantine.
 
 ORC ships inside Spark. Avro is Spark's one EXTERNAL built-in module
 (the ``spark-avro`` package must be on the classpath per its public
@@ -37,13 +38,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import SqlColumn, SqlTable
-from .base import Source
-from .parquet_source import _PK_PATTERN, _SPARK_TO_SOURCE_TYPE
-
-_EXTS = {".orc": "orc", ".avro": "avro"}
+from ..catalog import SqlTable
+from .base import DirSource
 
 
 def avro_available(spark: SparkSession) -> bool:
@@ -58,26 +57,18 @@ def avro_available(spark: SparkSession) -> bool:
         return False
 
 
-class ColumnarDirSource(Source):
+class ColumnarDirSource(DirSource):
     """One table per ``<name>.orc`` / ``<name>.avro`` entry in a
     directory; an entry may be a single file or a directory of part
     files (the shape Spark's own writers produce)."""
 
+    EXTENSIONS = {".orc": "orc", ".avro": "avro"}
+
     def __init__(self, directory: str, schema_name: str = "main"):
-        self.directory = directory.rstrip("/")
-        self.schema_name = schema_name
-        self._frozen: dict[str, T.StructType] = {}
-        self._split: dict[str, tuple[list[str], list[tuple[str, str]]]] = {}
+        super().__init__(directory, schema_name)
+        self._probed: dict[str, tuple[T.StructType, list[str], list[tuple[str, str]]]] = {}
 
     # -- catalog ------------------------------------------------------------
-
-    def _entries(self) -> list[tuple[str, str, str]]:
-        out = []
-        for fname in sorted(os.listdir(self.directory)):
-            stem, ext = os.path.splitext(fname)
-            if ext in _EXTS:
-                out.append((stem, _EXTS[ext], os.path.join(self.directory, fname)))
-        return out
 
     def _part_files(self, fmt: str, path: str) -> list[str]:
         if os.path.isfile(path):
@@ -88,11 +79,14 @@ class ColumnarDirSource(Source):
             if f.endswith(f".{fmt}") and not f.startswith(("_", "."))
         )
 
-    def _probe(self, spark: SparkSession, fmt: str, path: str) -> None:
+    def _probe(
+        self, spark: SparkSession, fmt: str, path: str
+    ) -> tuple[T.StructType, list[str], list[tuple[str, str]]]:
         """Freeze the schema off the first readable part file and
-        split the rest into conforming vs quarantined."""
-        if path in self._frozen:
-            return
+        split the rest into conforming vs quarantined: ``(frozen
+        schema, good files, [(bad file, reason)])``, probed once."""
+        if path in self._probed:
+            return self._probed[path]
         if fmt == "avro" and not avro_available(spark):
             raise RuntimeError(
                 "Avro source requires the spark-avro module (Spark's "
@@ -124,35 +118,11 @@ class ColumnarDirSource(Source):
                 )
         if frozen is None:
             raise ValueError(f"no readable {fmt} part file under {path}")
-        self._frozen[path] = frozen
-        self._split[path] = (good, bad)
+        self._probed[path] = (frozen, good, bad)
+        return self._probed[path]
 
-    def list_tables(self, spark: SparkSession) -> list[SqlTable]:
-        tables: list[SqlTable] = []
-        for i, (name, fmt, path) in enumerate(self._entries()):
-            self._probe(spark, fmt, path)
-            cols = []
-            for ordinal, f in enumerate(self._frozen[path].fields, start=1):
-                src_type = _SPARK_TO_SOURCE_TYPE.get(
-                    f.dataType.simpleString(), "VARCHAR"
-                )
-                is_pk = ordinal == 1 and bool(_PK_PATTERN.match(f.name))
-                cols.append(
-                    SqlColumn(
-                        f.name, ordinal, src_type,
-                        nullable=f.nullable, primary_key=is_pk,
-                    )
-                )
-            tables.append(
-                SqlTable(schema=self.schema_name, name=name, key=i, columns=tuple(cols))
-            )
-        return tables
-
-    def _path_for(self, table: SqlTable) -> tuple[str, str]:
-        for name, fmt, path in self._entries():
-            if name == table.name:
-                return fmt, path
-        raise KeyError(f"no {list(_EXTS)} entry for table {table.name!r}")
+    def _catalog_schema(self, spark: SparkSession, fmt: str, path: str) -> T.StructType:
+        return self._probe(spark, fmt, path)[0]
 
     # -- read paths ---------------------------------------------------------
 
@@ -165,21 +135,16 @@ class ColumnarDirSource(Source):
         widened into the scan). ``offset_count`` is satisfied by the
         session's maxPartitionBytes split sizing, as for parquet."""
         fmt, path = self._path_for(table)
-        self._probe(spark, fmt, path)
-        good, _ = self._split[path]
-        return (
-            spark.read.format(fmt).schema(self._frozen[path]).load(good)
-        )
+        frozen, good, _ = self._probe(spark, fmt, path)
+        return spark.read.format(fmt).schema(frozen).load(good)
 
     def read_corrupt(self, spark: SparkSession, table: SqlTable) -> DataFrame:
         """Dead-letter feed: one row per quarantined part file —
         ``(path string, reason string)``."""
-        fmt, path = self._path_for(table)
-        self._probe(spark, fmt, path)
-        _, bad = self._split[path]
-        return spark.createDataFrame(
-            bad or [], schema="path string, reason string"
-        )
+        _, _, bad = self._probe(spark, *self._path_for(table))
+        return spark.createDataFrame(bad, schema="path string, reason string")
 
-    def row_count(self, spark: SparkSession, table: SqlTable) -> int:
-        return self.read_table(spark, table).count()
+    def read_rejected(self, spark: SparkSession, table: SqlTable) -> DataFrame:
+        return self.read_corrupt(spark, table).select(
+            F.col("path").alias("payload"), F.col("reason").alias("error")
+        )

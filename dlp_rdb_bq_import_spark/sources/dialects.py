@@ -38,8 +38,8 @@ from dataclasses import dataclass
 @dataclass(frozen=True)
 class SqlDialect:
     """SQL text surface for one engine. ``{schema}``/``{table}``/
-    ``{pk}`` placeholders are filled by the source; queries that list
-    catalog objects take no placeholders."""
+    ``{pk}``/``{where}`` placeholders are filled by the source; queries
+    that list catalog objects take no placeholders."""
 
     name: str
     catalog_strategy: str  # "information_schema" | "metadata"
@@ -101,7 +101,10 @@ SQLSERVER = SqlDialect(
         "AND CONSTRAINT_NAME LIKE 'PK%'"
     ),
     count_query="SELECT COUNT(*) AS n FROM {schema}.{table}",
-    bounds_query="SELECT MIN({pk}) AS lo, MAX({pk}) AS hi FROM {schema}.{table}",
+    # one probe sizes a ranged scan; ``{where}`` is "" or " WHERE <predicate>"
+    bounds_query=(
+        "SELECT MIN({pk}) AS lo, MAX({pk}) AS hi, COUNT(*) AS n FROM {schema}.{table}{where}"
+    ),
     # TableToDbRowFn.java:80-89, verbatim shape (OFFSET n * (i - 1)).
     page_template=(
         "SELECT * FROM {schema}.{table} ORDER BY {pk} "

@@ -14,8 +14,9 @@ string between catalog time and read time.
 The full scan is ``spark.read.text`` + ``from_csv``/``from_json``
 expressions rather than the csv/json *source*: parsing as an
 expression keeps the raw line alongside the parsed struct, so
-malformed rows route to a quarantine DataFrame (the file-format
-analogue of the reference's failed-insert dead letters,
+malformed rows route to a quarantine DataFrame (``read_corrupt``; as
+``read_rejected`` it reaches ``run_import``'s row quarantine — the
+file-format analogue of the reference's failed-insert dead letters,
 DBImportPipeline.java:134-146) without the source-level restriction
 that forbids corrupt-column-only queries, and without caching the
 scan. The text scan is splittable, so partitioning follows the
@@ -24,23 +25,20 @@ session's maxPartitionBytes exactly as parquet does.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import SqlColumn, SqlTable
-from .base import Source
-from .parquet_source import _PK_PATTERN, _SPARK_TO_SOURCE_TYPE
-
-_EXTS = {".csv": "csv", ".jsonl": "json", ".json": "json", ".ndjson": "json"}
+from ..catalog import SqlTable
+from .base import DirSource
 
 CORRUPT_COL = "_corrupt"
 
 
-class FileDirSource(Source):
+class FileDirSource(DirSource):
     """One table per ``<name>.<ext>`` file; ext picks the reader."""
+
+    EXTENSIONS = {".csv": "csv", ".jsonl": "json", ".json": "json", ".ndjson": "json"}
 
     def __init__(
         self,
@@ -49,21 +47,12 @@ class FileDirSource(Source):
         csv_options: dict[str, str] | None = None,
         infer_rows: int = 10_000,
     ):
-        self.directory = directory.rstrip("/")
-        self.schema_name = schema_name
+        super().__init__(directory, schema_name)
         self.csv_options = {"header": "true", **(csv_options or {})}
         self.infer_rows = infer_rows
         self._schemas: dict[str, T.StructType] = {}
 
-    def _entries(self) -> list[tuple[str, str, str]]:
-        out = []
-        for fname in sorted(os.listdir(self.directory)):
-            stem, ext = os.path.splitext(fname)
-            if ext in _EXTS:
-                out.append((stem, _EXTS[ext], os.path.join(self.directory, fname)))
-        return out
-
-    def _infer(self, spark: SparkSession, fmt: str, path: str) -> T.StructType:
+    def _catalog_schema(self, spark: SparkSession, fmt: str, path: str) -> T.StructType:
         if path not in self._schemas:
             # Bounded inference: materialize only the first infer_rows
             # lines via the text source and infer over that prefix
@@ -114,7 +103,7 @@ class FileDirSource(Source):
     def _reader(self, spark: SparkSession, fmt: str, path: str) -> DataFrame:
         """(parsed struct ``r``, raw line) rows; ``r[CORRUPT_COL]`` is
         non-null exactly for lines that failed the frozen schema."""
-        schema = self._infer(spark, fmt, path)
+        schema = self._catalog_schema(spark, fmt, path)
         with_corrupt = T.StructType(
             list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
         )
@@ -143,31 +132,6 @@ class FileDirSource(Source):
             parsed = F.from_json(F.col("value"), with_corrupt, opts)
         return raw.select(parsed.alias("r"), F.col("value").alias("_raw"))
 
-    def list_tables(self, spark: SparkSession) -> list[SqlTable]:
-        tables: list[SqlTable] = []
-        for i, (name, fmt, path) in enumerate(self._entries()):
-            schema = self._infer(spark, fmt, path)
-            cols = []
-            for ordinal, f in enumerate(schema.fields, start=1):
-                src_type = _SPARK_TO_SOURCE_TYPE.get(f.dataType.simpleString(), "VARCHAR")
-                is_pk = ordinal == 1 and bool(_PK_PATTERN.match(f.name))
-                cols.append(
-                    SqlColumn(f.name, ordinal, src_type, nullable=f.nullable, primary_key=is_pk)
-                )
-            tables.append(
-                SqlTable(schema=self.schema_name, name=name, key=i, columns=tuple(cols))
-            )
-        return tables
-
-    def row_count(self, spark: SparkSession, table: SqlTable) -> int:
-        return self.read_table(spark, table).count()
-
-    def _path_for(self, table: SqlTable) -> tuple[str, str]:
-        for name, fmt, path in self._entries():
-            if name == table.name:
-                return fmt, path
-        raise KeyError(f"no file for table {table.name!r} in {self.directory}")
-
     def read_table(
         self, spark: SparkSession, table: SqlTable, offset_count: int = 500
     ) -> DataFrame:
@@ -188,4 +152,10 @@ class FileDirSource(Source):
             self._reader(spark, fmt, path)
             .where(F.col(f"r.{CORRUPT_COL}").isNotNull())
             .select(F.col("_raw").alias("raw"))
+        )
+
+    def read_rejected(self, spark: SparkSession, table: SqlTable) -> DataFrame:
+        return self.read_corrupt(spark, table).select(
+            F.col("raw").alias("payload"),
+            F.lit("line does not parse under the catalog schema").alias("error"),
         )

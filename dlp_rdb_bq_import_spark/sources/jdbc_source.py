@@ -19,6 +19,15 @@ Parity with the reference's SQL Server path:
   and numPartitions = ceil(rowcount / offset_count) preserves the
   reference's split arithmetic (TableToDbRowFn.java:157).
 
+Full and incremental scans share one ranged read with ONE probe per
+scan: the dialect's ``bounds_query`` returns the key's MIN, MAX and
+``COUNT(*)`` (over the incremental predicate's rows, when there is
+one). The read falls back to one partition when the key range is empty
+(empty table) or when Spark cannot split the key's type — character
+and fractional keys, which the reference's ORDER BY paging handles and
+a range split does not. ``row_count`` keeps its own ``COUNT(*)`` for
+S4 parity; the scans do not call it.
+
 Dialect surface: the SQL text (catalog probes, count/bounds, the
 reference's paged-scan shape) is parameterized per engine in
 ``sources/dialects.py`` — ``sqlserver`` preserves the reference's
@@ -32,25 +41,31 @@ dialect-tested string-for-string against the reference's forms.
 
 from __future__ import annotations
 
+import logging
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql import types as T
 
 from ..catalog import SqlColumn, SqlTable
 from .base import Source
-from .dialects import SQLSERVER, SqlDialect, dialect_for_url, get_dialect
+from .dialects import SqlDialect, dialect_for_url, get_dialect
 
-# Reference-parity aliases (the SQL Server dialect is the reference's).
-TABLES_QUERY = SQLSERVER.tables_query
-COLUMNS_QUERY = SQLSERVER.columns_query
-PK_QUERY = SQLSERVER.pk_query
-COUNT_QUERY = SQLSERVER.count_query
-BOUNDS_QUERY = SQLSERVER.bounds_query
+_log = logging.getLogger("dlp_rdb_bq_import_spark")
 
 
 def num_partitions_for(row_count: int, offset_count: int) -> int:
     """splits = ceil(count/offset) with a 1 floor (TableToDbRowFn.java:150-167)."""
     return max(1, math.ceil(row_count / max(1, offset_count)))
+
+
+def _range_partitionable(key_type: T.DataType) -> bool:
+    """Spark's JDBC reader splits a range of an integral, date or
+    timestamp column; it parses numeric bounds as longs, so a
+    fractional key cannot be split either."""
+    return isinstance(
+        key_type, (T.IntegralType, T.DateType, T.TimestampType, T.TimestampNTZType)
+    ) or (isinstance(key_type, T.DecimalType) and key_type.scale == 0)
 
 
 class JdbcSource(Source):
@@ -85,14 +100,16 @@ class JdbcSource(Source):
             self.dialect = dialect
         self.catalog_strategy = catalog_strategy or self.dialect.catalog_strategy
 
-    def _read_query(self, spark: SparkSession, query: str) -> DataFrame:
+    def _reader(self, spark: SparkSession, **options: str) -> DataFrameReader:
         return (
             spark.read.format("jdbc")
             .option("url", self.url)
-            .option("query", query)
+            .options(**options)
             .options(**self.properties)
-            .load()
         )
+
+    def _read_query(self, spark: SparkSession, query: str) -> DataFrame:
+        return self._reader(spark, query=query).load()
 
     def list_tables(self, spark: SparkSession) -> list[SqlTable]:
         if self.catalog_strategy == "metadata":
@@ -189,29 +206,7 @@ class JdbcSource(Source):
     def read_table(
         self, spark: SparkSession, table: SqlTable, offset_count: int = 500
     ) -> DataFrame:
-        pk = table.primary_key_column
-        reader = (
-            spark.read.format("jdbc")
-            .option("url", self.url)
-            .option("dbtable", f"{table.schema}.{table.name}")
-            .options(**self.properties)
-        )
-        if pk is not None:
-            n = self.row_count(spark, table)
-            bounds = self._read_query(
-                spark,
-                self.dialect.bounds_query.format(
-                    pk=pk, schema=table.schema, table=table.name
-                ),
-            ).collect()[0]
-            if bounds[0] is not None:
-                reader = (
-                    reader.option("partitionColumn", pk)
-                    .option("lowerBound", str(bounds[0]))
-                    .option("upperBound", str(bounds[1]))
-                    .option("numPartitions", str(num_partitions_for(n, offset_count)))
-                )
-        return reader.load()
+        return self._ranged_read(spark, table, offset_count)
 
     def read_incremental(
         self,
@@ -236,31 +231,40 @@ class JdbcSource(Source):
             lit = "'" + last_value.replace("'", "''") + "'"
         else:
             lit = str(last_value)
-        filtered = (
-            f"(SELECT * FROM {table.schema}.{table.name} "
-            f"WHERE {watermark_col} > {lit}) incr"
-        )
-        reader = (
-            spark.read.format("jdbc")
-            .option("url", self.url)
-            .option("dbtable", filtered)
-            .options(**self.properties)
-        )
-        pk = table.primary_key_column
+        return self._ranged_read(spark, table, offset_count, f" WHERE {watermark_col} > {lit}")
+
+    def _ranged_read(
+        self, spark: SparkSession, table: SqlTable, offset_count: int, where: str = ""
+    ) -> DataFrame:
+        """The one scan behind ``read_table`` and ``read_incremental``:
+        the table (or its rows matching the ``where`` clause),
+        range-partitioned on the key by one bounds probe, or read as
+        one partition."""
+        relation = table.qualified_name
+        dbtable = f"(SELECT * FROM {relation}{where}) incr" if where else relation
+        pk, ranges, reason = table.primary_key_column, {}, "no key column"
         if pk is not None:
-            bounds = self._read_query(
+            probe = self._read_query(
                 spark,
-                f"SELECT MIN({pk}) AS lo, MAX({pk}) AS hi, COUNT(*) AS n "
-                f"FROM {table.schema}.{table.name} WHERE {watermark_col} > {lit}",
-            ).collect()[0]
-            if bounds[0] is not None:
-                reader = (
-                    reader.option("partitionColumn", pk)
-                    .option("lowerBound", str(bounds[0]))
-                    .option("upperBound", str(bounds[1]))
-                    .option(
-                        "numPartitions",
-                        str(num_partitions_for(int(bounds[2]), offset_count)),
-                    )
-                )
-        return reader.load()
+                self.dialect.bounds_query.format(
+                    pk=pk, schema=table.schema, table=table.name, where=where
+                ),
+            )
+            (lo, hi, n), key_type = probe.collect()[0], probe.schema.fields[0].dataType
+            if lo is None:
+                reason = "empty table or all-NULL key"
+            elif not _range_partitionable(key_type):
+                reason = f"key type {key_type.simpleString()} has no range split"
+            else:
+                reason, ranges = None, {
+                    "partitionColumn": pk,
+                    "lowerBound": str(lo),
+                    "upperBound": str(hi),
+                    "numPartitions": str(num_partitions_for(int(n), offset_count)),
+                }
+        _log.info(
+            "jdbc read %s: key %s, %s partition(s)%s",
+            table.qualified_name, pk, ranges.get("numPartitions", 1),
+            f" ({reason})" if reason else "",
+        )
+        return self._reader(spark, dbtable=dbtable, **ranges).load()

@@ -32,9 +32,6 @@ class MockSource(Source):
     def list_tables(self, spark: SparkSession) -> list[SqlTable]:
         return [MOCK_TABLE]
 
-    def row_count(self, spark: SparkSession, table: SqlTable) -> int:
-        return len(MOCK_ROWS)
-
     def read_table(
         self, spark: SparkSession, table: SqlTable, offset_count: int = 500
     ) -> DataFrame:

@@ -2,77 +2,24 @@
 "database" (the primary test source, S11 of SURVEY.md §2.1).
 
 Catalog discovery reads parquet footers (schema comes with the file —
-the analogue of INFORMATION_SCHEMA.COLUMNS, ServerUtil.java:179-204).
-PK detection: a column named ``<prefix>key`` / ``*_id`` / first column
-fallback, mirroring the reference's PK-probe-else-first-column behavior
-(ServerUtil.java:234-246) without its correctness hazard — parquet scans
-don't paginate, so a non-unique fallback key cannot skip/repeat rows.
+the analogue of INFORMATION_SCHEMA.COLUMNS, ServerUtil.java:179-204),
+and footers also make ``row_count`` a metadata-only job.
 """
 
 from __future__ import annotations
 
-import os
-import re
-
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
-from ..catalog import SqlColumn, SqlTable
-from .base import Source
-
-_SPARK_TO_SOURCE_TYPE = {
-    "string": "VARCHAR",
-    "long": "BIGINT",
-    "bigint": "BIGINT",
-    "int": "INT",
-    "integer": "INT",
-    "short": "SMALLINT",
-    "byte": "TINYINT",
-    "double": "FLOAT",
-    "float": "REAL",
-    "boolean": "BIT",
-    "date": "DATE",
-    "timestamp": "DATETIMEOFFSET",
-    "timestamp_ntz": "DATETIME",
-    "binary": "VARBINARY",
-}
-
-_PK_PATTERN = re.compile(r"^(?:[a-z]{1,2}_)?(?:\w*key|\w*_id|id)$", re.IGNORECASE)
+from ..catalog import SqlTable
+from .base import DirSource
 
 
-class ParquetDirSource(Source):
-    def __init__(self, directory: str, schema_name: str = "main"):
-        self.directory = directory.rstrip("/")
-        self.schema_name = schema_name
+class ParquetDirSource(DirSource):
+    EXTENSIONS = {".parquet": "parquet"}
 
-    def _table_path(self, table: SqlTable) -> str:
-        return os.path.join(self.directory, f"{table.name}.parquet")
-
-    def list_tables(self, spark: SparkSession) -> list[SqlTable]:
-        tables: list[SqlTable] = []
-        for i, fname in enumerate(sorted(os.listdir(self.directory))):
-            if not fname.endswith(".parquet"):
-                continue
-            name = fname[: -len(".parquet")]
-            schema = spark.read.parquet(os.path.join(self.directory, fname)).schema
-            cols = []
-            pk_found = False
-            for ordinal, f in enumerate(schema.fields, start=1):
-                src_type = _SPARK_TO_SOURCE_TYPE.get(f.dataType.simpleString(), "VARCHAR")
-                is_pk = not pk_found and ordinal == 1 and bool(_PK_PATTERN.match(f.name))
-                pk_found = pk_found or is_pk
-                cols.append(
-                    SqlColumn(f.name, ordinal, src_type, nullable=f.nullable, primary_key=is_pk)
-                )
-            tables.append(
-                SqlTable(schema=self.schema_name, name=name, key=i, columns=tuple(cols))
-            )
-        return tables
-
-    def row_count(self, spark: SparkSession, table: SqlTable) -> int:
-        # Parquet footers make this a metadata-only job (no full scan) —
-        # unlike the reference's SELECT COUNT(*) round trip
-        # (ServerUtil.java:136-155).
-        return spark.read.parquet(self._table_path(table)).count()
+    def _catalog_schema(self, spark: SparkSession, fmt: str, path: str) -> T.StructType:
+        return spark.read.parquet(path).schema
 
     def read_table(
         self, spark: SparkSession, table: SqlTable, offset_count: int = 500
@@ -80,4 +27,4 @@ class ParquetDirSource(Source):
         # Split sizing is byte-based for parquet
         # (spark.sql.files.maxPartitionBytes), already configured at the
         # session level; row-based offset_count is a JDBC-only concern.
-        return spark.read.parquet(self._table_path(table))
+        return spark.read.parquet(self._path_for(table)[1])

@@ -85,10 +85,11 @@ def test_count_and_bounds_templates_live(con):
         d.count_query.format(schema="app", table="users")
     ).fetchone()[0]
     assert n == 100
-    lo, hi = con.execute(
-        d.bounds_query.format(schema="app", table="users", pk="id")
+    lo, hi, n = con.execute(
+        d.bounds_query.format(schema="app", table="users", pk="id", where="")
     ).fetchone()
     assert (lo, hi) == (0, 99)
+    assert n == 100
 
 
 @pytest.mark.parametrize("dialect", ["derby", "mysql"])

@@ -6,6 +6,7 @@ files:// spec."""
 
 from __future__ import annotations
 
+import logging
 import os
 
 from dlp_rdb_bq_import_spark.plans.import_job import ImportJobOptions, run_import
@@ -133,3 +134,29 @@ def test_csv_inference_reads_bounded_prefix(spark, tmp_path):
     clean = src.read_table(spark, table)
     assert clean.count() == 50  # the flipping row is quarantined, not schema-flipping
     assert src.read_corrupt(spark, table).count() == 1
+
+
+def test_run_import_quarantines_malformed_lines(spark, tmp_path, caplog):
+    """A line the source rejects reaches the row quarantine: rows in =
+    written + quarantined, and the quarantine row holds the raw line."""
+    src_dir = tmp_path / "files"
+    src_dir.mkdir()
+    _write(
+        src_dir / "t.jsonl",
+        '{"t_id": 1, "v": 10}\n'
+        "this is not json at all\n"
+        '{"t_id": 2, "v": 20}\n',
+    )
+    wh_dir = str(tmp_path / "wh")
+    caplog.set_level(logging.INFO, logger="dlp_rdb_bq_import_spark")
+    (res,) = run_import(
+        spark,
+        ImportJobOptions(jdbc_spec=f"files://{src_dir}", dataset="DS", warehouse_dir=wh_dir),
+    )
+    assert (res.status, res.quarantined_rows) == ("ok", 1)
+    assert Warehouse(wh_dir).read(spark, "DS", "main_t").count() + res.quarantined_rows == 3
+    q = spark.read.parquet(os.path.join(wh_dir, "DS", "_quarantine_rows", "main_t"))
+    assert [tuple(r) for r in q.select("table", "payload").collect()] == [
+        ("main_t", "this is not json at all")
+    ]
+    assert any("main_t: 1 rows quarantined" in r.getMessage() for r in caplog.records)

@@ -21,6 +21,8 @@ executors share that JVM, so distributed reads see the same database.
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 
 from dlp_rdb_bq_import_spark.sources.jdbc_source import JdbcSource, num_partitions_for
@@ -141,3 +143,36 @@ def test_jdbc_filter_pushes_down_to_database(spark, derby):
     )
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert pushed and "GreaterThan(AGE,50)" in pushed[0]
+
+
+def test_string_and_keyless_tables_read_every_row_once(spark, caplog):
+    """Spark cannot range-split a VARCHAR key: not a VARCHAR primary key,
+    and not the VARCHAR first column a key-less table falls back to.
+    Both read as one partition with every row exactly once, full and
+    incremental, and the read logs why it did not split."""
+    url = "jdbc:derby:memory:stringkeys;create=true"
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    st = conn.createStatement()
+    st.executeUpdate("CREATE TABLE CODED (CODE VARCHAR(10) PRIMARY KEY, QTY INT)")
+    st.executeUpdate("CREATE TABLE LOOSE (LABEL VARCHAR(10), QTY INT)")
+    for i in range(30):
+        st.executeUpdate(f"INSERT INTO CODED VALUES ('c{i:02d}', {i})")
+        st.executeUpdate(f"INSERT INTO LOOSE VALUES ('l{i % 7}', {i})")
+    st.close()
+    conn.close()
+    src = JdbcSource(url, catalog_strategy="metadata")
+    tables = {t.name: t for t in src.list_tables(spark)}
+    assert tables["LOOSE"].primary_key_column == "LABEL"  # first-column fallback
+
+    caplog.set_level(logging.INFO, logger="dlp_rdb_bq_import_spark")
+    for name in ("CODED", "LOOSE"):
+        df = src.read_table(spark, tables[name], offset_count=10)
+        assert df.rdd.getNumPartitions() == 1
+        assert sorted(r["QTY"] for r in df.collect()) == list(range(30))
+        incr = src.read_incremental(spark, tables[name], "QTY", 19, offset_count=5)
+        assert sorted(r["QTY"] for r in incr.collect()) == list(range(20, 30))
+    reads = [r.getMessage() for r in caplog.records if r.getMessage().startswith("jdbc read")]
+    assert reads[0] == (
+        "jdbc read APP.CODED: key CODE, 1 partition(s) (key type string has no range split)"
+    )
+    assert len(reads) == 4 and all("key type string" in m for m in reads)
