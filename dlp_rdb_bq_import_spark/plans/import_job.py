@@ -17,6 +17,7 @@ import logging
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..catalog import SqlTable, apply_exclusions, attach_dlp_configs
 from ..config import ImportJobOptions, load_dlp_configs
@@ -86,10 +87,20 @@ def run_import(
     results: list[WriteResult] = []
 
     def import_one(table: SqlTable) -> WriteResult:
-        df = source.read_table(spark, table, offset_count=options.offset_count)
-        # a source without the feed (a wrapper, say) rejects nothing
-        read_rejected = getattr(source, "read_rejected", None)
-        violations = read_rejected(spark, table) if read_rejected else None
+        # a source without ``scan`` (a wrapper, say) rejects nothing
+        if not hasattr(source, "scan"):
+            df = source.read_table(spark, table, offset_count=options.offset_count)
+            return import_scan(table, df, None, "row")
+        with source.scan(spark, table, offset_count=options.offset_count) as (df, rejected):
+            return import_scan(table, df, rejected, getattr(source, "REJECT_UNIT", "row"))
+
+    def import_scan(table: SqlTable, df: DataFrame, rejected, reject_unit: str) -> WriteResult:
+        cfg = table.dlp_config
+        if rejected is not None and reject_unit == "row" and cfg and cfg.deid_template:
+            # a rejected row never reached deidentify: quarantine the
+            # hash of its raw text, which locates it in the source
+            payload = F.concat(F.lit("sha256:"), F.sha2("payload", 256))
+            rejected = rejected.withColumn("payload", payload)
         target = table.spark_schema(mode=options.type_mode)
         split = (
             options.row_quarantine
@@ -98,32 +109,36 @@ def run_import(
             == {check_header_name(c) for c in df.columns}
         )
         df = shape_table(df, table, templates, options.type_mode, cast=not split)
-        # Row-level failed-insert capture: violators (and the rows the
+        # Row-level failed-insert capture: violators (and what the
         # source rejected) quarantined with payload, conforming rows
         # still written (the reference's getFailedInserts semantics —
         # one poisoned row must not cost the table). Persist so the two
         # branches don't re-run the source scan twice.
         parent = df.persist() if split else None
+        violations = rejected
         try:
             if split:
                 df, bad = conformance_split(parent, target)
-                violations = bad if violations is None else bad.unionByName(violations)
+                violations = bad if rejected is None else bad.unionByName(rejected)
             res = warehouse.write(
                 df, options.dataset, table.full_name, max_retries=options.write_retries
             )
             if violations is None:
                 return res
             try:
-                res.quarantined_rows = warehouse.quarantine_rows(
-                    violations, options.dataset, table.full_name
-                )
+                n = warehouse.quarantine_rows(violations, options.dataset, table.full_name)
             except Exception as e:  # the table's rows may be visible: keep its destination
                 prior = f"{res.error}\n" if res.error else ""
                 res.status, res.error = "failed", f"{prior}row quarantine failed: {e}"
-            if res.quarantined_rows:
+                return res
+            if n:
+                files = reject_unit == "file" and rejected is not None
+                res.rejected_files = rejected.count() if files else 0
+                res.quarantined_rows = n - res.rejected_files
                 _log.warning(
-                    "import %s: %d rows quarantined to %s/_quarantine_rows",
-                    table.full_name, res.quarantined_rows, options.dataset,
+                    "import %s: %d rows and %d files quarantined to %s/_quarantine_rows",
+                    table.full_name, res.quarantined_rows, res.rejected_files,
+                    options.dataset,
                 )
             return res
         finally:

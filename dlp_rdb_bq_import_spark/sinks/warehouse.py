@@ -88,6 +88,7 @@ class WriteResult:
     error: str | None = None
     attempts: int = 1
     quarantined_rows: int = 0
+    rejected_files: int = 0  # whole source files quarantined (columnar drift)
 
 
 class StagedSink:

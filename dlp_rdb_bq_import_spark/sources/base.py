@@ -12,6 +12,8 @@ from __future__ import annotations
 import os
 import re
 from abc import ABC, abstractmethod
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -60,9 +62,17 @@ def table_from_schema(schema_name: str, name: str, key: int, schema: T.StructTyp
 class Source(ABC):
     """A source supplies a catalog (``list_tables``) and a scan
     (``read_table``). ``row_count`` is the scan's row count (only
-    ``JdbcSource`` keeps the reference's ``COUNT(*)`` probe), and
-    ``read_rejected`` feeds the rows the scan left out to ``run_import``'s
-    row quarantine."""
+    ``JdbcSource`` keeps the reference's ``COUNT(*)`` probe). ``scan``
+    is what ``run_import`` reads: the scan plus the rows it rejected,
+    the dead-letter feed of the row quarantine. A source that rejects
+    rows overrides it, parsing its input once for both.
+
+    ``REJECT_UNIT`` is what one rejected row stands for: a source
+    ``"row"`` (its payload is the row's content, which ``run_import``
+    reduces to a hash when the table is de-identified) or a whole
+    ``"file"`` (its payload is the file's path)."""
+
+    REJECT_UNIT = "row"
 
     @abstractmethod
     def list_tables(self, spark: SparkSession) -> list[SqlTable]:
@@ -82,11 +92,15 @@ class Source(ABC):
         """S4 sizing probe (ServerUtil.java:136-155)."""
         return self.read_table(spark, table).count()
 
-    def read_rejected(self, spark: SparkSession, table: SqlTable) -> DataFrame | None:
-        """``(payload string, error string)`` rows that ``read_table``
-        left out because they do not fit the catalog schema; None when
-        the source rejects nothing."""
-        return None
+    @contextmanager
+    def scan(
+        self, spark: SparkSession, table: SqlTable, offset_count: int = 500
+    ) -> Iterator[tuple[DataFrame, DataFrame | None]]:
+        """``read_table`` and the rejected rows it left out because they
+        do not fit the catalog schema, as ``(payload string, error
+        string)`` rows (None when the source rejects nothing), for one
+        import of ``table``; both are valid inside the ``with`` block."""
+        yield self.read_table(spark, table, offset_count), None
 
 
 class DirSource(Source):
@@ -102,12 +116,12 @@ class DirSource(Source):
         self.schema_name = schema_name
 
     def _entries(self) -> list[tuple[str, str, str]]:
-        out = []
-        for fname in sorted(os.listdir(self.directory)):
-            stem, ext = os.path.splitext(fname)
-            if ext in self.EXTENSIONS:
-                out.append((stem, self.EXTENSIONS[ext], os.path.join(self.directory, fname)))
-        return out
+        return [
+            (stem, self.EXTENSIONS[ext], os.path.join(self.directory, fname))
+            for fname in sorted(os.listdir(self.directory))
+            for stem, ext in [os.path.splitext(fname)]
+            if ext in self.EXTENSIONS
+        ]
 
     def _path_for(self, table: SqlTable) -> tuple[str, str]:
         for name, fmt, path in self._entries():

@@ -1,9 +1,9 @@
-"""ORC / Avro directory source (VERDICT r13 task 5): the
-``file_source`` catalog discipline — frozen catalog-time schema +
-malformed-input quarantine — extended to the two self-describing
-binary formats a warehouse migration brings along (S11-ext of
-SURVEY.md §2.1; the reference's catalog surface is format-agnostic —
-ServerUtil.java:179-204 reads INFORMATION_SCHEMA whatever backs it).
+"""ORC / Avro directory source: the ``file_source`` catalog discipline
+— frozen catalog-time schema + malformed-input quarantine — for the two
+self-describing binary formats a warehouse migration brings along
+(S11-ext of SURVEY.md §2.1; the reference's catalog surface is
+format-agnostic — ServerUtil.java:179-204 reads INFORMATION_SCHEMA
+whatever backs it).
 
 Binary columnar formats shift where corruption is detectable. CSV and
 JSONL fail per LINE, so :class:`FileDirSource` quarantines rows. ORC
@@ -21,9 +21,9 @@ quarantine unit here is therefore the FILE:
 - CONFORMANCE SPLIT: at catalog time every part file's embedded
   schema is probed; unreadable files and files whose schema is not
   identical to the frozen one are EXCLUDED from ``read_table`` and
-  surfaced by ``read_corrupt`` as ``(path, reason)`` rows — the
-  dead-letter feed, S9 parity at file grain, which ``read_rejected``
-  hands to ``run_import``'s row quarantine.
+  surfaced by ``read_corrupt`` as ``(path, reason)`` rows. Through
+  ``scan`` they reach ``run_import``'s row quarantine, which
+  counts them as rejected files (``REJECT_UNIT = "file"``), not rows.
 
 ORC ships inside Spark. Avro is Spark's one EXTERNAL built-in module
 (the ``spark-avro`` package must be on the classpath per its public
@@ -36,9 +36,10 @@ BigQuery/PubSub adapters.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import SqlTable
@@ -63,6 +64,7 @@ class ColumnarDirSource(DirSource):
     files (the shape Spark's own writers produce)."""
 
     EXTENSIONS = {".orc": "orc", ".avro": "avro"}
+    REJECT_UNIT = "file"
 
     def __init__(self, directory: str, schema_name: str = "main"):
         super().__init__(directory, schema_name)
@@ -144,7 +146,9 @@ class ColumnarDirSource(DirSource):
         _, _, bad = self._probe(spark, *self._path_for(table))
         return spark.createDataFrame(bad, schema="path string, reason string")
 
-    def read_rejected(self, spark: SparkSession, table: SqlTable) -> DataFrame:
-        return self.read_corrupt(spark, table).select(
-            F.col("path").alias("payload"), F.col("reason").alias("error")
-        )
+    @contextmanager
+    def scan(
+        self, spark: SparkSession, table: SqlTable, offset_count: int = 500
+    ) -> Iterator[tuple[DataFrame, DataFrame]]:
+        rejected = self.read_corrupt(spark, table).toDF("payload", "error")
+        yield self.read_table(spark, table, offset_count), rejected

@@ -32,7 +32,7 @@ there:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 
 @dataclass(frozen=True)
@@ -113,29 +113,25 @@ SQLSERVER = SqlDialect(
     quote_char="[",  # SQL Server bracket quoting
 )
 
-POSTGRESQL = SqlDialect(
+# The other engines differ from SQL Server only where each says.
+POSTGRESQL = replace(
+    SQLSERVER,
     name="postgresql",
-    catalog_strategy="information_schema",
     tables_query=(
         "SELECT TABLE_SCHEMA, TABLE_NAME, TABLE_TYPE FROM INFORMATION_SCHEMA.TABLES "
         "WHERE TABLE_SCHEMA NOT IN ('pg_catalog', 'information_schema')"
     ),
-    columns_query=SQLSERVER.columns_query,
-    pk_query=SQLSERVER.pk_query,
-    count_query=SQLSERVER.count_query,
-    bounds_query=SQLSERVER.bounds_query,
-    page_template=SQLSERVER.page_template,  # ANSI OFFSET/FETCH works on PG
+    quote_char='"',  # ANSI OFFSET/FETCH paging works on PG as is
 )
 
-MYSQL = SqlDialect(
+MYSQL = replace(
+    SQLSERVER,
     name="mysql",
-    catalog_strategy="information_schema",
     tables_query=(
         "SELECT TABLE_SCHEMA, TABLE_NAME, TABLE_TYPE FROM INFORMATION_SCHEMA.TABLES "
         "WHERE TABLE_SCHEMA NOT IN "
         "('mysql', 'sys', 'performance_schema', 'information_schema')"
     ),
-    columns_query=SQLSERVER.columns_query,
     # MySQL has no CONSTRAINT_COLUMN_USAGE; PRIMARY keys live in
     # KEY_COLUMN_USAGE under constraint name 'PRIMARY'.
     pk_query=(
@@ -143,8 +139,6 @@ MYSQL = SqlDialect(
         "WHERE TABLE_SCHEMA = '{schema}' AND TABLE_NAME = '{table}' "
         "AND CONSTRAINT_NAME = 'PRIMARY'"
     ),
-    count_query=SQLSERVER.count_query,
-    bounds_query=SQLSERVER.bounds_query,
     # MySQL rejects arithmetic in LIMIT/OFFSET (literals or
     # placeholders only) — the skip is precomputed, not reference-form.
     page_template=(
@@ -154,20 +148,20 @@ MYSQL = SqlDialect(
     quote_char="`",
 )
 
-DERBY = SqlDialect(
+DERBY = replace(
+    SQLSERVER,
     name="derby",
     catalog_strategy="metadata",  # Derby has no INFORMATION_SCHEMA
     tables_query="",  # unused under the metadata strategy
     columns_query="",
     pk_query="",
-    count_query=SQLSERVER.count_query,
-    bounds_query=SQLSERVER.bounds_query,
     # Derby's result-offset clause takes an integer literal or ?
     # only — precomputed skip, not the reference's arithmetic form.
     page_template=(
         "SELECT * FROM {schema}.{table} ORDER BY {pk} "
         "OFFSET {skip} ROWS FETCH NEXT {offset} ROWS ONLY"
     ),
+    quote_char='"',
 )
 
 _DIALECTS = {d.name: d for d in (SQLSERVER, POSTGRESQL, MYSQL, DERBY)}

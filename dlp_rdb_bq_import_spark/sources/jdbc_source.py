@@ -28,15 +28,9 @@ and fractional keys, which the reference's ORDER BY paging handles and
 a range split does not. ``row_count`` keeps its own ``COUNT(*)`` for
 S4 parity; the scans do not call it.
 
-Dialect surface: the SQL text (catalog probes, count/bounds, the
-reference's paged-scan shape) is parameterized per engine in
-``sources/dialects.py`` — ``sqlserver`` preserves the reference's
-strings verbatim-testably, ``postgresql``/``mysql``/``derby`` adapt the
-forms each engine actually accepts. The execution path is exercised
-LIVE against an in-process Derby database (tests/test_jdbc_live.py —
-Derby ships with Spark's JVM), which uses the ``metadata`` catalog
-strategy; the INFORMATION_SCHEMA strategy's SQL strings are
-dialect-tested string-for-string against the reference's forms.
+The SQL text is per engine (``sources/dialects.py``). The execution
+path runs live against an in-process Derby (tests/test_jdbc_live.py) on
+the ``metadata`` catalog strategy.
 """
 
 from __future__ import annotations
@@ -66,6 +60,34 @@ def _range_partitionable(key_type: T.DataType) -> bool:
     return isinstance(
         key_type, (T.IntegralType, T.DateType, T.TimestampType, T.TimestampNTZType)
     ) or (isinstance(key_type, T.DecimalType) and key_type.scale == 0)
+
+
+def _drain(rs, *names: str) -> list[tuple]:
+    """The named columns, as strings, of every row of a ``java.sql.ResultSet``."""
+    try:
+        rows = []
+        while rs.next():
+            rows.append(tuple(rs.getString(n) for n in names))
+        return rows
+    finally:
+        rs.close()
+
+
+def _catalog(found) -> list[SqlTable]:
+    """``SqlTable``s from ``(schema, name, table type, column rows, PK
+    column names)``, whichever strategy read them; a column row is
+    ``(name, ordinal, default, nullable, type)``, in ordinal order."""
+    return [
+        SqlTable(schema=schema, name=name, table_type=ttype, key=i, columns=tuple(
+            SqlColumn(
+                name=c, ordinal_position=int(ordinal), default_value=default,
+                nullable=str(nullable).upper() == "YES", data_type=str(dtype),
+                primary_key=c in pks,
+            )
+            for c, ordinal, default, nullable, dtype in cols
+        ))
+        for i, (schema, name, ttype, cols, pks) in enumerate(found)
+    ]
 
 
 class JdbcSource(Source):
@@ -114,7 +136,19 @@ class JdbcSource(Source):
     def list_tables(self, spark: SparkSession) -> list[SqlTable]:
         if self.catalog_strategy == "metadata":
             return self.list_tables_via_metadata(spark)
-        return self._list_tables_information_schema(spark)
+        d = self.dialect
+
+        def query(sql: str) -> list:
+            return self._read_query(spark, sql).collect()  # catalog: tiny
+
+        return _catalog(
+            (
+                schema, name, ttype,
+                query(d.columns_query.format(schema=schema, table=name)),
+                {r[0] for r in query(d.pk_query.format(schema=schema, table=name))[:1]},
+            )
+            for schema, name, ttype in query(d.tables_query)
+        )
 
     def list_tables_via_metadata(self, spark: SparkSession) -> list[SqlTable]:
         """Catalog discovery through ``java.sql.DatabaseMetaData`` — the
@@ -123,7 +157,6 @@ class JdbcSource(Source):
         rows only); the data scan itself stays a distributed
         ``spark.read.jdbc``."""
         jvm = spark._jvm
-        gateway = spark.sparkContext._gateway
         props = jvm.java.util.Properties()
         for k, v in self.properties.items():
             if k != "driver":
@@ -131,71 +164,22 @@ class JdbcSource(Source):
         conn = jvm.java.sql.DriverManager.getConnection(self.url, props)
         try:
             meta = conn.getMetaData()
-            types_arr = gateway.new_array(jvm.java.lang.String, 1)
+            types_arr = spark.sparkContext._gateway.new_array(jvm.java.lang.String, 1)
             types_arr[0] = "TABLE"
-            tables: list[SqlTable] = []
-            rs = meta.getTables(None, None, "%", types_arr)
-            found: list[tuple[str, str]] = []
-            while rs.next():
-                found.append((rs.getString("TABLE_SCHEM"), rs.getString("TABLE_NAME")))
-            rs.close()
-            for i, (schema, name) in enumerate(found):
-                pk_rs = meta.getPrimaryKeys(None, schema, name)
-                pks = set()
-                while pk_rs.next():
-                    pks.add(pk_rs.getString("COLUMN_NAME"))
-                pk_rs.close()
-                col_rs = meta.getColumns(None, schema, name, "%")
-                cols = []
-                while col_rs.next():
-                    cols.append(
-                        SqlColumn(
-                            name=col_rs.getString("COLUMN_NAME"),
-                            ordinal_position=int(col_rs.getInt("ORDINAL_POSITION")),
-                            default_value=col_rs.getString("COLUMN_DEF"),
-                            nullable=(col_rs.getString("IS_NULLABLE") or "").upper() == "YES",
-                            data_type=col_rs.getString("TYPE_NAME"),
-                            primary_key=col_rs.getString("COLUMN_NAME") in pks,
-                        )
-                    )
-                col_rs.close()
-                cols.sort(key=lambda c: c.ordinal_position)
-                tables.append(
-                    SqlTable(
-                        schema=schema, name=name, table_type="BASE TABLE", key=i,
-                        columns=tuple(cols),
-                    )
+            found = _drain(meta.getTables(None, None, "%", types_arr), "TABLE_SCHEM", "TABLE_NAME")
+            return _catalog(
+                (
+                    schema, name, "BASE TABLE",
+                    _drain(
+                        meta.getColumns(None, schema, name, "%"), "COLUMN_NAME",
+                        "ORDINAL_POSITION", "COLUMN_DEF", "IS_NULLABLE", "TYPE_NAME",
+                    ),
+                    {c for (c,) in _drain(meta.getPrimaryKeys(None, schema, name), "COLUMN_NAME")},
                 )
-            return tables
+                for schema, name in found
+            )
         finally:
             conn.close()
-
-    def _list_tables_information_schema(self, spark: SparkSession) -> list[SqlTable]:
-        d = self.dialect
-        tables: list[SqlTable] = []
-        rows = self._read_query(spark, d.tables_query).collect()  # catalog: tiny
-        for i, r in enumerate(rows):
-            schema, name, ttype = r[0], r[1], r[2]
-            col_rows = self._read_query(
-                spark, d.columns_query.format(schema=schema, table=name)
-            ).collect()
-            pk_rows = self._read_query(
-                spark, d.pk_query.format(schema=schema, table=name)
-            ).collect()
-            pk = pk_rows[0][0] if pk_rows else None
-            cols = tuple(
-                SqlColumn(
-                    name=c[0],
-                    ordinal_position=int(c[1]),
-                    default_value=c[2],
-                    nullable=(str(c[3]).upper() == "YES"),
-                    data_type=str(c[4]),
-                    primary_key=(c[0] == pk),
-                )
-                for c in col_rows
-            )
-            tables.append(SqlTable(schema=schema, name=name, table_type=ttype, key=i, columns=cols))
-        return tables
 
     def row_count(self, spark: SparkSession, table: SqlTable) -> int:
         df = self._read_query(

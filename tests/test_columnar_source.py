@@ -8,6 +8,7 @@ itself is always tested."""
 
 from __future__ import annotations
 
+import logging
 import os
 
 import pytest
@@ -154,31 +155,34 @@ def test_avro_round_trip_when_available(spark, tmp_path):
     assert src.read_table(spark, table).count() == 5
 
 
-def test_run_import_quarantines_drifted_part_file(spark, tmp_path):
+def test_run_import_quarantines_drifted_part_file(spark, tmp_path, caplog):
     """A part file whose schema drifted reaches the row quarantine as
-    one row holding its path (the quarantine unit is the file; the
-    drifted file here holds one row): rows in = written + quarantined."""
+    one row holding its path. The quarantine unit is the file, so it
+    counts as a rejected file, not as its rows."""
     root = tmp_path / "columnar"
     root.mkdir()
     tdir = root / "people.orc"
     _people(spark).coalesce(1).write.orc(str(tdir))
     drift = tmp_path / "drift"
     spark.createDataFrame(
-        [Row(person_id=99, name="x", score="not-a-double")],
+        [Row(person_id=i, name="x", score="not-a-double") for i in (97, 98, 99)],
         schema="person_id long, name string, score string",
     ).coalesce(1).write.orc(str(drift))
     part = [f for f in os.listdir(drift) if f.endswith(".orc")][0]
     os.rename(str(drift / part), str(tdir / f"zz-{part}"))
 
     wh_dir = str(tmp_path / "wh")
+    caplog.set_level(logging.INFO, logger="dlp_rdb_bq_import_spark")
     (res,) = run_import(
         spark, ImportJobOptions(jdbc_spec=f"orc://{root}", dataset="DS", warehouse_dir=wh_dir)
     )
-    assert (res.status, res.quarantined_rows) == ("ok", 1)
-    written = Warehouse(wh_dir).read(spark, "DS", "main_people").count()
-    assert written + res.quarantined_rows == 5 + 1
+    assert (res.status, res.quarantined_rows, res.rejected_files) == ("ok", 0, 1)
+    assert Warehouse(wh_dir).read(spark, "DS", "main_people").count() == 5
     (q,) = spark.read.parquet(
         os.path.join(wh_dir, "DS", "_quarantine_rows", "main_people")
     ).collect()
     assert q["payload"] == str(tdir / f"zz-{part}")
     assert "schema drift" in q["error"]
+    assert any(
+        "main_people: 0 rows and 1 files quarantined" in r.getMessage() for r in caplog.records
+    )

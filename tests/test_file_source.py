@@ -6,9 +6,15 @@ files:// spec."""
 
 from __future__ import annotations
 
+import hashlib
 import logging
 import os
 
+from dlp_rdb_bq_import_spark.functions.tokenize import (
+    DeidTemplate,
+    FieldTransform,
+    TemplateRegistry,
+)
 from dlp_rdb_bq_import_spark.plans.import_job import ImportJobOptions, run_import
 from dlp_rdb_bq_import_spark.sinks.warehouse import Warehouse
 from dlp_rdb_bq_import_spark.sources import FileDirSource, get_source
@@ -159,4 +165,43 @@ def test_run_import_quarantines_malformed_lines(spark, tmp_path, caplog):
     assert [tuple(r) for r in q.select("table", "payload").collect()] == [
         ("main_t", "this is not json at all")
     ]
-    assert any("main_t: 1 rows quarantined" in r.getMessage() for r in caplog.records)
+    assert any("main_t: 1 rows and 0 files quarantined" in r.getMessage() for r in caplog.records)
+
+
+def test_rejected_line_of_deid_table_is_quarantined_as_hash(spark, tmp_path):
+    """A malformed line never reaches deidentify, so for a table with a
+    deid template the quarantine keeps the line's hash and the file's
+    path, never the plaintext the template protects."""
+    src_dir = tmp_path / "files"
+    src_dir.mkdir()
+    bad = '{"t_id": 2, "name": "CarolSecret", "v": }'
+    _write(
+        src_dir / "t.jsonl",
+        '{"t_id": 1, "name": "AliceSmith", "v": 10}\n' + bad + "\n",
+    )
+    registry = TemplateRegistry()
+    registry.register(
+        DeidTemplate(
+            name="deid-t",
+            key=b"file-source-test-key-32-bytes!!!",
+            field_transforms=(FieldTransform(fields=("name",)),),
+        )
+    )
+    wh_dir = str(tmp_path / "wh")
+    (res,) = run_import(
+        spark,
+        ImportJobOptions(
+            jdbc_spec=f"files://{src_dir}",
+            dataset="DS",
+            warehouse_dir=wh_dir,
+            dlp_config='[{"tableName": "t", "deidTemplate": "deid-t"}]',
+        ),
+        templates=registry,
+    )
+    assert (res.status, res.quarantined_rows) == ("ok", 1)
+    (row,) = Warehouse(wh_dir).read(spark, "DS", "main_t").collect()
+    assert row["name"] != "AliceSmith"
+    (q,) = spark.read.parquet(os.path.join(wh_dir, "DS", "_quarantine_rows", "main_t")).collect()
+    assert q["payload"] == "sha256:" + hashlib.sha256(bad.encode()).hexdigest()
+    assert "CarolSecret" not in q["payload"] + q["error"]
+    assert str(src_dir / "t.jsonl") in q["error"]

@@ -4,7 +4,7 @@ csv/jsonl and ORC sources: each directory holds a ``people`` table
 through ``get_source`` with a custom ``schema_name``. The catalog
 gives names, ordinals, the first-column PK flag and source type names;
 ``read_table`` gives typed rows, ``row_count`` their number, and
-``read_rejected`` nothing for clean inputs."""
+``scan`` the same rows and no rejects for clean inputs."""
 
 from __future__ import annotations
 
@@ -70,5 +70,6 @@ def test_directory_source_contract(spark, tmp_path, build, int_types):
     assert [t for _, t in df.dtypes][1:] == ["string", "double"]
     assert sorted(map(tuple, df.collect())) == PEOPLE
     assert src.row_count(spark, notes) == len(NOTES)
-    rejected = src.read_rejected(spark, people)
-    assert rejected is None or rejected.count() == 0
+    with src.scan(spark, people) as (rows, rejected):
+        assert rows.count() == len(PEOPLE)
+        assert rejected is None or rejected.count() == 0
