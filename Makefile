@@ -10,7 +10,7 @@ BENCH_SF ?= /root/testdata/sf0.1
 W ?= pipeline
 SEED ?= 1
 
-.PHONY: test gate-full bench perfbench plan-lint
+.PHONY: test gate-full bench perfbench plan-lint profile
 
 # the ROADMAP tier-1 command
 test:
@@ -25,6 +25,9 @@ plan-lint:
 
 bench:
 	SPARK_GRAFT_SF_DIR=$(BENCH_SF) python bench.py
+
+profile:
+	python tools/profile.py --sf $(SF) $(Q)
 
 perfbench:
 	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 10

@@ -39,18 +39,25 @@ _SPARK_TO_SOURCE_TYPE = {
 _PK_PATTERN = re.compile(r"^(?:[a-z]{1,2}_)?(?:\w*key|\w*_id|id)$", re.IGNORECASE)
 
 
+def _source_type(spark_type: str) -> str:
+    if spark_type.startswith("decimal("):
+        return spark_type.upper()
+    return _SPARK_TO_SOURCE_TYPE.get(spark_type, "VARCHAR")
+
+
 def table_from_schema(schema_name: str, name: str, key: int, schema: T.StructType) -> SqlTable:
     """A ``SqlTable`` for a self-describing source. Source type names
-    come from the Spark types (unknown → VARCHAR). The PK is the first
-    column when its name looks like a key (``<prefix>key`` / ``*_id`` /
-    ``id``), mirroring the reference's PK-probe-else-first-column rule
-    (ServerUtil.java:234-246) without its hazard: these scans don't
-    paginate, so a non-unique key cannot skip or repeat rows."""
+    come from the Spark types (``decimal(p,s)`` → ``DECIMAL(p,s)``, unknown
+    → VARCHAR). The PK is the first column when its name looks like a key
+    (``<prefix>key`` / ``*_id`` / ``id``), mirroring the reference's
+    PK-probe-else-first-column rule (ServerUtil.java:234-246) without its
+    hazard: these scans don't paginate, so a non-unique key cannot skip
+    or repeat rows."""
     cols = tuple(
         SqlColumn(
             f.name,
             ordinal,
-            _SPARK_TO_SOURCE_TYPE.get(f.dataType.simpleString(), "VARCHAR"),
+            _source_type(f.dataType.simpleString()),
             nullable=f.nullable,
             primary_key=ordinal == 1 and bool(_PK_PATTERN.match(f.name)),
         )

@@ -77,7 +77,9 @@ class FileDirSource(DirSource):
             sep = self.csv_options.get("sep", self.csv_options.get("delimiter", ","))
             names, lines = next(csv.reader(lines[:1], delimiter=sep)), lines[1:]
         if fmt == "json":
-            schema = spark.read.json(spark.sparkContext.parallelize(lines, 1)).schema
+            # DROPMALFORMED: a malformed line adds no _corrupt_record column
+            rdd = spark.sparkContext.parallelize(lines, 1)
+            schema = spark.read.option("mode", "DROPMALFORMED").json(rdd).schema
         elif not lines:  # header-only file: all-string columns
             schema = T.StructType([T.StructField(n, T.StringType()) for n in names or []])
         else:
@@ -97,6 +99,8 @@ class FileDirSource(DirSource):
         """Rows of one parsed struct ``r``; ``r[CORRUPT_COL]`` holds the
         raw line exactly for lines that failed the frozen schema."""
         schema = self._catalog_schema(spark, fmt, path)
+        if not schema.fields:
+            raise ValueError(f"{path}: no line of its inference prefix parses: no columns")
         with_corrupt = T.StructType(
             list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
         )

@@ -155,17 +155,42 @@ def test_run_import_quarantines_malformed_lines(spark, tmp_path, caplog):
     )
     wh_dir = str(tmp_path / "wh")
     caplog.set_level(logging.INFO, logger="dlp_rdb_bq_import_spark")
+    # the bad line adds no _corrupt_record column, so t_id stays first and the PK
+    (table,) = FileDirSource(str(src_dir)).list_tables(spark)
+    assert [(c.name, c.primary_key) for c in table.columns] == [("t_id", True), ("v", False)]
     (res,) = run_import(
         spark,
         ImportJobOptions(jdbc_spec=f"files://{src_dir}", dataset="DS", warehouse_dir=wh_dir),
     )
     assert (res.status, res.quarantined_rows) == ("ok", 1)
-    assert Warehouse(wh_dir).read(spark, "DS", "main_t").count() + res.quarantined_rows == 3
+    written = Warehouse(wh_dir).read(spark, "DS", "main_t")
+    assert written.columns == ["t_id", "v"]
+    assert written.count() + res.quarantined_rows == 3
     q = spark.read.parquet(os.path.join(wh_dir, "DS", "_quarantine_rows", "main_t"))
     assert [tuple(r) for r in q.select("table", "payload").collect()] == [
         ("main_t", "this is not json at all")
     ]
     assert any("main_t: 1 rows and 0 files quarantined" in r.getMessage() for r in caplog.records)
+
+
+def test_all_malformed_file_fails_only_its_table(spark, tmp_path):
+    """A file with no parseable line has no columns: its table fails with
+    the file named and is never written; the table next to it imports."""
+    src_dir = tmp_path / "files"
+    src_dir.mkdir()
+    _write(src_dir / "bad.jsonl", "not json\nnor this {\n")
+    _write(src_dir / "good.jsonl", '{"g_id": 1}\n')
+    wh_dir = str(tmp_path / "wh")
+    results = run_import(
+        spark,
+        ImportJobOptions(jdbc_spec=f"files://{src_dir}", dataset="DS", warehouse_dir=wh_dir),
+    )
+    by_table = {r.table: r for r in results}
+    assert by_table["main_good"].status == "ok"
+    assert by_table["main_bad"].status == "failed"
+    assert str(src_dir / "bad.jsonl") in by_table["main_bad"].error
+    assert not os.path.exists(os.path.join(wh_dir, "DS", "main_bad"))
+    assert Warehouse(wh_dir).read(spark, "DS", "main_good").count() == 1
 
 
 def test_rejected_line_of_deid_table_is_quarantined_as_hash(spark, tmp_path):

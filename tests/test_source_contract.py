@@ -8,18 +8,25 @@ gives names, ordinals, the first-column PK flag and source type names;
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import pytest
 
 from dlp_rdb_bq_import_spark.sources import get_source
 
-PEOPLE = [(1, "alice", 9.5), (2, "bob", 7.25), (3, "carol", 8.0)]
+# balance is past a long, so csv inference types it decimal(20,0) too
+PEOPLE = [
+    (1, "alice", 9.5, Decimal(10**19 + 1)),
+    (2, "bob", 7.25, Decimal(10**19 + 2)),
+    (3, "carol", 8.0, Decimal(10**19 + 3)),
+]
 NOTES = [("x", 1), ("y", 2)]
 
 
 def _spark_written(fmt):
     def build(spark, root):
         for name, rows, schema in (
-            ("people", PEOPLE, "person_id long, name string, score double"),
+            ("people", PEOPLE, "person_id long, name string, score double, balance decimal(20,0)"),
             ("notes", NOTES, "label string, n smallint"),
         ):
             spark.createDataFrame(rows, schema).coalesce(1).write.format(fmt).save(
@@ -32,7 +39,7 @@ def _spark_written(fmt):
 
 def _text_files(spark, root):
     (root / "people.csv").write_text(
-        "person_id,name,score\n" + "".join(f"{i},{n},{s}\n" for i, n, s in PEOPLE)
+        "person_id,name,score,balance\n" + "".join(f"{i},{n},{s},{b}\n" for i, n, s, b in PEOPLE)
     )
     (root / "notes.jsonl").write_text(
         "".join(f'{{"label": "{lb}", "n": {n}}}\n' for lb, n in NOTES)
@@ -60,14 +67,16 @@ def test_directory_source_contract(spark, tmp_path, build, int_types):
         ("person_id", 1, True, int_types[0]),
         ("name", 2, False, "VARCHAR"),
         ("score", 3, False, "FLOAT"),
+        ("balance", 4, False, "DECIMAL(20,0)"),
     ]
+    assert people.spark_schema()["balance"].dataType.simpleString() == "decimal(20,0)"
     assert [(c.name, c.primary_key, c.data_type) for c in notes.columns] == [
         ("label", False, "VARCHAR"),
         ("n", False, int_types[1]),
     ]
 
     df = src.read_table(spark, people)
-    assert [t for _, t in df.dtypes][1:] == ["string", "double"]
+    assert [t for _, t in df.dtypes][1:] == ["string", "double", "decimal(20,0)"]
     assert sorted(map(tuple, df.collect())) == PEOPLE
     assert src.row_count(spark, notes) == len(NOTES)
     with src.scan(spark, people) as (rows, rejected):
