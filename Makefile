@@ -27,7 +27,7 @@ bench:
 	SPARK_GRAFT_SF_DIR=$(BENCH_SF) python bench.py
 
 profile:
-	python tools/profile.py --sf $(SF) $(Q)
+	python tools/query_profile.py --sf $(SF) $(Q)
 
 perfbench:
 	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 10

@@ -1,4 +1,4 @@
-"""tools/profile.py end to end on one short query that runs Python: the
+"""tools/query_profile.py end to end on one short query that runs Python: the
 record holds the cold run and the warm best, each split into Catalyst's
 phases, engine metrics from the event log, Python-worker time and
 per-stage rows; ``--plans`` writes the executed plan."""
@@ -17,7 +17,7 @@ QUERY = "tokenize_format_preserved"
 def test_profile_splits_cold_and_warm_runs(sf_dir, tmp_path):
     out, plans = tmp_path / "layers.jsonl", tmp_path / "plans"
     subprocess.run(
-        [sys.executable, os.path.join(ROOT, "tools", "profile.py"), "--sf", sf_dir,
+        [sys.executable, os.path.join(ROOT, "tools", "query_profile.py"), "--sf", sf_dir,
          "--out", str(out), "--plans", str(plans), QUERY],
         cwd=ROOT, check=True, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, timeout=300,
     )
@@ -30,5 +30,6 @@ def test_profile_splits_cold_and_warm_runs(sf_dir, tmp_path):
         assert run["spark"]["jobs"] >= 1
         assert "pythonInitTime" in run["python_ms"]
         assert run["stages"] and all(s["tasks"] >= 1 for s in run["stages"])
+        assert all(isinstance(s["job"], int) for s in run["stages"])
     assert rec["cold"]["total_s"] >= rec["warm"]["total_s"]
     assert "AdaptiveSparkPlan" in (plans / f"{QUERY}.txt").read_text()

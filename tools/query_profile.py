@@ -5,21 +5,24 @@ Each query runs the way bench.py times it: ``clearCache``, build, then
 ``.count()``; one cold run, then the best of 2 warm runs (3 when
 sub-second). Every run is split into
 
-- ``build_s``: Python-side construction, eager jobs included;
+- ``build_s``: Python-side construction, eager jobs included, and most of
+  the query's analysis (PySpark analyzes each DataFrame as it is built);
 - ``analysis_s``, ``optimization_s``, ``planning_s``: Catalyst's phases of
-  the count plan, from its ``QueryPlanningTracker``;
+  the count plan, from its ``QueryPlanningTracker``; analysis covers only
+  the ``groupBy().count()`` wrapper, the lazy phases the whole query;
 - ``execution_s``: wall time of the action;
 - ``python_ms``: Spark's ``pythonBootTime``, ``pythonInitTime`` and
   ``pythonTotalTime`` summed over the operators of the final (post-AQE)
   count plan; pipelined operators overlap, so a sum can exceed the wall;
 - ``spark``: jobs, stages, tasks, executor run/CPU/GC, shuffle write,
   driver gap and max task share, from the run's window of the event log
-  (``perfbench.tracing``), and ``stages``: one row per stage.
+  (``perfbench.tracing``), and ``stages``: one row per stage, tagged with
+  the first job that lists it (Spark's status tracker).
 
 Each query runs in its own Spark session (the JVM is shared), so its event
 log holds only its own runs and the cold run pays the Python worker start.
 
-Usage: python tools/profile.py --sf DIR [--out FILE] [--plans DIR] [NAME...]
+Usage: python tools/query_profile.py --sf DIR [--out FILE] [--plans DIR] [NAME...]
 With no names it profiles ``bench.BENCH_QUERIES``. One JSON record per
 query goes to FILE (default: stdout); a summary line goes to stderr.
 """
@@ -36,11 +39,7 @@ import traceback
 from contextlib import nullcontext
 from pathlib import Path
 
-TOOLS = os.path.dirname(os.path.abspath(__file__))
-ROOT = os.path.dirname(TOOLS)
-# Run as a script, this file's directory heads sys.path, where this file
-# would shadow the standard library's ``profile``, which pyspark imports.
-sys.path[:] = [ROOT] + [p for p in sys.path if os.path.abspath(p) != TOOLS]
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import BENCH_QUERIES  # noqa: E402
 from dlp_rdb_bq_import_spark import harness  # noqa: E402
@@ -82,7 +81,18 @@ def python_ms(plan) -> dict[str, int]:
     return out
 
 
-def stage_rows(events: list[dict], window: tuple[float, float]) -> list[dict]:
+def stage_jobs(sc) -> dict[int, int]:
+    """Stage ID -> ID of the first job that lists it."""
+    tracker = sc.statusTracker()
+    out: dict[int, int] = {}
+    for job in sorted(tracker.getJobIdsForGroup()):
+        info = tracker.getJobInfo(job)
+        for stage in info.stageIds if info else ():
+            out.setdefault(stage, job)
+    return out
+
+
+def stage_rows(events: list[dict], window: tuple[float, float], jobs: dict[int, int]) -> list[dict]:
     """One row per stage submitted inside ``window`` (epoch seconds)."""
     lo, hi = window[0] * 1e3, window[1] * 1e3
     infos, tasks = [], {}
@@ -98,6 +108,7 @@ def stage_rows(events: list[dict], window: tuple[float, float]) -> list[dict]:
         ts = tasks.get(info["Stage ID"], [])
         launches = [t["Task Info"]["Launch Time"] for t in ts] or [0]
         row = {
+            "job": jobs.get(info["Stage ID"]),
             "stage": info["Stage ID"],
             "name": info["Stage Name"].split(" at ")[0],
             "tasks": len(ts),
@@ -165,13 +176,14 @@ def profile(name: str, sf_dir: str, plans: str | None) -> dict:
             if plans:
                 text = spark._jvm.PythonSQLUtils.explainString(qe, "formatted")
                 Path(plans, f"{name}.txt").write_text(text + "\n")
+            jobs = stage_jobs(spark.sparkContext)
         finally:
             spark.stop()
         events = read_event_log(Path(log_dir))
     for run in [cold, *warm]:
         window = run.pop("window")
         run["spark"] = _rounded(spark_metrics(events, window))
-        run["stages"] = stage_rows(events, window)
+        run["stages"] = stage_rows(events, window, jobs)
     best = min(warm, key=lambda r: r["total_s"])
     return {
         "query": name,
